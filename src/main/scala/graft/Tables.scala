@@ -62,48 +62,15 @@ final case class Tables(spark: SparkSession, dir: String) {
 
 object Tables {
 
-  /** Driver-side parquet schema cache, keyed by table path with a
-    * file-signature staleness check (sorted name:length:mtime — the
-    * IvfIndex artifact-cache pattern). Every `Tables(...)` accessor
-    * used to run a footer-inference DRIVER JOB per call — one job-gap
-    * per table reference per query construction, which across a
-    * 131-query bench sweep (warmup + 2 timed drives each) is hundreds
-    * of pure-scheduling round-trips against immutable inputs. The
-    * signature re-lists the directory per call (driver-side metadata,
-    * no job), so an in-place regeneration of a table is picked up on
-    * the next read; a corpus FLIP between directories is a different
-    * key entirely (the SoakCheck axis). Bounded: test suites churn
-    * fixture dirs, so the map clears past 64 entries.
-    */
-  private val schemaCache = new java.util.concurrent.ConcurrentHashMap[
-    String, (String, org.apache.spark.sql.types.StructType)]()
-
-  private def sig(spark: SparkSession, path: String): String =
-    try {
-      val p = new org.apache.hadoop.fs.Path(path)
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      fs.listStatus(p).map(st =>
-          s"${st.getPath.getName}:${st.getLen}:${st.getModificationTime}")
-        .sorted.mkString(";")
-    } catch { case _: java.io.IOException => "" }
-
-  /** Shared by the session-cache read-backs (CellAssignCache dirs are
-    * generation-unique, so the signature always matches after first
-    * read) — same footer-job trim as the table loaders.
+  /** A parquet read whose footer schema comes from [[ArtifactMeta]]:
+    * every `Tables(...)` accessor used to run a footer-inference DRIVER
+    * JOB per call — one job-gap per table reference per query
+    * construction, which across a 131-query bench sweep (warmup + 2
+    * timed drives each) is hundreds of pure-scheduling round-trips
+    * against immutable inputs. Shared by the DirCache read-backs.
     */
   private[graft] def parquetWithCachedSchema(spark: SparkSession,
-      path: String): DataFrame = {
-    val sg = sig(spark, path)
-    val hit = schemaCache.get(path)
-    if (sg.nonEmpty && hit != null && hit._1 == sg)
-      spark.read.schema(hit._2).parquet(path)
-    else {
-      val df = spark.read.parquet(path)
-      if (sg.nonEmpty) {
-        if (schemaCache.size > 64) schemaCache.clear()
-        schemaCache.put(path, (sg, df.schema))
-      }
-      df
-    }
-  }
+      path: String): DataFrame =
+    spark.read.schema(ArtifactMeta.cached(spark, "schema", path)(
+      spark.read.parquet(path).schema)).parquet(path)
 }

@@ -34,16 +34,13 @@ import org.apache.spark.sql.functions._
   * cross-engine and the DuckDB oracle can replay training exactly.
   */
 object Bpe {
+  import DedupPipeline.barrier
 
   /** Default merge count for the registered queries. Small because
     * the oracle unrolls one CTE block per merge; the Spark loop takes
     * any count.
     */
   val Merges = 8
-
-  private def barrier(df: DataFrame): DataFrame =
-    if (df.sparkSession.sparkContext.getCheckpointDir.isDefined) df.checkpoint()
-    else df.localCheckpoint()
 
   /** (word, freq) over the whitespace-split lowercased corpus — the
     * single corpus-scale aggregation.
@@ -120,52 +117,24 @@ object Bpe {
     (chosen.result(), syms)
   }
 
-  /** Session-scoped learned-tokenizer cache, shared by the four BPE
+  /** Session-scoped learned tokenizer, shared by the four BPE
     * registry entries (train/vocab/encode/fertility re-ran the same
-    * 8-merge training per call — the RarityCache rationale, §15.7).
-    * Keyed by corpus dir, most-recently-used bound of
-    * [[AnnIndexCache.MaxLive]]-style breadth 4: a multi-corpus driver
-    * alternating between snapshots (the SoakCheck A→B→A pattern)
-    * otherwise retrains on every flip. The cached frames are barrier
-    * outputs (checkpoint/localCheckpoint), already materialized —
-    * nothing to unpersist on eviction, the blocks free when the
-    * frames are collected.
+    * 8-merge training per call — the rarity-stats rationale, §15.7).
+    * Keyed by corpus dir, [[LearnMaxLive]] corpora live: a multi-corpus
+    * driver alternating between snapshots (the SoakCheck A→B→A
+    * pattern) must not retrain on every flip. The cached frames are
+    * barrier outputs (checkpoint/localCheckpoint), already
+    * materialized.
     */
-  object LearnCache {
-    private[graft] val MaxLive = 4
-    // access-ordered: iteration starts at the least-recently-used key
-    private val built = new java.util.LinkedHashMap[
-      String, (Seq[DataFrame], DataFrame)](16, 0.75f, true)
-
-    def learnFor(docs: => DataFrame, key: String,
-        merges: Int = Merges): (Seq[DataFrame], DataFrame) = {
-      val (r, builtNow) = built.synchronized {
-        val have = built.get(key)
-        if (have != null) (have, false)
-        else {
-          val r = learn(docs, merges)
-          built.put(key, r)
-          while (built.size > MaxLive) {
-            val it = built.entrySet().iterator()
-            val e = it.next(); it.remove()
-            graft.SessionCaches.drop("bpe", e.getKey)
-          }
-          (r, true)
-        }
-      }
-      // cross-family ledger (outside the family lock — the ABBA rule)
-      if (builtNow)
-        graft.SessionCaches.register("bpe", key, r._1 :+ r._2)(() =>
-          built.synchronized { built.remove(key): Unit })
-      else graft.SessionCaches.touch("bpe", key)
-      r
+  def cachedLearn(docs: => DataFrame, key: String): (Seq[DataFrame], DataFrame) = {
+    val fs = graft.SessionCaches.cached("bpe", key, LearnMaxLive) {
+      val (picked, words) = learn(docs)
+      picked :+ words
     }
-
-    private[graft] def reset(): Unit = built.synchronized {
-      built.keySet().forEach(k => graft.SessionCaches.drop("bpe", k))
-      built.clear()
-    }
+    (fs.init, fs.last)
   }
+
+  private[graft] val LearnMaxLive = 4
 
   /** The learned merge list: (rank, left_sym, right_sym, pair_freq)
     * in application order — the artifact a tokenizer ships.

@@ -45,7 +45,7 @@ object Dedup {
     executorMemBytes(df.sparkSession.sparkContext) / 128
 
   /** Defensive sys-prop boolean for the A/B hooks: a typo'd value
-    * (`-Dgraft.minhash.persistSlim=off`) must not abort a whole dedup
+    * (`-Dgraft.minhash.fatCache=off`) must not abort a whole dedup
     * pass with a raw IllegalArgumentException — non-boolean values are
     * ignored loudly and the default path runs (ADVICE r10).
     */
@@ -374,22 +374,14 @@ object Dedup {
     val sigCols =
       if (fatCache) Seq("doc_id", "shingles", "buckets")
       else Seq("doc_id", "buckets")
-    // A/B hook (§12e churn question): -Dgraft.minhash.persistSlim=false
-    // skips the slim persist entirely — the count() and the candgen
-    // pass then each run their own signature scan (two linear passes,
-    // no cache write/read, no ledger registration/eviction churn).
-    // Pair-set parity with the persisted path is spec-pinned.
-    // A/B at 4096lin (SURVEY §17.9): skipping LOST, 486.0 s vs
-    // 330.9 s — the banding exchange recomputes the 64-perm
-    // signature inside its shuffle write, dwarfing the saved cache
-    // churn. Default stays persist-on even past the eviction knee.
-    val persistSlim = propBool("graft.minhash.persistSlim").getOrElse(true)
-    val signed0 = minhashSignature(docs, textCol, idCol)
+    // the slim frame persists even past the eviction knee: skipping
+    // that persist was A/B'd at 4096lin (SURVEY §17.9) and LOST,
+    // 486.0 s vs 330.9 s — the banding exchange recomputes the
+    // 64-perm signature inside its shuffle write, dwarfing the saved
+    // cache churn
+    val signed = minhashSignature(docs, textCol, idCol)
       .select(sigCols.head, sigCols.tail: _*)
-    val signed =
-      if (fatCache || persistSlim)
-        signed0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      else signed0
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val corpusRows = signed.count()
     // band on ids only — the shingle arrays must NOT ride the band
     // shuffle (16× duplication of the heaviest column); they are
@@ -442,14 +434,8 @@ object Dedup {
       corpusRows * Bands)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     cands.count()
-    // cache lifecycle: the LAZY result keeps reading both caches, so
-    // they can't be released here without materializing (which would
-    // hide the audited plan). Each call retires the PREVIOUS call's
-    // caches instead — a long-lived driver holds at most one corpus's
-    // worth of minhash cache, and an earlier result held across calls
-    // stays correct (it just recomputes).
-    // (cache retirement happens once below, after the candidate-doc
-    // set joins the live set)
+    // (the caches are pinned once below, after the candidate-doc set
+    // joins them — see [[pin]])
     // (measured, not guessed: verifying over xxhash64'd shingle arrays
     // — 8-byte longs instead of strings in the join shuffle — timed
     // NEUTRAL at the 128× blow-up (3.73 s vs 3.70 s, MinhashProfile):
@@ -484,9 +470,7 @@ object Dedup {
       .distinct()
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val nCandDocs = candDocs.count()
-    retireMinhashCaches(
-      (if (fatCache || persistSlim) Seq(signed) else Nil) ++
-        Seq(cands, candDocs))
+    pin("minhash", signed, cands, candDocs)
     val shp = sh.join(candDocs, Seq("doc_id"), "left_semi")
     cands.hint("shuffle_hash")
       .join(shp.select(col("doc_id").as("doc_a"), col("shingles").as("sh_a")),
@@ -498,28 +482,18 @@ object Dedup {
       .select("doc_a", "doc_b", "jaccard")
   }
 
-  private val liveMinhashCaches =
-    new java.util.concurrent.atomic.AtomicReference[Seq[DataFrame]](Nil)
-  // serializes retire+register as one swap: two interleaved calls
-  // could otherwise leave the ledger tracking one call's (already
-  // unpersisted) frames while the other call's live pins went
-  // unbudgeted. Holding this lock across register() is safe — the
-  // ledger runs victim releases AFTER dropping its own lock, and the
-  // minhash release callback below takes no lock (CAS + unpersist),
-  // so no release path re-enters this slot lock (the ABBA rule).
-  private val minhashSlot = new Object
-  private def retireMinhashCaches(next: Seq[DataFrame]): Unit =
-    minhashSlot.synchronized {
-      liveMinhashCaches.getAndSet(next).foreach(_.unpersist(false))
-      // cross-family ledger: single-slot family (each call replaces
-      // the previous entry); a ledger eviction unpersists the pinned
-      // frames and clears the slot IF still current — any lazy result
-      // that still reads them just recomputes (the retirement contract)
-      graft.SessionCaches.register("minhash", "live", next) { () =>
-        liveMinhashCaches.compareAndSet(next, Nil)
-        next.foreach(_.unpersist(false))
-      }
-    }
+  /** Pin one call's materialized frames as its family's single live
+    * [[graft.SessionCaches]] entry: the next call's pin releases them,
+    * so a long-lived driver holds at most one corpus's worth per
+    * family, and the pins count against the shared budget. The lazy
+    * result keeps reading the frames, so they cannot be released at
+    * the end of the call without materializing (which would hide the
+    * audited plan); a result held across calls stays correct — it
+    * just recomputes.
+    */
+  private def pin(family: String, frames: DataFrame*): Unit =
+    graft.SessionCaches.cached(family, java.util.UUID.randomUUID.toString,
+      maxLive = 1)(frames): Unit
 
   /** Within-bucket candidate pairs from (key..., id) rows, with the
     * singleton buckets cut out BEFORE any per-bucket id collection.
@@ -715,15 +689,15 @@ object Dedup {
     // projections and recomputes the 64-bit aggregate tree 16×.
     // Eager count (the r6 AQE-race rule): a lazily-persisted frame
     // whose consumer branches start concurrently is rebuilt per
-    // branch; and the pin rides the retire-slot + SessionCaches
+    // branch; and the cache is pinned through the SessionCaches
     // ledger like every other long-lived corpus cache (r13 review —
     // an unregistered persist is invisible to the shared budget and
     // never released across corpora).
     val sh = docs.select(col(idCol).as("doc_id"),
       simhash(col(textCol)).as("simhash"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    retireSimhashCaches(Seq(sh))
     sh.count()
+    pin("simhash", sh)
     // rotl(sim, 8): the second, offset-by-8 windowing
     val rot = shiftleft(col("simhash"), 8)
       .bitwiseOR(shiftrightunsigned(col("simhash"), 56))
@@ -877,7 +851,7 @@ object Dedup {
     val pruned = base.join(candDocs, Seq("doc_id"), "left_semi")
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val nCandDocs = pruned.count()
-    retireSubstrCaches(Seq(cands, pruned))
+    pin("substr", cands, pruned)
     // verify joins mirror minhashLsh's build-side rule exactly:
     // join 1 builds the CANDIDATE pair ids (bounded, a few bytes
     // each) and streams the pruned text; join 2 goes through the
@@ -896,59 +870,6 @@ object Dedup {
           minLen).as("n_shared"))
       .filter(col("n_shared") >= 1)
   }
-
-  private val liveSubstrCaches =
-    new java.util.concurrent.atomic.AtomicReference[Seq[DataFrame]](Nil)
-  /** Same lifecycle as [[retireMinhashCaches]]: each call pins its own
-    * candidate + pruned-text caches and retires the previous call's —
-    * a long-lived driver holds at most one corpus's worth. The slot
-    * lock serializes retire+register as ONE swap exactly as
-    * minhashSlot does (two interleaved calls could otherwise leave
-    * the ledger tracking an already-unpersisted set while the live
-    * pins went unbudgeted); safe to hold across register() because
-    * the release callback below is CAS + unpersist, lock-free.
-    */
-  private val substrSlot = new Object
-
-  /** Single-slot retire+register families for the simhash signature
-    * and the embedding-LSH base caches — the same lifecycle and
-    * locking shape as the minhash/substr slots (r13 review: both
-    * were persisted unregistered, so a long-lived multi-corpus
-    * driver pinned one cache per corpus forever, invisible to the
-    * shared SessionCaches budget).
-    */
-  private val liveSimhashCaches =
-    new java.util.concurrent.atomic.AtomicReference[Seq[DataFrame]](Nil)
-  private val simhashSlot = new Object
-  private def retireSimhashCaches(next: Seq[DataFrame]): Unit =
-    simhashSlot.synchronized {
-      liveSimhashCaches.getAndSet(next).foreach(_.unpersist(false))
-      graft.SessionCaches.register("simhash", "live", next) { () =>
-        liveSimhashCaches.compareAndSet(next, Nil)
-        next.foreach(_.unpersist(false))
-      }
-    }
-
-  private val liveEmbedLshCaches =
-    new java.util.concurrent.atomic.AtomicReference[Seq[DataFrame]](Nil)
-  private val embedLshSlot = new Object
-  private def retireEmbedLshCaches(next: Seq[DataFrame]): Unit =
-    embedLshSlot.synchronized {
-      liveEmbedLshCaches.getAndSet(next).foreach(_.unpersist(false))
-      graft.SessionCaches.register("embedlsh", "live", next) { () =>
-        liveEmbedLshCaches.compareAndSet(next, Nil)
-        next.foreach(_.unpersist(false))
-      }
-    }
-  private def retireSubstrCaches(next: Seq[DataFrame]): Unit =
-    substrSlot.synchronized {
-      liveSubstrCaches.getAndSet(next).foreach(_.unpersist(false))
-      // cross-family ledger: same single-slot shape as the minhash pins
-      graft.SessionCaches.register("substr", "live", next) { () =>
-        liveSubstrCaches.compareAndSet(next, Nil)
-        next.foreach(_.unpersist(false))
-      }
-    }
 
   // ----------------------------------------- exact n-gram Jaccard pairs
 
@@ -1055,11 +976,11 @@ object Dedup {
     val base = emb.select(col("vec_id"), col("embedding"),
       VectorFns.norm(col("embedding")).as("nrm"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    retireEmbedLshCaches(Seq(base))
     // count AFTER persist, on EVERY path (r13 review: the explicit-
     // bits path used to skip it — the r6 AQE race): the sizing pass
     // doubles as the cache materialization
     val n = math.max(1L, base.count())
+    pin("embedlsh", base)
     val useBits =
       if (bits > 0) bits
       else math.min(20, math.max(4,

@@ -26,7 +26,7 @@ object DedupPipeline {
     * the right mode for long iterative jobs at 100 TB. Mode is chosen
     * per call from the live session, so one binary serves both.
     */
-  private def barrier(df: DataFrame): DataFrame =
+  private[graft] def barrier(df: DataFrame): DataFrame =
     if (df.sparkSession.sparkContext.getCheckpointDir.isDefined) df.checkpoint()
     else df.localCheckpoint()
 
@@ -140,6 +140,11 @@ object DedupPipeline {
     exact.union(near)
   }
 
+  /** Cached bytes of one md5 hex-string row (32 chars + UTF8String
+    * and column overhead).
+    */
+  private val Md5RowBytes = 48L
+
   /** Incremental dedup — the daily-ingest path: admit only the batch
     * docs that are not exact or near duplicates of the existing
     * corpus, then dedup within the batch. The corpus side costs ONE
@@ -163,9 +168,13 @@ object DedupPipeline {
     // would re-run the md5 anti join per consumer.
     // propBool, not a raw toBoolean: a typo'd A/B value must not
     // abort the whole op (the ADVICE-r10 rule minhashLsh follows)
+    // the estimate covers the rows actually cached: the shingle rows
+    // plus the ~48 B/row __h md5 carry (one per ShingleRowBytes of
+    // estimated shingle cache)
     val corpusFat = Dedup.propBool("graft.minhash.fatCache")
-      .getOrElse(
-        Dedup.estShingleCacheBytes(corpus) < Dedup.cacheBudgetBytes(corpus))
+      .getOrElse(Dedup.estShingleCacheBytes(corpus) *
+          (1.0 + Md5RowBytes.toDouble / Dedup.ShingleRowBytes) <
+        Dedup.cacheBudgetBytes(corpus))
     val corpusCols =
       if (corpusFat) Seq("doc_id", "shingles", "buckets", "__h")
       else Seq("doc_id", "buckets", "__h")
@@ -295,97 +304,27 @@ object DedupPipeline {
         coalesce(col("label"), col(idCol)).as("component"))
   }
 
-  /** Session-scoped duplicate-component cache — the LearnCache shape
-    * applied to the corpus CC: FIVE registry queries (d_dedup_corpus,
-    * d_dup_families, d_family_keep, d_leakage_split,
+  /** Session-scoped duplicate-component labels: FIVE registry queries
+    * (d_dedup_corpus, d_dup_families, d_family_keep, d_leakage_split,
     * d_curation_ledger) consume the SAME default-parameter component
     * labeling of a corpus, and each paid the full minhash + CC loop
     * per call (~17 s of the 92 s sf0.1 sweep — the "compute the dup
     * graph once, reuse across reports" shape a production pipeline
-    * runs). Keyed by corpus dir, LRU-of-4; the cached frame is an
-    * eager localCheckpoint of the one-row-per-doc (doc_id, component)
-    * labels — the bounded cache class. Correctness across corpus
-    * flips is exercised by SoakCheck (A→B→A checksums); cached ==
-    * direct is spec-pinned.
+    * runs). Keyed by corpus dir, [[ComponentsMaxLive]] corpora live;
+    * the cached frame is a barrier of the one-row-per-doc
+    * (doc_id, component) labels — the bounded cache class. A barrier,
+    * not a bare localCheckpoint: executor-local blocks die with their
+    * executor, and a long-lived driver on a real cluster reads this
+    * frame across many later queries — the reliable-checkpoint route
+    * (when a dir is configured) survives executor loss. Correctness
+    * across corpus flips is exercised by SoakCheck (A→B→A checksums);
+    * cached == direct is spec-pinned.
     */
-  object ComponentsCache {
-    private[graft] val MaxLive = 4
-    // access-ordered: iteration starts at the least-recently-used key
-    private val built = new java.util.LinkedHashMap[String, DataFrame](
-      16, 0.75f, true)
+  def cachedComponents(docs: => DataFrame, key: String): DataFrame =
+    graft.SessionCaches.cached("components", key, ComponentsMaxLive)(
+      Seq(barrier(componentsOf(docs)))).head
 
-    def componentsFor(docs: => DataFrame, key: String): DataFrame = {
-      built.synchronized(Option(built.get(key))) match {
-        case Some(have) =>
-          graft.SessionCaches.touch("components", key)
-          have
-        case None =>
-          // the BUILD runs OUTSIDE the `built` lock (r13 review find):
-          // componentsOf transitively takes the minhash slot, whose
-          // register() can evict ANOTHER family's — including a
-          // components — entry, and that victim's release callback
-          // takes `built`: holding `built` across the build is the
-          // exact ABBA order the SessionCaches rule forbids (measured
-          // order: built→minhashSlot here, minhashSlot→built in the
-          // eviction path). Two concurrent first calls may now both
-          // build; the first insert wins, the loser's barrier frame is
-          // simply dropped (barrier frames have no unpersist — blocks
-          // free with the reference) and the result is deterministic
-          // either way.
-          // barrier, not bare localCheckpoint: executor-local blocks
-          // die with their executor, and a long-lived driver on a real
-          // cluster reads this frame across many later queries — the
-          // reliable-checkpoint route (when a dir is configured)
-          // survives executor loss, same as the CC loop's own barriers
-          val r = barrier(componentsOf(docs))
-          val (winner, inserted) = built.synchronized {
-            val race = built.get(key)
-            if (race != null) { releaseLoserBarrier(r); (race, false) }
-            else {
-              built.put(key, r)
-              while (built.size > MaxLive) {
-                val it = built.entrySet().iterator()
-                val e = it.next(); it.remove()
-                graft.SessionCaches.drop("components", e.getKey)
-              }
-              (r, true)
-            }
-          }
-          // cross-family ledger (outside the family lock — the ABBA
-          // rule): a barrier frame has no unpersist — release just
-          // drops the reference and the blocks free with it
-          if (inserted)
-            graft.SessionCaches.register("components", key, Seq(winner))(() =>
-              built.synchronized { built.remove(key): Unit })
-          else graft.SessionCaches.touch("components", key)
-          winner
-      }
-    }
-
-    private[graft] def reset(): Unit = built.synchronized {
-      built.keySet().forEach(k => graft.SessionCaches.drop("components", k))
-      built.clear()
-    }
-
-    /** Reclaim a build-race loser's barrier frame (ADVICE r13):
-      * "blocks free with the dropped reference" only holds for
-      * localCheckpoint — with a reliable checkpoint dir configured,
-      * barrier() wrote durable checkpoint FILES that nothing will ever
-      * reference again. Best-effort delete of the loser's checkpoint
-      * directory; localCheckpoint frames report no checkpoint file and
-      * fall through untouched.
-      */
-    private def releaseLoserBarrier(df: DataFrame): Unit =
-      try df.queryExecution.logical.collectFirst {
-          case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd
-        }.flatMap(_.getCheckpointFile).foreach { p =>
-          val path = new org.apache.hadoop.fs.Path(p)
-          path.getFileSystem(
-              df.sparkSession.sparkContext.hadoopConfiguration)
-            .delete(path, true): Unit
-        }
-      catch { case _: Throwable => () }
-  }
+  private[graft] val ComponentsMaxLive = 4
 
   /** The kept corpus (one representative per duplicate component) plus
     * a `component` column for lineage.

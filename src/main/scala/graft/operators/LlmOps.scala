@@ -422,10 +422,9 @@ object LlmOps {
       ORDER BY d.doc_id"""),
     (s, dir) => {
       val docs = Tables(s, dir).documents
-      // the kept view over the session-cached labels (ComponentsCache
+      // the kept view over the session-cached labels (cachedComponents
       // — five registry queries share one CC per corpus per process)
-      docs.join(DedupPipeline.ComponentsCache.componentsFor(docs, dir),
-          "doc_id")
+      docs.join(DedupPipeline.cachedComponents(docs, dir), "doc_id")
         .filter(col("doc_id") === col("component"))
         .select("doc_id", "component", "lang", "source")
         .orderBy("doc_id")
@@ -476,8 +475,7 @@ object LlmOps {
       FROM documents d JOIN reach rc ON d.doc_id = rc.src
       ORDER BY d.doc_id"""),
     (s, dir) => Sampling.holdoutSplit(
-        DedupPipeline.ComponentsCache
-          .componentsFor(Tables(s, dir).documents, dir),
+        DedupPipeline.cachedComponents(Tables(s, dir).documents, dir),
         "component", valFraction = 0.10, testFraction = 0.10)
       .select("doc_id", "component", "split")
       .orderBy("doc_id"))
@@ -546,7 +544,7 @@ object LlmOps {
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy("component")
         .orderBy(col("quality_score").desc, col("doc_id"))
-      DedupPipeline.ComponentsCache.componentsFor(docs, dir)
+      DedupPipeline.cachedComponents(docs, dir)
         .join(scored, Seq("doc_id"))
         .withColumn("kept", row_number().over(w) === 1)
         .select("doc_id", "component", "quality_score", "kept")
@@ -641,8 +639,7 @@ object LlmOps {
         CAST(COUNT(*) AS BIGINT) AS n_families,
         CAST(SUM(family_size) AS BIGINT) AS n_docs
       FROM fam GROUP BY family_size ORDER BY family_size"""),
-    (s, dir) => DedupPipeline.ComponentsCache
-      .componentsFor(Tables(s, dir).documents, dir)
+    (s, dir) => DedupPipeline.cachedComponents(Tables(s, dir).documents, dir)
       .groupBy("component").agg(count(lit(1)).as("family_size"))
       .groupBy("family_size")
       .agg(count(lit(1)).as("n_families"),
@@ -1462,7 +1459,7 @@ object LlmOps {
       SELECT doc_id, COUNT(*) AS n_tokens, CAST(SUM(w) AS BIGINT) AS rarity_sum,
         round(CAST(SUM(w) AS DOUBLE) / CAST(COUNT(*) AS DOUBLE), 4) AS mean_rarity
       FROM j GROUP BY doc_id ORDER BY doc_id"""),
-    (s, dir) => Retrieval.RarityCache.statsFor(Tables(s, dir).documents, dir)
+    (s, dir) => Retrieval.cachedRarityStats(Tables(s, dir).documents, dir)
       .select(col("doc_id"), col("n_tokens"), col("rarity_sum"),
         round(col("rarity_sum").cast("double") / col("n_tokens").cast("double"),
           4).as("mean_rarity"))
@@ -1519,7 +1516,7 @@ object LlmOps {
       // join per registry entry; one narrow row per doc, the
       // cache-one-row-per-doc rule; r6 measured the uncached form at
       // 52.3 s vs 39.8 s cached at the 256× blow-up)
-      val g = Retrieval.RarityCache.statsFor(Tables(s, dir).documents, dir)
+      val g = Retrieval.cachedRarityStats(Tables(s, dir).documents, dir)
         .select(col("doc_id"), expr("rarity_sum div n_tokens").as("difficulty"))
         .withColumn("gd", expr("difficulty div 1000"))
       val b = Quantiles.typeOneBoundaries(g, "gd",
@@ -1834,7 +1831,7 @@ object LlmOps {
         s"SELECT $k AS rank, l AS left_sym, r AS right_sym, c AS pair_freq FROM m$k")
         .mkString(" UNION ALL ") + " ORDER BY rank"),
     (s, dir) => Bpe.trainReportFrom(Tables(s, dir).documents,
-      Bpe.LearnCache.learnFor(Tables(s, dir).documents, dir)._1)
+      Bpe.cachedLearn(Tables(s, dir).documents, dir)._1)
       .orderBy("rank"))
 
   /** BPE vocabulary artifact (Bpe.vocabReport): distinct final
@@ -1850,7 +1847,7 @@ object LlmOps {
       AS token_id, sym, sym_freq
   FROM v ORDER BY token_id"""),
     (s, dir) => Bpe.vocabReportFrom(
-      Bpe.LearnCache.learnFor(Tables(s, dir).documents, dir)._2)
+      Bpe.cachedLearn(Tables(s, dir).documents, dir)._2)
       .orderBy("token_id"))
 
   /** BPE ENCODING under the learned merges (Bpe.encodeStats):
@@ -1871,7 +1868,7 @@ object LlmOps {
     CAST(SUM(n * n_sym) AS BIGINT) AS n_tokens
   FROM dw JOIN wt USING (word) GROUP BY doc_id ORDER BY doc_id"""),
     (s, dir) => Bpe.encodeStatsFrom(Tables(s, dir).documents,
-      Bpe.LearnCache.learnFor(Tables(s, dir).documents, dir)._2)
+      Bpe.cachedLearn(Tables(s, dir).documents, dir)._2)
       .orderBy("doc_id"))
 
   /** Per-language tokenizer fertility (Bpe.fertility): tokens/word
@@ -1897,7 +1894,7 @@ object LlmOps {
       // (CAST(SUM(n * n_sym) AS BIGINT)) AS chars_per_token_ppm
   FROM lw JOIN wt USING (word) GROUP BY lang ORDER BY lang"""),
     (s, dir) => Bpe.fertilityFrom(Tables(s, dir).documents,
-      Bpe.LearnCache.learnFor(Tables(s, dir).documents, dir)._2)
+      Bpe.cachedLearn(Tables(s, dir).documents, dir)._2)
       .orderBy("lang"))
 
   /** Scalar quantization of the embedding column
@@ -2294,7 +2291,7 @@ object LlmOps {
     * policy of the dedup family (drop-to-min-id d_dedup_corpus,
     * best-member d_family_keep, weighted keep-all here); composition
     * of the CC fixpoint ∘ one component-count aggregate, so it is
-    * ORACLE-BACKED and nearly free under the shared ComponentsCache.
+    * ORACLE-BACKED and nearly free under the shared cachedComponents.
     */
   private val softDedupQ = GraftQuery(
     "d_soft_dedup",
@@ -2326,8 +2323,7 @@ object LlmOps {
       FROM reach rc JOIN fam f ON rc.component = f.component
       ORDER BY doc_id"""),
     (s, dir) => {
-      val comp = DedupPipeline.ComponentsCache
-        .componentsFor(Tables(s, dir).documents, dir)
+      val comp = DedupPipeline.cachedComponents(Tables(s, dir).documents, dir)
       // family_size as a window count, NOT a groupBy + self-join: on a
       // mostly-unique corpus the per-component stats frame is
       // corpus-sized, i.e. the non-spillable hash-BUILD class the
@@ -2441,7 +2437,7 @@ object LlmOps {
         TextAnalysis.gopherRules(col("text")).last.as("gopher_keep"),
         (TextAnalysis.piiCounts(col("text")).last > 0).as("pii_found"),
         (col("doc_id") =!= min(col("doc_id")).over(exactW)).as("exact_dup"))
-      val comp = DedupPipeline.ComponentsCache.componentsFor(docs, dir)
+      val comp = DedupPipeline.cachedComponents(docs, dir)
       // Contamination leg is VOLUME-GATED (the Retrieval perplexity
       // pattern): the exact 8-gram equi-join ships ~8× the corpus
       // text bytes through a shuffle (every word starts an 8-word

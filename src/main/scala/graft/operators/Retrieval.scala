@@ -214,61 +214,23 @@ object Retrieval {
     * once" shape a real pipeline runs: d_unigram_rarity and
     * d_curriculum both need the same one-row-per-doc
     * (doc_id, n_tokens, rarity_sum) frame, and each previously re-ran
-    * the token explode + vocab join per registry entry. Lifecycle:
-    * keyed by corpus identity (the table dir); building stats for a
-    * NEW key retires the previous cache (a long-lived driver pins at
-    * most one corpus's stats — the minhash cache-retirement rule);
-    * [[reset]] covers in-process corpus rewrites. The cached frame is
-    * one narrow row per doc (the cache-one-row-per-doc rule); the
-    * eager count prevents the AQE lazy-cache race.
+    * the token explode + vocab join per registry entry. Keyed by
+    * corpus identity (the table dir), [[RarityMaxLive]] corpora live —
+    * a multi-corpus driver alternating snapshots must not rebuild on
+    * every flip. The cached frame is one narrow row per doc (the
+    * cache-one-row-per-doc rule); the eager count prevents the AQE
+    * lazy-cache race.
     */
-  object RarityCache {
-    // most-recently-used breadth 4 (the LearnCache/ComponentsCache
-    // shape): a multi-corpus driver alternating snapshots retrained
-    // the stats every flip under the old one-slot cache. Evicted
-    // entries unpersist their storage; access-ordered map iterates
-    // least-recently-used first.
-    private[graft] val MaxLive = 4
-    private val built = new java.util.LinkedHashMap[String, DataFrame](
-      16, 0.75f, true)
+  def cachedRarityStats(docs: => DataFrame, key: String): DataFrame =
+    graft.SessionCaches.cached("rarity", key, RarityMaxLive) {
+      val df = rarity(docs)
+        .select(col("doc_id"), col("n_tokens"), col("rarity_sum"))
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      df.count()
+      Seq(df)
+    }.head
 
-    def statsFor(docs: => DataFrame, key: String): DataFrame = {
-      val (df, builtNow) = built.synchronized {
-        val have = built.get(key)
-        if (have != null) (have, false)
-        else {
-          val df = rarity(docs)
-            .select(col("doc_id"), col("n_tokens"), col("rarity_sum"))
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          df.count()
-          built.put(key, df)
-          while (built.size > MaxLive) {
-            val it = built.entrySet().iterator()
-            val e = it.next(); it.remove()
-            e.getValue.unpersist(false)
-            graft.SessionCaches.drop("rarity", e.getKey)
-          }
-          (df, true)
-        }
-      }
-      // ledger call OUTSIDE the family lock (the ABBA rule — a
-      // cross-family release callback re-enters its owner's lock)
-      if (builtNow)
-        graft.SessionCaches.register("rarity", key, Seq(df))(() =>
-          built.synchronized {
-            val d = built.remove(key)
-            if (d != null) d.unpersist(false): Unit
-          })
-      else graft.SessionCaches.touch("rarity", key)
-      df
-    }
-
-    private[graft] def reset(): Unit = built.synchronized {
-      built.values().forEach(_.unpersist(false))
-      built.keySet().forEach(k => graft.SessionCaches.drop("rarity", k))
-      built.clear()
-    }
-  }
+  private[graft] val RarityMaxLive = 4
 
   def rarity(docs: DataFrame, textCol: String = "text",
       idCol: String = "doc_id"): DataFrame = {
@@ -699,9 +661,6 @@ object Retrieval {
     */
   def textRank(docs: DataFrame, window: Int = 3, minCount: Long = 5,
       iters: Int = 8, topK: Int = 50, textCol: String = "text"): DataFrame = {
-    def barrier(df: DataFrame): DataFrame =
-      if (df.sparkSession.sparkContext.getCheckpointDir.isDefined) df.checkpoint()
-      else df.localCheckpoint()
     // persist the FILTERED pair counts: pc fans out into both union
     // branches of the edge set AND the degree aggregate (4 consumers
     // of the corpus gram-explode otherwise — ReuseExchange does not
@@ -724,7 +683,7 @@ object Retrieval {
     ew.count(): Unit
     var s = wt.select(col("src").as("word"), lit(1000000L).as("q"))
     for (_ <- 1 to iters)
-      s = barrier(ew.join(s, ew("src") === s("word"))
+      s = DedupPipeline.barrier(ew.join(s, ew("src") === s("word"))
         .select(col("dst"), expr("85 * w * q DIV (100 * wsum)").as("contrib"))
         .groupBy("dst").agg((lit(150000L) + sum(col("contrib"))).as("q"))
         .select(col("dst").as("word"), col("q")))

@@ -24,7 +24,7 @@ package graft.sources
   *    directory at collect time, so an eager delete under a live
   *    reader fails with FAILED_READ_FILE. Evicted dirs park on a
   *    retire list and are deleted at the START of the next build —
-  *    the liveMinhashCaches retirement pattern, giving outstanding
+  *    the single-slot pin pattern of SessionCaches, giving outstanding
   *    frames a full build-to-build grace window (callers that hold
   *    results across many further builds must materialize them, which
   *    every in-repo consumer does). A FAILED build retires its

@@ -149,65 +149,24 @@ object IvfIndex {
     }
   }
 
-  /** File signature of an index artifact directory (sorted
-    * name:length:mtime of every file) — the staleness key of the two
-    * driver-side caches below. Centroids change only on [[build]], so
-    * the signature of `centroids.parquet` is a rebuild marker: it
-    * catches in-place rebuilds from THIS or any other JVM (the
-    * cross-process case Spark's own refreshByPath cannot signal here)
-    * with one driver-side listStatus, no Spark job. Empty string when
-    * the listing fails — the caller then falls through to a fresh
-    * uncached read whose error is the pre-existing one.
-    */
-  private def artifactSig(spark: SparkSession, path: String): String =
-    try {
-      val p = new org.apache.hadoop.fs.Path(path)
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      fs.listStatus(p).map(st =>
-          s"${st.getPath.getName}:${st.getLen}:${st.getModificationTime}")
-        .sorted.mkString(";")
-    } catch { case _: java.io.IOException => "" }
-
-  /** Driver-side caches over the per-probe constant index artifacts.
-    * Before these, EVERY topK/append call paid two driver jobs for the
-    * centroid table (parquet footer inference + collect) and one more
-    * footer-inference job per codes read — at sf scale the margin
-    * family's wall is per-JOB fixed cost, not task time (the r11
-    * profile), so the escalation query was spending ~6 scheduling
-    * round-trips per run re-deriving artifacts that are constant until
-    * a rebuild. Keyed by directory with the [[artifactSig]] staleness
-    * check, so a rebuild (same JVM or cross-process) re-reads on the
-    * next call; bounded (clear past 32 dirs — test suites churn index
-    * dirs, queries touch a handful). Centroid arrays are ≤ maxCells ×
-    * dim floats (~1 MB), schemas are bytes — driver heap, not Spark
-    * storage, so SessionCaches does not govern them.
-    */
-  private val centroidCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, Array[Array[Float]])]()
-  private val codesSchemaCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, org.apache.spark.sql.types.StructType)]()
-
-  private def bound[V](m: java.util.concurrent.ConcurrentHashMap[String, V]): Unit =
-    if (m.size > 32) m.clear()
-
   /** The centroid table, collected driver-side in cell order — cells
     * rows (≤ maxCells, thousands), a constant-size fetch at any
-    * corpus scale; feeds the native per-probe cell selection.
-    * Signature-cached per index dir (see [[centroidCache]]).
+    * corpus scale; feeds the native per-probe cell selection. Held by
+    * [[graft.ArtifactMeta]] per index generation: before that, EVERY
+    * topK/append call paid two driver jobs for it (footer inference +
+    * collect) — at sf scale the margin family's wall is per-JOB fixed
+    * cost, not task time (the r11 profile). Centroids change only on
+    * [[build]], so the signature of `centroids.parquet` marks a
+    * rebuild from this or any other JVM.
     */
   private def readCentroids(spark: SparkSession,
       dir: String): Array[Array[Float]] = {
     val path = s"$dir/centroids.parquet"
-    val sig = artifactSig(spark, path)
-    val hit = centroidCache.get(dir)
-    if (sig.nonEmpty && hit != null && hit._1 == sig) hit._2
-    else {
-      val cents = spark.read.parquet(path)
+    graft.ArtifactMeta.cached(spark, "centroids", path) {
+      spark.read.parquet(path)
         .select("cell", "centroid").collect()
         .map(r => (r.getInt(0), r.getSeq[Float](1).toArray))
         .sortBy(_._1).map(_._2)
-      if (sig.nonEmpty) { bound(centroidCache); centroidCache.put(dir, (sig, cents)) }
-      cents
     }
   }
 
@@ -222,15 +181,9 @@ object IvfIndex {
     */
   private def readCodes(spark: SparkSession, dir: String): DataFrame = {
     val path = s"$dir/codes.parquet"
-    val sig = artifactSig(spark, s"$dir/centroids.parquet")
-    val hit = codesSchemaCache.get(dir)
-    if (sig.nonEmpty && hit != null && hit._1 == sig)
-      spark.read.schema(hit._2).parquet(path)
-    else {
-      val df = spark.read.parquet(path)
-      if (sig.nonEmpty) { bound(codesSchemaCache); codesSchemaCache.put(dir, (sig, df.schema)) }
-      df
-    }
+    spark.read.schema(graft.ArtifactMeta.cached(spark, "codes-schema", path,
+      signedBy = s"$dir/centroids.parquet")(spark.read.parquet(path).schema))
+      .parquet(path)
   }
 
   /** Fit + assign + code the corpus and write the index. Determinism:
@@ -277,12 +230,6 @@ object IvfIndex {
     // second build in IvfIndexSpec)
     emb.sparkSession.catalog.refreshByPath(s"$dir/codes.parquet")
     emb.sparkSession.catalog.refreshByPath(s"$dir/centroids.parquet")
-    // same-JVM rebuild determinism: the signature check alone would
-    // miss a rebuild that lands identical file lengths within one
-    // filesystem-timestamp tick — evict explicitly, as refreshByPath
-    // does for Spark's own listing cache
-    centroidCache.remove(dir)
-    codesSchemaCache.remove(dir)
   }
 
   /** Append a batch to an existing index WITHOUT refitting — the

@@ -3,9 +3,10 @@ package graft.tools
 import org.apache.spark.sql.{DataFrame, functions => F}
 
 /** Long-lived-driver soak: every registered query runs on corpus A,
-  * then on corpus B (flipping every session-scoped cache — AnnIndex
-  * dirs, RarityCache, Bpe.LearnCache, the minhash retire-on-next-call
-  * frames — to its retirement path), then on corpus A again, and the
+  * then on corpus B (flipping every session-scoped cache — the
+  * SessionCaches frame families, the DirCache index dirs and the
+  * ArtifactMeta schemas and centroids — to its retirement or
+  * staleness path), then on corpus A again, and the
   * two A-runs must checksum bit-identically. This is the staleness
   * class that produced round 6's CacheManager plan-substitution bug
   * (FAILED_READ_FILE on a rebuilt IvfIndex): a cache keyed or retired

@@ -129,37 +129,39 @@ class BpeSpec extends SparkSpec {
   }
 
   test("LearnCache: cached reports equal direct, key change retires") {
-    Bpe.LearnCache.reset()
+    SessionCaches.reset("bpe")
     val docs = Tables(spark, sf).documents
     val direct = Bpe.trainReport(docs).orderBy("rank").collect().toSeq
     val cached = Bpe.trainReportFrom(docs,
-      Bpe.LearnCache.learnFor(docs, "k1")._1).orderBy("rank").collect().toSeq
+      Bpe.cachedLearn(docs, "k1")._1).orderBy("rank").collect().toSeq
     assert(cached == direct)
     // same key: the SAME learned frames come back (no re-train)
-    val again = Bpe.LearnCache.learnFor(
+    val again = Bpe.cachedLearn(
       sys.error("must not re-learn on a warm key"), "k1")
-    assert(again._2 eq Bpe.LearnCache.learnFor(docs, "k1")._2)
+    assert(again._2 eq Bpe.cachedLearn(docs, "k1")._2)
     // new key: retrain on the new corpus, results still correct
     val texts = Seq("ab ab", "ab cd")
     val viaCache = Bpe.vocabReportFrom(
-      Bpe.LearnCache.learnFor(docsDf(texts), "k2")._2)
+      Bpe.cachedLearn(docsDf(texts), "k2")._2)
       .orderBy("token_id").collect().toSeq
     val directSmall = Bpe.vocabReport(docsDf(texts))
       .orderBy("token_id").collect().toSeq
     assert(viaCache == directSmall)
     // breadth: a second corpus must NOT evict the first (the SoakCheck
     // A→B→A flip retrained every leg under the one-slot cache)
-    assert(again._2 eq Bpe.LearnCache.learnFor(
+    assert(again._2 eq Bpe.cachedLearn(
       sys.error("k1 must survive k2"), "k1")._2)
-    // ...but past MaxLive distinct keys the least-recently-used keys
-    // (k1 then k2 — k1 was touched before this re-touch of k2) are
-    // evicted and retrain on next use
-    val k2Frames = Bpe.LearnCache.learnFor(docsDf(texts), "k2")._2
-    (3 to Bpe.LearnCache.MaxLive + 2).foreach { i =>
-      Bpe.LearnCache.learnFor(docsDf(texts), s"k$i")
+    // ...but past LearnMaxLive distinct keys the least-recently-used
+    // keys (k1 then k2 — k1 was touched before this re-touch of k2)
+    // are evicted and retrain on next use
+    val k2Frames = Bpe.cachedLearn(docsDf(texts), "k2")._2
+    (3 to Bpe.LearnMaxLive + 2).foreach { i =>
+      Bpe.cachedLearn(docsDf(texts), s"k$i")
     }
-    assert(!(k2Frames eq Bpe.LearnCache.learnFor(docsDf(texts), "k2")._2))
-    Bpe.LearnCache.reset()
+    assert(SessionCaches.liveCount("bpe") == Bpe.LearnMaxLive)
+    assert(!(k2Frames eq Bpe.cachedLearn(docsDf(texts), "k2")._2))
+    SessionCaches.reset("bpe")
+    assert(SessionCaches.liveCount("bpe") == 0)
   }
 
   test("fertility: per-language integer ratios from the encode stats") {

@@ -5,6 +5,8 @@ import java.util.zip.ZipFile
 import scala.jdk.CollectionConverters._
 import scala.io.Source
 
+import org.apache.spark.storage.StorageLevel
+
 import graft.sources.ExportJob
 
 class ExportJobSpec extends SparkSpec {
@@ -162,6 +164,39 @@ class ExportJobSpec extends SparkSpec {
       assert(lines.tail.forall(_.endsWith("Test Region,Test_W01,Test Facility,H12323")), n)
     }
     inner.close(); zf.close()
+  }
+
+  test("export pins one source's events through the ledger; A→B→A reproduces the package") {
+    val sfB = sf.replace("sf0.001", "sf0.01")
+    def export(src: String): ExportJob.Result =
+      graft.sources.ExportMain.run(spark, Array(src,
+        Files.createTempDirectory("graft_export_events").toString,
+        "config/export_config.json"))
+    // the checksummed inner zip's CSVs, by name
+    def csvs(res: ExportJob.Result): Map[String, String] = {
+      val zf = new ZipFile(res.packagePath.toFile)
+      val tmpInner = Files.createTempFile("inner", ".zip")
+      Files.copy(zf.getInputStream(zf.getEntry(res.innerZip)), tmpInner,
+        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+      assert(ExportJob.sha256(tmpInner) == res.checksum)
+      val inner = new ZipFile(tmpInner.toFile)
+      try inner.entries().asScala.map(e => e.getName ->
+        Source.fromInputStream(inner.getInputStream(e)).mkString).toMap
+      finally { inner.close(); zf.close() }
+    }
+    SessionCaches.reset("export-events")
+    val a1 = export(sf)
+    assert(Tables(spark, sf).events.storageLevel != StorageLevel.NONE)
+    val b = export(sfB)
+    assert(SessionCaches.liveCount("export-events") == 1)
+    assert(Tables(spark, sf).events.storageLevel == StorageLevel.NONE,
+      "the previous source's events are released")
+    assert(Tables(spark, sfB).events.storageLevel != StorageLevel.NONE)
+    val a2 = export(sf)
+    assert(SessionCaches.liveCount("export-events") == 1)
+    assert(csvs(a1).size == 12 && csvs(a1) == csvs(a2))
+    assert(csvs(b).size == 12 && csvs(b) != csvs(a1))
+    SessionCaches.reset("export-events")
   }
 
   test("half-specified config window fails loudly, not with a bare NoSuchElement") {

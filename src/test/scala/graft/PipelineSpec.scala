@@ -223,27 +223,28 @@ class PipelineSpec extends SparkSpec {
   }
 
   test("ComponentsCache: cached labels equal direct, reuse is same-frame, LRU evicts") {
-    DedupPipeline.ComponentsCache.reset()
+    SessionCaches.reset("components")
     val docs = Tables(spark, sf).documents
     val direct = DedupPipeline.componentsOf(docs).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val cached = DedupPipeline.ComponentsCache.componentsFor(docs, "cA")
+    val cached = DedupPipeline.cachedComponents(docs, "cA")
     assert(cached.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       == direct)
     // warm key: the SAME checkpointed frame comes back, no recompute
-    assert(cached eq DedupPipeline.ComponentsCache.componentsFor(
+    assert(cached eq DedupPipeline.cachedComponents(
       sys.error("must not recompute on a warm key"), "cA"))
     // a second corpus coexists (breadth), then MaxLive+1 more evict cA
     val small = docs.limit(50)
-    DedupPipeline.ComponentsCache.componentsFor(small, "cB")
-    assert(cached eq DedupPipeline.ComponentsCache.componentsFor(
+    DedupPipeline.cachedComponents(small, "cB")
+    assert(cached eq DedupPipeline.cachedComponents(
       sys.error("cA must survive cB"), "cA"))
-    (1 to DedupPipeline.ComponentsCache.MaxLive + 1).foreach { i =>
-      DedupPipeline.ComponentsCache.componentsFor(small, s"c$i")
+    (1 to DedupPipeline.ComponentsMaxLive + 1).foreach { i =>
+      DedupPipeline.cachedComponents(small, s"c$i")
     }
-    assert(!(cached eq DedupPipeline.ComponentsCache
-      .componentsFor(docs, "cA")))
-    DedupPipeline.ComponentsCache.reset()
+    assert(SessionCaches.liveCount("components") ==
+      DedupPipeline.ComponentsMaxLive)
+    assert(!(cached eq DedupPipeline.cachedComponents(docs, "cA")))
+    SessionCaches.reset("components")
   }
 
   test("label propagation: ivf path agrees with the exact vote") {

@@ -171,29 +171,30 @@ class RetrievalSpec extends SparkSpec {
   }
 
   test("rarity cache: shared stats equal direct rarity; new key retires the old cache") {
-    import graft.operators.Retrieval.RarityCache
-    RarityCache.reset()
+    import graft.operators.Retrieval.{RarityMaxLive, cachedRarityStats}
+    SessionCaches.reset("rarity")
     val docs = Tables(spark, sf).documents
     val direct = Retrieval.rarity(docs)
       .select("doc_id", "n_tokens", "rarity_sum")
       .collect().map(_.toString).sorted
-    val cached = RarityCache.statsFor(docs, s"$sf#r1")
+    val cached = cachedRarityStats(docs, s"$sf#r1")
     assert(cached.collect().map(_.toString).sorted.sameElements(direct))
     // same key → the SAME cached frame (no rebuild)
-    assert(RarityCache.statsFor(docs, s"$sf#r1") eq cached)
+    assert(cachedRarityStats(docs, s"$sf#r1") eq cached)
     // new key → rebuilt; results still correct
-    val next = RarityCache.statsFor(docs, s"$sf#r2")
+    val next = cachedRarityStats(docs, s"$sf#r2")
     assert(!(next eq cached))
     assert(next.collect().map(_.toString).sorted.sameElements(direct))
     // breadth: r1 survives r2 (the A→B→A flip must not retrain)...
-    assert(RarityCache.statsFor(
+    assert(cachedRarityStats(
       sys.error("r1 must survive r2"), s"$sf#r1") eq cached)
-    // ...but past MaxLive keys the least-recently-used (r2) evicts
-    (3 to RarityCache.MaxLive + 2).foreach { i =>
-      RarityCache.statsFor(docs.limit(20), s"$sf#r$i")
+    // ...but past RarityMaxLive keys the least-recently-used (r2) evicts
+    (3 to RarityMaxLive + 2).foreach { i =>
+      cachedRarityStats(docs.limit(20), s"$sf#r$i")
     }
-    assert(!(RarityCache.statsFor(docs, s"$sf#r2") eq next))
-    RarityCache.reset()
+    assert(SessionCaches.liveCount("rarity") == RarityMaxLive)
+    assert(!(cachedRarityStats(docs, s"$sf#r2") eq next))
+    SessionCaches.reset("rarity")
   }
 
   test("importance: on-target docs outscore off-target, smoothing keeps weights defined") {
