@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main: one JSON line with per-query wall seconds at the
   * SPARK_GRAFT_SF_DIR scale factor. A warm-up pass (untimed) runs
   * first so timings measure the operators, not session/JIT/parquet-
@@ -10,14 +8,8 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = GraftSession.tune(
-      SparkSession.builder()
-        .master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.ui.enabled", "false"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(
+      sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt, "graft-bench")
     // SPARK_GRAFT_QUERIES=q1,q2 restricts the sweep (profiling aid)
     val queries = sys.env.get("SPARK_GRAFT_QUERIES") match {
       case Some(names) =>

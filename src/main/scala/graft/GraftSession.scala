@@ -31,11 +31,11 @@ object GraftSession {
     // scan degenerates into a full per-task sort of the candidate
     // rows. Heap buffers are small by construction (k+margin
     // entries), so 128k groups stay tens of MB per task. Same-session
-    // A/B at the 64× blow-up (SPARK_GRAFT_OHA_THRESHOLD=128 vs this
-    // default): d_ann_topk 15.4 → 6.4 s, d_knn_graph 19.4 → 14.7 s,
+    // A/B at the 64× blow-up (threshold 128 vs this value):
+    // d_ann_topk 15.4 → 6.4 s, d_knn_graph 19.4 → 14.7 s,
     // d_inverted_index 6.2 → 5.4 s.
     .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-      sys.env.getOrElse("SPARK_GRAFT_OHA_THRESHOLD", "131072"))
+      "131072")
 
   /** Local session for tests / ad-hoc runs. */
   def local(cores: Int = 4, app: String = "graft"): SparkSession = {

@@ -37,13 +37,14 @@ object SessionCaches {
   private val live =
     new java.util.LinkedHashMap[(String, String), Entry](32, 0.75f, true)
 
-  /** Test hook: a fixed budget in bytes (sys-prop
-    * graft.cacheLedger.budget) so the eviction path is exercisable at
-    * spec scale; production uses the shared cluster-storage budget.
+  /** Test seam: a fixed budget in bytes so the eviction path is
+    * exercisable at spec scale; `None` (production) uses the shared
+    * cluster-storage budget.
     */
+  @volatile private[graft] var budgetOverride: Option[Long] = None
+
   private def budgetFor(df: DataFrame): Long =
-    sys.props.get("graft.cacheLedger.budget").map(_.toLong)
-      .getOrElse(graft.operators.Dedup.cacheBudgetBytes(df))
+    budgetOverride.getOrElse(graft.operators.Dedup.cacheBudgetBytes(df))
 
   /** Estimated live bytes of one entry's frames: measured cache stats
     * when persisted; count × schema width for checkpoint-barrier

@@ -44,21 +44,6 @@ object Dedup {
   private[graft] def buildBudgetBytes(df: DataFrame): Long =
     executorMemBytes(df.sparkSession.sparkContext) / 128
 
-  /** Defensive sys-prop boolean for the A/B hooks: a typo'd value
-    * (`-Dgraft.minhash.fatCache=off`) must not abort a whole dedup
-    * pass with a raw IllegalArgumentException — non-boolean values are
-    * ignored loudly and the default path runs (ADVICE r10).
-    */
-  private[graft] def propBool(key: String): Option[Boolean] =
-    sys.props.get(key).flatMap { v =>
-      if (v.equalsIgnoreCase("true")) Some(true)
-      else if (v.equalsIgnoreCase("false")) Some(false)
-      else {
-        System.err.println(s"[graft] ignoring non-boolean -D$key=$v")
-        None
-      }
-    }
-
   /** Per-executor heap bytes, best effort across masters. */
   private def executorMemBytes(sc: org.apache.spark.SparkContext): Long = {
     val conf = sc.getConf
@@ -103,6 +88,18 @@ object Dedup {
     val s = docs.queryExecution.optimizedPlan.stats.sizeInBytes * 5
     if (s.isValidLong) s.toLong else Long.MaxValue
   }
+
+  /** The minhash fat-cache gate ([[minhashLsh]] and
+    * DedupPipeline.incrementalDedup): the shingle arrays ride the
+    * signature cache while the estimated cache — the shingle rows
+    * plus `carryRowBytes` of carry columns per [[ShingleRowBytes]] —
+    * fits the storage budget. sf-scale corpora always gate fat;
+    * stats-inflated frames gate slim (pinned in LlmOpsSpec).
+    */
+  private[graft] def fatCacheGate(docs: DataFrame,
+      carryRowBytes: Long = 0L): Boolean =
+    estShingleCacheBytes(docs) *
+      (1.0 + carryRowBytes.toDouble / ShingleRowBytes) < cacheBudgetBytes(docs)
 
   private val LocalClusterMem =
     """local-cluster\[\s*\d+\s*,\s*\d+\s*,\s*(\d+)\s*\]""".r
@@ -254,7 +251,7 @@ object Dedup {
     * (k = b·r). Universal-hash constants from a fixed seed so every
     * run and executor agrees.
     *
-    * Perm-count measurement (round 4, tools/MinhashProfile at the 64×
+    * Perm-count measurement (round 4, at the 64×
     * blow-up + sf0.01): the signature pass is 3.5–6 s of the ~31 s
     * d_minhash_lsh wall — candidate VERIFICATION (shingle re-join +
     * exact jaccard), not perms, dominates. Halving to 32 perms
@@ -341,7 +338,18 @@ object Dedup {
     */
   def minhashLsh(docs: DataFrame, textCol: String = "text",
       idCol: String = "doc_id", threshold: Double = 0.8,
-      excludeIds: Option[DataFrame] = None, maxBucket: Int = 0): DataFrame = {
+      excludeIds: Option[DataFrame] = None, maxBucket: Int = 0): DataFrame =
+    minhashLshWith(docs, textCol, idCol, threshold, excludeIds, maxBucket,
+      fatCacheGate(docs))
+
+  /** [[minhashLsh]] with the cache-contents verdict passed in, so the
+    * slim ≡ fat pair-set equivalence is spec-pinned (sf-scale corpora
+    * always gate fat, so the slim arm would otherwise only run at
+    * blow-up scale).
+    */
+  private[graft] def minhashLshWith(docs: DataFrame, textCol: String,
+      idCol: String, threshold: Double, excludeIds: Option[DataFrame],
+      maxBucket: Int, fatCache: Boolean): DataFrame = {
     // persist: the signature feeds the candidate pass and 2 verify
     // join sides — without a materialization barrier Catalyst
     // recomputes it per branch. The count() EAGERLY materializes the
@@ -365,12 +373,7 @@ object Dedup {
     // set whose recompute would repeat the 64-perm minhash pass) and
     // each verify side re-derives shingles from source: two LINEAR
     // text scans instead of the cliff (109-137 s → 75.7 s at 1024×).
-    // test override: -Dgraft.minhash.fatCache=true|false forces the
-    // path so the slim≡fat pair-set equivalence is spec-pinned
-    // (sf-scale corpora always gate fat, so the slim path would
-    // otherwise only run at blow-up scale)
-    val fatCache = propBool("graft.minhash.fatCache")
-      .getOrElse(estShingleCacheBytes(docs) < cacheBudgetBytes(docs))
+    // The verdict is [[fatCacheGate]]'s.
     val sigCols =
       if (fatCache) Seq("doc_id", "shingles", "buckets")
       else Seq("doc_id", "buckets")
@@ -411,7 +414,7 @@ object Dedup {
     // hash collisions — which only ADD candidates the exact-jaccard
     // verify rejects. Candidate generation is volume-gated
     // ([[candidatePairs]]): the single-shuffle sorted-run form at
-    // blow-up scale (r7 A/B at the 256× stress, MinhashProfile:
+    // blow-up scale (r7 A/B at the 256× stress:
     // sorted runs 4.6 s vs count+semi 7.0-10.0 s vs collect-all
     // 10.3 s), the two-pass count+semi form below ~2M banded rows
     // where sorted-run's fixed overhead dominates.
@@ -438,7 +441,7 @@ object Dedup {
     // joins them — see [[pin]])
     // (measured, not guessed: verifying over xxhash64'd shingle arrays
     // — 8-byte longs instead of strings in the join shuffle — timed
-    // NEUTRAL at the 128× blow-up (3.73 s vs 3.70 s, MinhashProfile):
+    // NEUTRAL at the 128× blow-up (3.73 s vs 3.70 s):
     // the per-element hash transform costs what the smaller payload
     // saves, so the string verify stays, keeping the oracle exact.)
     //
@@ -517,7 +520,7 @@ object Dedup {
     * (3) only the surviving sliver reaches collect_list, and the
     * semi join's (keys)-hash partitioning already satisfies the
     * groupBy, so stage 3 adds NO exchange. Measured at the 256×
-    * blow-up (tools/MinhashProfile): candidate generation 45.5 →
+    * blow-up: candidate generation 45.5 →
     * [see SURVEY §14], pair set bit-identical (the singleton buckets
     * produce no pairs; the cap filter moves from size(ids) to the
     * count — the same predicate on the same number).

@@ -155,7 +155,18 @@ object DedupPipeline {
     */
   def incrementalDedup(corpus: DataFrame, batch: DataFrame,
       textCol: String = "text", idCol: String = "doc_id",
-      threshold: Double = 0.8): DataFrame = {
+      threshold: Double = 0.8): DataFrame =
+    // the estimate covers the rows actually cached: the shingle rows
+    // plus the ~48 B/row __h md5 carry
+    incrementalDedupWith(corpus, batch, textCol, idCol, threshold,
+      Dedup.fatCacheGate(corpus, carryRowBytes = Md5RowBytes))
+
+  /** [[incrementalDedup]] with the corpus-cache verdict passed in, so
+    * specs run the slim arm at spec scale.
+    */
+  private[graft] def incrementalDedupWith(corpus: DataFrame,
+      batch: DataFrame, textCol: String, idCol: String, threshold: Double,
+      corpusFat: Boolean): DataFrame = {
     // persist FIRST: the signed frame feeds the size gate, banding
     // AND the verification join — without a barrier Catalyst
     // recomputes the signatures per branch (same reuse rule as
@@ -166,15 +177,6 @@ object DedupPipeline {
     // corpus text, one linear scan. The BATCH cache stays fat
     // unconditionally: the batch is the increment — re-deriving it
     // would re-run the md5 anti join per consumer.
-    // propBool, not a raw toBoolean: a typo'd A/B value must not
-    // abort the whole op (the ADVICE-r10 rule minhashLsh follows)
-    // the estimate covers the rows actually cached: the shingle rows
-    // plus the ~48 B/row __h md5 carry (one per ShingleRowBytes of
-    // estimated shingle cache)
-    val corpusFat = Dedup.propBool("graft.minhash.fatCache")
-      .getOrElse(Dedup.estShingleCacheBytes(corpus) *
-          (1.0 + Md5RowBytes.toDouble / Dedup.ShingleRowBytes) <
-        Dedup.cacheBudgetBytes(corpus))
     val corpusCols =
       if (corpusFat) Seq("doc_id", "shingles", "buckets", "__h")
       else Seq("doc_id", "buckets", "__h")

@@ -22,23 +22,15 @@ object LlmOps {
 
   /** The ledger's contamination-leg gate: bloom iff the estimated
     * gram shuffle (corpus plan bytes × 8 — the measured exact-leg
-    * expansion) crosses [[ContamExactGramBytesMax]]; env/sys-prop
-    * override for A/Bs. Factored out so ContamGateSpec pins the
-    * DEFAULT path's verdicts, not just the overrides: sf-scale
-    * corpora must gate exact on any JVM, stats-inflated frames bloom.
+    * expansion) crosses [[ContamExactGramBytesMax]]. Factored out so
+    * ContamGateSpec pins the verdicts: sf-scale corpora must gate
+    * exact on any JVM, stats-inflated frames bloom.
     */
   private[graft] def contamGateUseBloom(
       docs: org.apache.spark.sql.DataFrame): Boolean = {
-    val estGramShuffle = {
-      val sz = docs.queryExecution.optimizedPlan.stats.sizeInBytes * 8
-      if (sz.isValidLong) sz.toLong else Long.MaxValue
-    }
-    sys.props.get("graft.ledger.contamPath")
-      .orElse(sys.env.get("GRAFT_LEDGER_CONTAM_PATH")) match {
-      case Some("bloom") => true
-      case Some("exact") => false
-      case _ => estGramShuffle >= ContamExactGramBytesMax
-    }
+    val sz = docs.queryExecution.optimizedPlan.stats.sizeInBytes * 8
+    val estGramShuffle = if (sz.isValidLong) sz.toLong else Long.MaxValue
+    estGramShuffle >= ContamExactGramBytesMax
   }
 
   // ------------------------------------------------------- shared SQL
@@ -65,7 +57,7 @@ object LlmOps {
 
   // Hash-gated (round 4): the output is the VERIFIED pair set
   // (exact jaccard ≥ 0.8), and banding recall is exhaustively 1 at
-  // the verify scale (tools/MinhashProfile), so the true all-pairs
+  // the verify scale (measured round 4), so the true all-pairs
   // jaccard query IS the oracle — same argument as d_dedup_corpus.
   // Banding itself stays property-tested in MinHashSpec.
   private val minhashLsh = GraftQuery(
@@ -2193,8 +2185,8 @@ object LlmOps {
     * flip) re-mine at nProbe=16 and the wide verdict replaces
     * theirs. Rows-only (IVF recall < 1); the flag-band mechanics,
     * the exact-pair recovery, and the unflagged-passthrough are all
-    * spec-pinned (LlmOpsSpec), the trade curve measured in
-    * MarginDriftCheck (§17.7).
+    * spec-pinned (LlmOpsSpec), the trade curve measured on drifted
+    * and planted-geometry blow-ups (§17.7).
     */
   private val marginAlignEscQ = GraftQuery(
     "d_margin_align_esc",
@@ -2429,54 +2421,61 @@ object LlmOps {
     },
     (s, dir) => {
       val docs = Tables(s, dir).documents
-      val exactW = org.apache.spark.sql.expressions.Window
-        .partitionBy(md5(col("text")))
-      val flags = docs.select(
-        col("doc_id"), col("source"),
-        (col("source") === "src0").as("is_benchmark"),
-        TextAnalysis.gopherRules(col("text")).last.as("gopher_keep"),
-        (TextAnalysis.piiCounts(col("text")).last > 0).as("pii_found"),
-        (col("doc_id") =!= min(col("doc_id")).over(exactW)).as("exact_dup"))
-      val comp = DedupPipeline.cachedComponents(docs, dir)
-      // Contamination leg is VOLUME-GATED (the Retrieval perplexity
-      // pattern): the exact 8-gram equi-join ships ~8× the corpus
-      // text bytes through a shuffle (every word starts an 8-word
-      // gram), which is the oracle-backed leg below the shared cache
-      // budget but the dominant spill-regime stage at blow-up scale
-      // (the 1024× ledger profile). Past the budget the benchmark's
-      // grams become ONE broadcast bloom and the leg is a zero-join
-      // per-row membership scan — one-sided on the same grams (never
-      // misses a contaminated doc; ContamGateSpec pins flag
-      // containment and both paths row-identical off the flag).
-      // Env/sys-prop override for A/Bs, the perplexity-path idiom.
-      // The auto gate keys on a FIXED corpus-size knee, NOT the live
-      // heap: the oracle verdict must not depend on the JVM's memory
-      // config (a small-heap run at oracle scale would flip to the
-      // one-sided bloom leg and over-flag vs DuckDB). The constant is
-      // the measured 8 GiB-heap knee from the 1024× ledger profile
-      // (exact-leg gram shuffle ~8× corpus bytes vs a 2 GiB budget),
-      // frozen so the same corpus always takes the same leg.
-      val candDocs = docs.filter(col("source") =!= "src0")
-      val benchDocs = docs.filter(col("source") === "src0")
-      val useBloom = LlmOps.contamGateUseBloom(docs)
-      val contam =
-        if (useBloom)
-          TextAnalysis.bloomNgramContamination(candDocs, benchDocs)
-            .select(col("doc_id"),
-              (col("maybe_overlap_ratio") > 0.5).as("contam0"))
-        else
-          TextAnalysis.ngramContamination(candDocs, benchDocs)
-            .select(col("doc_id"), (col("overlap_ratio") > 0.5).as("contam0"))
-      flags.join(comp, "doc_id")
-        .join(contam, Seq("doc_id"), "left")
-        .withColumn("contaminated", coalesce(col("contam0"), lit(false)))
-        .withColumn("dedup_drop", col("doc_id") =!= col("component"))
-        .withColumn("keep", !col("is_benchmark") && col("gopher_keep")
-          && !col("dedup_drop") && !col("contaminated"))
-        .select("doc_id", "is_benchmark", "gopher_keep", "pii_found",
-          "exact_dup", "component", "dedup_drop", "contaminated", "keep")
-        .orderBy("doc_id")
+      curationLedger(docs, dir, contamGateUseBloom(docs))
     })
+
+  /** d_curation_ledger over `docs` (the documents table of `dir`),
+    * with the contamination-leg verdict passed in so ContamGateSpec
+    * runs both legs.
+    */
+  private[graft] def curationLedger(docs: org.apache.spark.sql.DataFrame,
+      dir: String, useBloom: Boolean): org.apache.spark.sql.DataFrame = {
+    val exactW = org.apache.spark.sql.expressions.Window
+      .partitionBy(md5(col("text")))
+    val flags = docs.select(
+      col("doc_id"), col("source"),
+      (col("source") === "src0").as("is_benchmark"),
+      TextAnalysis.gopherRules(col("text")).last.as("gopher_keep"),
+      (TextAnalysis.piiCounts(col("text")).last > 0).as("pii_found"),
+      (col("doc_id") =!= min(col("doc_id")).over(exactW)).as("exact_dup"))
+    val comp = DedupPipeline.cachedComponents(docs, dir)
+    // Contamination leg is VOLUME-GATED (the Retrieval perplexity
+    // pattern): the exact 8-gram equi-join ships ~8× the corpus
+    // text bytes through a shuffle (every word starts an 8-word
+    // gram), which is the oracle-backed leg below the shared cache
+    // budget but the dominant spill-regime stage at blow-up scale
+    // (the 1024× ledger profile). Past the budget the benchmark's
+    // grams become ONE broadcast bloom and the leg is a zero-join
+    // per-row membership scan — one-sided on the same grams (never
+    // misses a contaminated doc; ContamGateSpec pins flag
+    // containment and both paths row-identical off the flag).
+    // The auto gate keys on a FIXED corpus-size knee, NOT the live
+    // heap: the oracle verdict must not depend on the JVM's memory
+    // config (a small-heap run at oracle scale would flip to the
+    // one-sided bloom leg and over-flag vs DuckDB). The constant is
+    // the measured 8 GiB-heap knee from the 1024× ledger profile
+    // (exact-leg gram shuffle ~8× corpus bytes vs a 2 GiB budget),
+    // frozen so the same corpus always takes the same leg.
+    val candDocs = docs.filter(col("source") =!= "src0")
+    val benchDocs = docs.filter(col("source") === "src0")
+    val contam =
+      if (useBloom)
+        TextAnalysis.bloomNgramContamination(candDocs, benchDocs)
+          .select(col("doc_id"),
+            (col("maybe_overlap_ratio") > 0.5).as("contam0"))
+      else
+        TextAnalysis.ngramContamination(candDocs, benchDocs)
+          .select(col("doc_id"), (col("overlap_ratio") > 0.5).as("contam0"))
+    flags.join(comp, "doc_id")
+      .join(contam, Seq("doc_id"), "left")
+      .withColumn("contaminated", coalesce(col("contam0"), lit(false)))
+      .withColumn("dedup_drop", col("doc_id") =!= col("component"))
+      .withColumn("keep", !col("is_benchmark") && col("gopher_keep")
+        && !col("dedup_drop") && !col("contaminated"))
+      .select("doc_id", "is_benchmark", "gopher_keep", "pii_found",
+        "exact_dup", "component", "dedup_drop", "contaminated", "keep")
+      .orderBy("doc_id")
+  }
 
   val queries: Seq[GraftQuery] = Seq(
     fimQ, hardNegativesQ, hardNegativesIvfQ, compressRatioQ, marginAlignQ,

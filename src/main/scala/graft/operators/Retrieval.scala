@@ -404,16 +404,33 @@ object Retrieval {
     */
   def perplexityScores(docs: DataFrame, textCol: String = "text",
       idCol: String = "doc_id", langCol: String = "lang"): DataFrame =
-    perplexityScoresWithLm(docs, textCol, idCol, langCol)._1
+    perplexityScoresWithLm(docs, textCol, idCol, langCol,
+      perplexityScoreTableGate(docs))._1
+
+  /** The perplexity plan-shape gate: the "scoretable" shape iff the
+    * estimated occurrence shuffle (occ shuffle ≈ 4× the optimized-plan
+    * bytes — 722 MB of 1024× documents → the measured 2.8 GB
+    * exchange) fits the shared cache budget; else "occ". Derived plans
+    * propagate inflated sizes, which errs toward occ — the spill-safe
+    * narrow-row form. The measurements behind the knee are in
+    * [[perplexityScoresWithLm]].
+    */
+  private[graft] def perplexityScoreTableGate(docs: DataFrame): Boolean = {
+    val s = docs.queryExecution.optimizedPlan.stats.sizeInBytes * 4
+    val estOccShuffle = if (s.isValidLong) s.toLong else Long.MaxValue
+    estOccShuffle < Dedup.cacheBudgetBytes(docs)
+  }
 
   /** [[perplexityScores]] plus the persisted LM count frame, so
     * [[perplexityBucket]] can release the cache once the scored frame
     * materializes. Repeated standalone calls retire the previous
-    * call's cache (the minhashLsh lifecycle).
+    * call's cache (the minhashLsh lifecycle). `scoreTable` is the
+    * plan-shape verdict ([[perplexityScoreTableGate]]).
     */
   private[this] var lastLm: Option[DataFrame] = None
   private[graft] def perplexityScoresWithLm(docs: DataFrame, textCol: String,
-      idCol: String, langCol: String): (DataFrame, DataFrame) = {
+      idCol: String, langCol: String,
+      scoreTable: Boolean): (DataFrame, DataFrame) = {
     val base = docs.select(col(idCol).as("doc_id"), col(langCol).as("lang"),
       col(textCol).as("text"),
       TextAnalysis.gopherRules(col(textCol)).last.as("keep"))
@@ -450,28 +467,17 @@ object Retrieval {
     // partial agg ADD spill instead of saving it). Vocab:occurrence
     // ratio is 3.4% at BOTH factors, so the flip is the spill knee,
     // not vocabulary shape. Gate on estimated occurrence-shuffle
-    // volume vs the shared cache-budget form (occ shuffle ≈ 4× the
-    // parquet scan bytes — 722 MB of 1024× documents → the measured
-    // 2.8 GB exchange); derived plans propagate inflated sizes, which
-    // errs toward occ — the spill-safe narrow-row form.
-    val estOccShuffle = {
-      val s = docs.queryExecution.optimizedPlan.stats.sizeInBytes * 4
-      if (s.isValidLong) s.toLong else Long.MaxValue
-    }
-    val path = sys.props.get("graft.perplexity.path")
-      .orElse(sys.env.get("GRAFT_PERPLEXITY_PATH"))
-      .getOrElse(
-        if (estOccShuffle < Dedup.cacheBudgetBytes(docs)) "scoretable"
-        else "occ")
-    val scoredRows = path match {
-      case "occ" =>
+    // volume vs the shared cache-budget form
+    // ([[perplexityScoreTableGate]]).
+    val scoredRows =
+      if (!scoreTable)
         occ(base)
           .join(cf.hint("shuffle_hash"), Seq("lang", "bg"), "left")
           .withColumn("w1", substring_index(col("bg"), " ", 1))
           .join(ctx.hint("shuffle_hash"), Seq("lang", "w1"), "left")
           .join(broadcast(tot), Seq("lang"), "left")
           .withColumn("score", smoothed)
-      case _ =>
+      else {
         val st = occ(base).select("lang", "bg").distinct()
           .join(cf.hint("shuffle_hash"), Seq("lang", "bg"), "left")
           .withColumn("w1", substring_index(col("bg"), " ", 1))
@@ -490,7 +496,7 @@ object Retrieval {
         occ(base).join(st.hint("shuffle_hash"),
             col("lang") <=> col("s_lang") && col("bg") <=> col("s_bg"))
           .drop("s_lang", "s_bg")
-    }
+      }
     val scored = scoredRows
       .groupBy("lang", "doc_id")
       .agg(count(lit(1)).as("n_bigrams"), sum(col("score")).as("surprisal"))
@@ -530,7 +536,8 @@ object Retrieval {
 
   def perplexityBucket(docs: DataFrame, textCol: String = "text",
       idCol: String = "doc_id", langCol: String = "lang"): DataFrame = {
-    val (scores, lm) = perplexityScoresWithLm(docs, textCol, idCol, langCol)
+    val (scores, lm) = perplexityScoresWithLm(docs, textCol, idCol, langCol,
+      perplexityScoreTableGate(docs))
     val scored = scores
       .localCheckpoint() // eager: three consumers below, one-row-per-doc
     releasePerplexityLm(lm) // checkpoint materialized — LM cache done

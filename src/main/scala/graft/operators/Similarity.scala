@@ -285,8 +285,9 @@ object Similarity {
     * stay unmined (in a CCMatrix-sized pool the non-emitting
     * majority would cost a full second pass), and a confidently-
     * wrong partner with a HEALTHY margin is not flagged — that class
-    * is what the op's default probe width is for (MarginDriftCheck:
-    * cross-family falses only appear below nProbe=16). Off (0) by
+    * is what the op's default probe width is for (measured on a
+    * drifted-probe blow-up: cross-family falses only appear below
+    * nProbe=16). Off (0) by
     * default — registered results unchanged.
     */
   def marginAlignIvf(emb: DataFrame, probeFilter: Column,
@@ -395,8 +396,8 @@ object Similarity {
     * template-family corpus), so the emitted set's precision is
     * fragile to any score perturbation. Calibration: the sf corpora
     * mine at p50 ≈ 1.126 vs marginMin 1.02 (headroom ≈ 0.106 — the
-    * healthy regime has 2× this slack); the MarginDriftCheck
-    * structured blow-up's near-tie population sits under 1.03
+    * healthy regime has 2× this slack); a structured replica
+    * blow-up's near-tie population sits under 1.03
     * (headroom < 0.01). 0.05 splits the two regimes mid-gap.
     */
   val MarginHeadroomEps = 0.05

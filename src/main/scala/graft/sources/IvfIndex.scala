@@ -47,8 +47,8 @@ object IvfIndex {
     * slice and keeps the quadratic inside mapPartitions. Both costs
     * scale with the corpus, so the discriminant is their RATIO —
     * candidates / probed-slice rows, i.e. probes-per-probed-cell
-    * density. Measured (tools/IvfPathAB, min-of-2 per path,
-    * interleaved): ratio ≈ 10 (sf scale, 20 k candidates) = 0.8 vs
+    * density. Measured (min-of-2 per path, interleaved, r12):
+    * ratio ≈ 10 (sf scale, 20 k candidates) = 0.8 vs
     * 0.8 s tie; ratio 40 (5.1 M) = 3.0 vs 2.8 s and (20.5 M) = 7.8
     * vs 6.1 s, mild kernel wins; ratio ≈ 112 (459 M over a 4.1 M
     * index) = broadcast 33.2 s vs kernel 14.6 s, 2.3×; ratio ≈ 312
@@ -70,6 +70,17 @@ object IvfIndex {
     * exactly from the cellCounts job the probe pass already runs.
     */
   private val CandPerSliceRatio = 24L
+
+  /** The topK probe-path gate: the broadcast path iff the probe-cell
+    * rows fit one task's build budget AND the probe density (rows per
+    * probed cell) stays under [[CandPerSliceRatio]]; else the sorted
+    * cell-run kernel. Pure on the counts the probe pass collects, so
+    * IvfIndexSpec pins both verdicts without a blow-up corpus.
+    */
+  private[graft] def thinProbeGate(probeCellRows: Long, probedCells: Int,
+      buildBudgetBytes: Long): Boolean =
+    probeCellRows * ProbeCellRowBytes < buildBudgetBytes &&
+      probeCellRows < CandPerSliceRatio * math.max(1, probedCells)
 
   /** Precise rename via FileContext: unlike `FileSystem.rename`,
     * which on an EXISTING destination directory silently moves the
@@ -392,11 +403,14 @@ object IvfIndex {
     * its executedPlan to assert the cell-partition pruning that the
     * public topK's checkpoint truncates away. Returns (result, the
     * persisted probe-cell frame) — the CALLER unpersists the latter
-    * after materializing the former.
+    * after materializing the former. `thinProbe` is the probe-path
+    * verdict; `None` takes [[thinProbeGate]]'s on the collected
+    * probe-cell counts (specs pass `Some` to run both paths).
     */
   private[graft] def topKPlan(spark: SparkSession, dir: String,
       probeEmb: DataFrame, k: Int, nProbe: Int,
-      excludeNProbe: Int = 0): (DataFrame, DataFrame) = {
+      excludeNProbe: Int = 0,
+      thinProbe: Option[Boolean] = None): (DataFrame, DataFrame) = {
     healSwap(spark, dir)
     val probes = probeEmb.select(col("vec_id").as("probe_id"),
       col("embedding").as("emb_p"),
@@ -456,20 +470,11 @@ object IvfIndex {
     // (per-partition slices of the probe set, spill-free because
     // bounded per partition). Results identical either way; the
     // probe-cell row count already rode the cellSet job above.
-    val probeCellRows = cellCounts.map(_.getLong(1)).sum
-    val probeBytes = probeCellRows * ProbeCellRowBytes
-    // test hook (the minhash fatCache pattern): "broadcast"/"kernel"
-    // pins the path so the parity spec can run both at spec scale
-    val forced = sys.props.get("graft.ivf.probePath")
-    val thinProbe = forced match {
-      case Some("broadcast") => true
-      case Some("kernel") => false
-      case _ =>
-        probeBytes < graft.operators.Dedup.buildBudgetBytes(probeCells) &&
-          probeCellRows < CandPerSliceRatio * math.max(1, cellSet.length)
-    }
+    val thin = thinProbe.getOrElse(thinProbeGate(
+      cellCounts.map(_.getLong(1)).sum, cellSet.length,
+      graft.operators.Dedup.buildBudgetBytes(probeCells)))
     val survivors =
-      if (thinProbe)
+      if (thin)
         // thin-probe fast path (probes ≪ corpus, the IVF premise):
         // broadcast the probe cells — left to AQE the tiny probe
         // shuffle coalesces to ONE partition and gets STREAMED (see

@@ -49,7 +49,8 @@ object StreamingQuality {
       maxVocab: Long = 20L * 1000 * 1000): PerplexityModel = {
     val (scores, lm) =
       graft.operators.Retrieval.perplexityScoresWithLm(
-        docs, textCol, idCol, langCol)
+        docs, textCol, idCol, langCol,
+        graft.operators.Retrieval.perplexityScoreTableGate(docs))
     val nVocab = lm.count()
     require(nVocab <= maxVocab,
       s"perplexity LM vocab $nVocab exceeds the deployable-artifact cap " +

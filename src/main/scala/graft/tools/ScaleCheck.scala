@@ -28,10 +28,10 @@ import org.apache.spark.sql.functions._
   * 4 → replica-pair Jaccard ≈ 0.14, which collides at the
   * 16×4-banding FP rate (~6.7e-3/pair) — candidate volume grows
   * QUADRATICALLY in the replica count (the honest template-family
-  * stress; tools/CandCount measures it). 2 → J ≈ 0.05, an order of
-  * magnitude under the FP knee, so candgen stays ~linear and the
-  * sweep measures PLAN scaling without the collision floor — use
-  * this mode for linearity claims at big factors.
+  * stress; measured at 256× and 512×, SURVEY §13/§15). 2 → J ≈
+  * 0.05, an order of magnitude under the FP knee, so candgen stays
+  * ~linear and the sweep measures PLAN scaling without the collision
+  * floor — use this mode for linearity claims at big factors.
   *
   * Usage: ScaleCheck <sfDir> <factor> <workDir> <query> [query ...]
   */

@@ -33,19 +33,10 @@ class ContamGateSpec extends SparkSpec {
     }
   }
 
-  private def runLedger(path: String) = {
-    val old = sys.props.get("graft.ledger.contamPath")
-    sys.props("graft.ledger.contamPath") = path
-    try SparkEntry.queries("d_curation_ledger")(spark, sf).collect()
-    finally old match {
-      case Some(v) => sys.props("graft.ledger.contamPath") = v
-      case None => sys.props.remove("graft.ledger.contamPath"): Unit
-    }
-  }
+  private def runLedger(useBloom: Boolean) =
+    graft.operators.LlmOps.curationLedger(docs, sf, useBloom).collect()
 
   test("default auto gate: exact at oracle scale, bloom past the fixed knee") {
-    // no override set — this is the path every driver-run Verify takes
-    assert(sys.props.get("graft.ledger.contamPath").isEmpty)
     // sf-scale corpora sit far under the 2 GiB fixed knee on ANY JVM
     // (the gate keys on the corpus, not the live heap): exact leg
     assert(!graft.operators.LlmOps.contamGateUseBloom(docs),
@@ -57,22 +48,11 @@ class ContamGateSpec extends SparkSpec {
       spark.range(1L << 28).toDF("blowup_rep"))
     assert(graft.operators.LlmOps.contamGateUseBloom(inflated),
       "past-knee stats must take the broadcast-bloom leg")
-    // and the override still wins in both directions
-    val old = sys.props.get("graft.ledger.contamPath")
-    try {
-      sys.props("graft.ledger.contamPath") = "bloom"
-      assert(graft.operators.LlmOps.contamGateUseBloom(docs))
-      sys.props("graft.ledger.contamPath") = "exact"
-      assert(!graft.operators.LlmOps.contamGateUseBloom(inflated))
-    } finally old match {
-      case Some(v) => sys.props("graft.ledger.contamPath") = v
-      case None => sys.props.remove("graft.ledger.contamPath"): Unit
-    }
   }
 
   test("ledger: gated paths identical off the flag; bloom flag contains exact") {
-    val ex = runLedger("exact")
-    val bl = runLedger("bloom")
+    val ex = runLedger(useBloom = false)
+    val bl = runLedger(useBloom = true)
     assert(ex.length == bl.length && ex.nonEmpty)
     val exM = ex.map(r => r.getLong(0) -> r).toMap
     bl.foreach { rb =>

@@ -26,17 +26,37 @@ class IvfIndexSpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("graft-ivf").toString
     IvfIndex.build(emb, dir, nCells = 8)
     val probes = emb.filter(col("vec_id") % 10 === 0)
-    def run(): Array[String] =
-      IvfIndex.topK(spark, dir, probes, k = 5, nProbe = 4)
-        .collect().map(_.toString).sorted
-    val viaBroadcast = try {
-      sys.props("graft.ivf.probePath") = "broadcast"; run()
-    } finally sys.props.remove("graft.ivf.probePath")
-    val viaKernel = try {
-      sys.props("graft.ivf.probePath") = "kernel"; run()
-    } finally sys.props.remove("graft.ivf.probePath")
+    def run(thin: Boolean): Array[String] = {
+      val (out, pc) = IvfIndex.topKPlan(spark, dir, probes, k = 5,
+        nProbe = 4, thinProbe = Some(thin))
+      try out.collect().map(_.toString).sorted finally pc.unpersist()
+    }
+    val viaBroadcast = run(thin = true)
+    val viaKernel = run(thin = false)
     assert(viaBroadcast.nonEmpty && viaBroadcast.sameElements(viaKernel),
       s"broadcast ${viaBroadcast.length} rows vs kernel ${viaKernel.length}")
+  }
+
+  test("default probe-path gate: broadcast at sf scale, kernel on dense or big probes") {
+    // d_ann_topk's own probe pass at sf scale (its session index, its
+    // probe set, the default width): the collected counts gate broadcast
+    val emb = Tables(spark, sf).embeddings
+    val dir = graft.sources.AnnIndexCache.dirFor(emb, s"$sf#embeddings")
+    val (_, pc) = IvfIndex.topKPlan(spark, dir,
+      emb.filter(col("vec_id") % 50 === 0), k = 5, nProbe = 4)
+    val counts = try pc.groupBy("cell").count().collect()
+      finally pc.unpersist()
+    val rows = counts.map(_.getLong(1)).sum
+    val budget = graft.operators.Dedup.buildBudgetBytes(emb)
+    assert(IvfIndex.thinProbeGate(rows, counts.length, budget),
+      s"sf-scale probes ($rows rows over ${counts.length} cells) must broadcast")
+    // inflated probe-cell counts take the kernel: dense probes per
+    // probed cell (the density knee), and a probe frame past the
+    // build budget even at low density
+    assert(!IvfIndex.thinProbeGate(rows * 1000, counts.length, budget),
+      "dense probes per probed cell must take the kernel")
+    assert(!IvfIndex.thinProbeGate(budget, Int.MaxValue, budget),
+      "a probe frame past the build budget must take the kernel")
   }
 
   test("compact merges append-era small files; probes bit-identical before/after") {

@@ -22,18 +22,28 @@ class LlmOpsSpec extends SparkSpec {
     // the cache-contents gate (fat shingles+buckets vs slim buckets +
     // source re-derive) is a PHYSICAL choice only — the pair set and
     // jaccard values must be identical. sf corpora always gate fat,
-    // so force both paths explicitly.
-    def run(): Set[(Long, Long, Double)] =
-      Dedup.minhashLsh(docs, threshold = 0.8).collect()
+    // so pass both verdicts explicitly.
+    def run(fatCache: Boolean): Set[(Long, Long, Double)] =
+      Dedup.minhashLshWith(docs, "text", "doc_id", 0.8, None, 0, fatCache)
+        .collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    val fat = try {
-      sys.props("graft.minhash.fatCache") = "true"; run()
-    } finally sys.props.remove("graft.minhash.fatCache")
-    val slim = try {
-      sys.props("graft.minhash.fatCache") = "false"; run()
-    } finally sys.props.remove("graft.minhash.fatCache")
+    val fat = run(fatCache = true)
+    val slim = run(fatCache = false)
     assert(fat.nonEmpty && fat == slim,
       s"fat ${fat.size} pairs vs slim ${slim.size}")
+  }
+
+  test("default fat-cache gate: fat at sf scale, slim past the storage budget") {
+    // sf-scale corpora sit far under the cache budget: the shingle
+    // arrays ride the signature cache (both call sites' gates)
+    assert(Dedup.fatCacheGate(docs), "sf-scale corpus must gate fat")
+    assert(Dedup.fatCacheGate(docs, carryRowBytes = 48L),
+      "the md5 carry must not flip an sf-scale corpus to slim")
+    // a stats-inflated frame (an unexecuted crossJoin: only the
+    // optimizer stats are read) crosses the budget: slim
+    val inflated = docs.crossJoin(spark.range(1L << 28).toDF("blowup_rep"))
+    assert(!Dedup.fatCacheGate(inflated), "past-budget stats must gate slim")
+    assert(!Dedup.fatCacheGate(inflated, carryRowBytes = 48L))
   }
 
   test("prefix-jaccard bucket cap cuts a planted boilerplate family whole, keeps the rest") {

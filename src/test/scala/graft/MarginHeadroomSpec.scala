@@ -7,9 +7,9 @@ import graft.operators.Similarity
 /** The margin-headroom companion stats on d_margin_align's miner
   * (withStats = true): `low_headroom` must FIRE on a tie-field
   * population (every emitted pair barely clears marginMin — the
-  * §16.5 drift signature MarginDriftCheck's structured blow-up
-  * produces) and must stay OFF at corpus scale (the sf geometry
-  * mines with ~2× the epsilon in slack). The stats ride as appended
+  * §16.5 drift signature a structured replica blow-up produces) and
+  * must stay OFF at corpus scale (the sf geometry mines with ~2× the
+  * epsilon in slack). The stats ride as appended
   * columns; the bare (withStats = false) schema is what the oracle
   * gate hashes, pinned unchanged here.
   */

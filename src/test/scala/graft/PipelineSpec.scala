@@ -150,12 +150,10 @@ class PipelineSpec extends SparkSpec {
       .select("doc_id").collect().map(_.getLong(0)).toSet
     assert(kept == Set(12L, 14L), s"kept $kept")
     // the corpus-cache gate (fat vs slim + source re-derive) is a
-    // physical choice only — forced slim must admit the same docs
-    val keptSlim = try {
-      sys.props("graft.minhash.fatCache") = "false"
-      DedupPipeline.incrementalDedup(corpus, batch, threshold = 0.8)
-        .select("doc_id").collect().map(_.getLong(0)).toSet
-    } finally sys.props.remove("graft.minhash.fatCache")
+    // physical choice only — the slim verdict must admit the same docs
+    val keptSlim = DedupPipeline.incrementalDedupWith(corpus, batch,
+        "text", "doc_id", 0.8, corpusFat = false)
+      .select("doc_id").collect().map(_.getLong(0)).toSet
     assert(keptSlim == kept, s"slim path kept $keptSlim")
   }
 

@@ -38,6 +38,45 @@ class PlanAuditSpec extends SparkSpec {
     assert(planOf("q_anti_join").contains("LeftAnti"))
   }
 
+  test("unpivot keeps its pre-expand Sort directly under the Expand") {
+    // q_unpivot's ORDER BY rests on physical order surviving the
+    // Expand (it sorts the narrow input, not the melted rows), so the
+    // final adaptive plan must move no rows above the Expand and must
+    // reach the Sort below it through row-preserving wrappers only —
+    // a Spark/AQE change that breaks this fails here, not at the oracle
+    import org.apache.spark.sql.execution._
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.exchange.Exchange
+    val df = SparkEntry.queries("q_unpivot")(spark, sf)
+    df.collect() // finalize AQE for THIS execution
+    def kids(p: SparkPlan): Seq[SparkPlan] = p match {
+      case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
+      case q: QueryStageExec => Seq(q.plan)
+      case _ => p.children
+    }
+    def wrapper(p: SparkPlan): Boolean = p match {
+      case _: WholeStageCodegenExec | _: InputAdapter | _: ProjectExec => true
+      case _ => false
+    }
+    // the root-to-Expand path
+    def pathTo(p: SparkPlan): Option[List[SparkPlan]] = p match {
+      case _: ExpandExec => Some(List(p))
+      case _ => kids(p).iterator.map(pathTo).collectFirst {
+        case Some(path) => p :: path
+      }
+    }
+    val plan = df.queryExecution.executedPlan
+    val path = pathTo(plan).getOrElse(fail(s"no Expand in the plan:\n$plan"))
+    assert(!path.init.exists {
+      case _: Exchange | _: SortExec => true
+      case _ => false
+    }, s"rows move above the Expand:\n$plan")
+    var below = kids(path.last).head
+    while (wrapper(below)) below = kids(below).head
+    assert(below.isInstanceOf[SortExec],
+      s"the Sort must sit directly under the Expand:\n$plan")
+  }
+
   test("latest-per-key uses a single shuffle with window group limit") {
     val p = planOf("q_latest_per_key")
     assert(p.contains("Window"), p)

@@ -361,17 +361,30 @@ class RetrievalSpec extends SparkSpec {
       .toDF("doc_id", "text", "lang")
     val d = Tables(spark, sf).documents.select("doc_id", "text", "lang")
       .unionByName(planted)
-    def run(path: String): Seq[(Long, String, Long, Long)] = {
-      sys.props("graft.perplexity.path") = path
-      try Retrieval.perplexityScores(d).orderBy("doc_id")
+    def run(scoreTable: Boolean): Seq[(Long, String, Long, Long)] = {
+      val (scores, lm) = Retrieval.perplexityScoresWithLm(d, "text",
+        "doc_id", "lang", scoreTable)
+      try scores.orderBy("doc_id")
         .collect().map(r => (r.getLong(1), r.getString(0),
           r.getLong(2), r.getLong(3))).toSeq
-      finally sys.props.remove("graft.perplexity.path"): Unit
+      finally Retrieval.releasePerplexityLm(lm)
     }
-    val st = run("scoretable")
+    val st = run(scoreTable = true)
     assert(st.exists(_._1 == 9000005L),
       "the null-lang doc must be scored, not dropped by the join-back")
-    assert(st.nonEmpty && st == run("occ"))
+    assert(st.nonEmpty && st == run(scoreTable = false))
+  }
+
+  test("default perplexity plan-shape gate: scoretable at sf scale, occ past the budget") {
+    // sf-scale corpora sit far under the cache budget: the one-exchange
+    // score-table shape
+    assert(Retrieval.perplexityScoreTableGate(docs),
+      "sf-scale corpus must take the scoretable shape")
+    // a stats-inflated frame (an unexecuted crossJoin: only the
+    // optimizer stats are read) crosses the spill knee: occ
+    val inflated = docs.crossJoin(spark.range(1L << 28).toDF("blowup_rep"))
+    assert(!Retrieval.perplexityScoreTableGate(inflated),
+      "past-budget stats must take the spill-safe occ shape")
   }
 
   test("rarity on the corpus: every token instance weighted, sums positive") {

@@ -31,7 +31,7 @@ class SessionCachesSpec extends SparkSpec {
     val u3 = SessionCaches.bytesOf(Seq(c))
     // budget admits a+b+c minus a sliver: the third entry must evict
     // exactly the LRU entry (a), from a DIFFERENT family
-    sys.props("graft.cacheLedger.budget") = (unit + u2 + u3 - 1).toString
+    SessionCaches.budgetOverride = Some(unit + u2 + u3 - 1)
     try {
       pin("famA", a); pin("famB", b)
       assert(SessionCaches.liveCount("famA") == 1)
@@ -51,7 +51,7 @@ class SessionCachesSpec extends SparkSpec {
       assert(c.storageLevel == StorageLevel.NONE &&
         b.storageLevel != StorageLevel.NONE)
     } finally {
-      sys.props.remove("graft.cacheLedger.budget")
+      SessionCaches.budgetOverride = None
       SessionCaches.reset()
       Seq(a, b, c, d).foreach(_.unpersist(false))
     }
