@@ -36,6 +36,11 @@ object GraftSession {
     // d_inverted_index 6.2 → 5.4 s.
     .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
       "131072")
+    // events.parquet's ts may be TIMESTAMP(NANOS), which the parquet
+    // reader rejects without this; it reads it as raw nanos instead
+    // (Tables.events converts). Session-wide because the reader reads
+    // the conf again at execution time.
+    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
 
   /** Local session for tests / ad-hoc runs. */
   def local(cores: Int = 4, app: String = "graft"): SparkSession = {

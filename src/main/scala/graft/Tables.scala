@@ -42,13 +42,13 @@ final case class Tables(spark: SparkSession, dir: String) {
   def part: DataFrame      = table("part")
   def orders: DataFrame    = table("orders")
   def lineitem: DataFrame  = table("lineitem")
-  /** events.ts is parquet TIMESTAMP(NANOS) which Spark's vectorized
-    * reader rejects; read it as raw nanos (legacy conf, set here so it
-    * works under any session) and convert to a microsecond timestamp
-    * with exact integer arithmetic.
+  /** events.ts may be parquet TIMESTAMP(NANOS), which Spark's reader
+    * rejects unless `spark.sql.legacy.parquet.nanosAsLong` is on; a
+    * `GraftSession` session sets it (the reader consults it again at
+    * execution time, so it cannot be scoped to this call). Raw nanos
+    * convert to a microsecond timestamp with exact integer arithmetic.
     */
   def events: DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val raw = table("events")
     raw.schema("ts").dataType match {
       case org.apache.spark.sql.types.LongType =>

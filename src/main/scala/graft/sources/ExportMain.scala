@@ -51,10 +51,25 @@ object ExportMain {
     // configured DB_URL switches the source to JDBC (the reference's
     // analytics_db); otherwise the parquet directory argument stands
     val sfDir = config.flatMap(_.dbUrl).getOrElse(argDir)
-    config.foreach { c =>
-      c.db.get("DB_USER").foreach(spark.conf.set("graft.jdbc.user", _))
-      c.db.get("DB_PASS").foreach(spark.conf.set("graft.jdbc.password", _))
+    // the config's credentials hold for this run only: the prior
+    // values come back afterwards, so the password does not stay
+    // readable in the session conf and a later export without
+    // credentials does not silently reuse them
+    val creds = config.toSeq.flatMap(c => Seq(
+      "DB_USER" -> "graft.jdbc.user", "DB_PASS" -> "graft.jdbc.password")
+      .flatMap { case (k, key) => c.db.get(k).map(key -> _) })
+    val prior = creds.map { case (key, _) => key -> spark.conf.getOption(key) }
+    creds.foreach { case (key, v) => spark.conf.set(key, v) }
+    try runWith(spark, args, config, sfDir, outDir)
+    finally prior.foreach {
+      case (key, Some(v)) => spark.conf.set(key, v)
+      case (key, None) => spark.conf.unset(key)
     }
+  }
+
+  private def runWith(spark: org.apache.spark.sql.SparkSession,
+      args: Array[String], config: Option[ExportConfig], sfDir: String,
+      outDir: String): ExportJob.Result = {
 
     // window: CLI args > config > "as of now" (CURDATE semantics)
     def numeric(s: String) = s.nonEmpty && s.forall(_.isDigit)

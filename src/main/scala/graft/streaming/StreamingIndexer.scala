@@ -53,7 +53,7 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * rewrite of the codes dataset — O(index size), NOT O(batch) — so
   * the cadence is the operator's trade between steady-state probe
   * read amplification and periodic rewrite IO (measured in
-  * tools/IndexStreamScale: steady batches flat, the every-K batch
+  * `tools/StreamScale index`: steady batches flat, the every-K batch
   * absorbs the rewrite; pick K by index-size/ingest-rate, or run
   * compaction out-of-band from the offline refit job instead —
   * WITH THE INGEST STREAM STOPPED: compact is read→rewrite→swap, so

@@ -15,7 +15,6 @@ object StreamingMain {
       sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt, "graft-stream")
     // raw (pre-conversion) schema for the file source, then the same
     // nanos->micros conversion Tables.events applies
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val raw = spark.read.parquet(s"$sfDir/events.parquet")
     // FileStreamSource wants a directory: stage the table file into one
     val stage = java.nio.file.Files.createTempDirectory("graft_stream")

@@ -32,7 +32,10 @@ import org.apache.spark.sql.functions._
   */
 object ClusterCheck {
 
-  private val AddOpens = Seq(
+  /** The JDK 17 module opens Spark needs, for executor JVMs that
+    * local-cluster launches outside spark-submit (SpillCheck too).
+    */
+  private[tools] val AddOpens = Seq(
     "java.base/java.lang", "java.base/java.lang.invoke",
     "java.base/java.lang.reflect", "java.base/java.io",
     "java.base/java.net", "java.base/java.nio",
@@ -105,6 +108,22 @@ object ClusterCheck {
       (r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1))
     }
 
+    def noop(q: String): Unit = time(q) {
+      graft.SparkEntry.queries(q)(spark, dir)
+        .write.format("noop").mode("overwrite").save()
+    }
+
+    /** Runs q twice: the output checksums must match bit-for-bit. */
+    def reproducible(q: String): Unit = {
+      def run(n: Int) = time(s"$q (run $n)") {
+        checksum(graft.SparkEntry.queries(q)(spark, dir))
+      }
+      val (c1, c2) = (run(1), run(2))
+      require(c1 == c2,
+        s"$q must be reproducible across cluster runs: $c1 vs $c2")
+      println(s"[cluster] $q checksum stable across runs: $c1")
+    }
+
     // ---- 1: plain completion under real RPC shuffle ------------
     val t = graft.Tables(spark, dir)
     val cleanLabels = time("d_dedup_corpus (clean run)") {
@@ -112,99 +131,34 @@ object ClusterCheck {
     }
     println(s"[cluster] clean labels checksum: $cleanLabels")
     if (!core) {
-    time("d_minhash_lsh") {
-      graft.SparkEntry.queries("d_minhash_lsh")(spark, dir)
-        .write.format("noop").mode("overwrite").save()
-    }
-    time("d_incr_dedup") {
-      graft.SparkEntry.queries("d_incr_dedup")(spark, dir)
-        .write.format("noop").mode("overwrite").save()
-    }
-    // the broadcast-heavy embedding ops: centroids + seed codes must
-    // ship over real RPC to separate executor JVMs here, not the
-    // in-process shortcut local[N] takes
-    time("d_ann_topk") {
-      graft.SparkEntry.queries("d_ann_topk")(spark, dir)
-        .write.format("noop").mode("overwrite").save()
-    }
-    time("d_label_prop") {
-      graft.SparkEntry.queries("d_label_prop")(spark, dir)
-        .write.format("noop").mode("overwrite").save()
-    }
-    // the partition-ordered deterministic solvers (Classifier IRLS,
-    // Pca moment pass): their bit-reproducibility claim must hold
-    // under real RPC partitioning too, not just local[N] — run each
-    // twice and require identical output checksums
-    val cls1 = time("d_quality_classifier (run 1)") {
-      checksum(graft.SparkEntry.queries("d_quality_classifier")(spark, dir))
-    }
-    val cls2 = time("d_quality_classifier (run 2)") {
-      checksum(graft.SparkEntry.queries("d_quality_classifier")(spark, dir))
-    }
-    require(cls1 == cls2,
-      s"classifier training must be reproducible across cluster runs: $cls1 vs $cls2")
-    println(s"[cluster] classifier checksum stable across runs: $cls1")
-    val pca1 = time("d_embed_pca (run 1)") {
-      checksum(graft.SparkEntry.queries("d_embed_pca")(spark, dir))
-    }
-    val pca2 = time("d_embed_pca (run 2)") {
-      checksum(graft.SparkEntry.queries("d_embed_pca")(spark, dir))
-    }
-    require(pca1 == pca2,
-      s"pca fit must be reproducible across cluster runs: $pca1 vs $pca2")
-    println(s"[cluster] pca checksum stable across runs: $pca1")
-    // textrank's all-integer iteration claims order-independence —
-    // that must survive real RPC shuffle partitioning too
-    val tr1 = time("d_textrank (run 1)") {
-      checksum(graft.SparkEntry.queries("d_textrank")(spark, dir))
-    }
-    val tr2 = time("d_textrank (run 2)") {
-      checksum(graft.SparkEntry.queries("d_textrank")(spark, dir))
-    }
-    require(tr1 == tr2,
-      s"textrank must be reproducible across cluster runs: $tr1 vs $tr2")
-    println(s"[cluster] textrank checksum stable across runs: $tr1")
-    time("d_hard_negatives_ivf") {
-      graft.SparkEntry.queries("d_hard_negatives_ivf")(spark, dir)
-        .write.format("noop").mode("overwrite").save()
-    }
-    time("d_family_keep") {
-      graft.SparkEntry.queries("d_family_keep")(spark, dir)
-        .write.format("noop").mode("overwrite").save()
-    }
-    // perplexity bucketing: the persisted-LM lifecycle (persist →
-    // three consumers → release at the checkpoint) plus the
-    // all-integer scoring must both hold over real RPC partitioning
-    // — run twice, checksums must match bit-for-bit
-    val ppl1 = time("d_perplexity_bucket (run 1)") {
-      checksum(graft.SparkEntry.queries("d_perplexity_bucket")(spark, dir))
-    }
-    val ppl2 = time("d_perplexity_bucket (run 2)") {
-      checksum(graft.SparkEntry.queries("d_perplexity_bucket")(spark, dir))
-    }
-    require(ppl1 == ppl2,
-      s"perplexity buckets must be reproducible across cluster runs: $ppl1 vs $ppl2")
-    println(s"[cluster] perplexity checksum stable across runs: $ppl1")
-    time("d_margin_align_ivf") {
-      graft.SparkEntry.queries("d_margin_align_ivf")(spark, dir)
-        .write.format("noop").mode("overwrite").save()
-    }
-    // round-7 continuation ops: corpus drift's integer L1 claims
-    // order-independence, the decontam argmax is a struct MAX over
-    // RPC-partitioned partials, and the ledger composes the CC with
-    // four flag layers — each must checksum-match across runs
-    Seq("d_corpus_drift", "d_semantic_decontam", "d_curation_ledger")
-      .foreach { q =>
-        val c1 = time(s"$q (run 1)") {
-          checksum(graft.SparkEntry.queries(q)(spark, dir))
-        }
-        val c2 = time(s"$q (run 2)") {
-          checksum(graft.SparkEntry.queries(q)(spark, dir))
-        }
-        require(c1 == c2,
-          s"$q must be reproducible across cluster runs: $c1 vs $c2")
-        println(s"[cluster] $q checksum stable across runs: $c1")
-      }
+      noop("d_minhash_lsh")
+      noop("d_incr_dedup")
+      // the broadcast-heavy embedding ops: centroids + seed codes must
+      // ship over real RPC to separate executor JVMs here, not the
+      // in-process shortcut local[N] takes
+      noop("d_ann_topk")
+      noop("d_label_prop")
+      // the partition-ordered deterministic solvers (Classifier IRLS,
+      // Pca moment pass): their bit-reproducibility claim must hold
+      // under real RPC partitioning too, not just local[N]
+      reproducible("d_quality_classifier")
+      reproducible("d_embed_pca")
+      // textrank's all-integer iteration claims order-independence —
+      // that must survive real RPC shuffle partitioning too
+      reproducible("d_textrank")
+      noop("d_hard_negatives_ivf")
+      noop("d_family_keep")
+      // perplexity bucketing: the persisted-LM lifecycle (persist →
+      // three consumers → release at the checkpoint) plus the
+      // all-integer scoring must both hold over real RPC partitioning
+      reproducible("d_perplexity_bucket")
+      noop("d_margin_align_ivf")
+      // round-7 continuation ops: corpus drift's integer L1 claims
+      // order-independence, the decontam argmax is a struct MAX over
+      // RPC-partitioned partials, and the ledger composes the CC with
+      // four flag layers
+      Seq("d_corpus_drift", "d_semantic_decontam", "d_curation_ledger")
+        .foreach(reproducible)
     }
 
     // ---- 2+3: kill an executor mid-CC-loop, labels must match --

@@ -60,46 +60,7 @@ object ScaleCheck {
     spark.conf.set("spark.sql.shuffle.partitions",
       math.max(cpus, factor / 4).toString)
 
-    val t = graft.Tables(spark, sfDir)
-    val reps = spark.range(0, factor).select(col("id").as("rep"))
-
-    t.documents.crossJoin(reps)
-      .select(
-        (col("doc_id") + col("rep") * 10000000L).as("doc_id"),
-        concat_ws(" ", transform(split(col("text"), " "), (w, i) =>
-          when(i % tagEvery === 0,
-            concat(w, lit("r"), col("rep").cast("string"))).otherwise(w)))
-          .as("text"),
-        col("lang"), col("source"))
-      .withColumn("n_chars", length(col("text")).cast("long"))
-      .repartition(cpus * 4)
-      .write.mode(SaveMode.Overwrite).parquet(s"$workDir/documents.parquet")
-
-    // Replica embeddings get STRONG zero-mean hash noise, keyed per
-    // (vec_id, rep, dim) — ±1.0/dim against the corpus's unit norms,
-    // so EVERY pair of distinct blow-up vectors is noise-dominated
-    // (cosine ≈ 0). The old small positive-biased perturbation left
-    // replica cosines ≈ 0.75 (64-vector near-dup cliques, quadratic
-    // true pair set — the same planted-clique artifact as the text
-    // tags); and noise keyed only by (rep, dim) is worse still: the
-    // shared noise vector dominates every same-rep pair (cos ≈ 0.85,
-    // one 2000-vector ball per replica).
-    t.embeddings.crossJoin(reps)
-      .select(
-        (col("vec_id") + col("rep") * 10000000L).as("vec_id"),
-        transform(col("embedding"), (x, i) =>
-          x + (pmod(hash(col("vec_id"), col("rep"), i), lit(2001)) - lit(1000))
-            .cast("float") * lit(0.001f))
-          .as("embedding"),
-        col("label"))
-      // repartition: the blown-up frame descends from ONE small input
-      // split via a broadcast crossJoin — written as-is it is a single
-      // 40 MB parquet file = a single read split, and every embedding
-      // op downstream runs on ONE task (jstack'd). Real corpora have
-      // many files; give the sweep the same property.
-      .repartition(cpus * 4)
-      .write.mode(SaveMode.Overwrite).parquet(s"$workDir/embeddings.parquet")
-
+    blowUp(spark, sfDir, factor, workDir, tagEvery)
     val nDocs = spark.read.parquet(s"$workDir/documents.parquet").count()
     println(s"[scale] built ${factor}x blow-up: $nDocs docs at $workDir")
 
@@ -119,5 +80,57 @@ object ScaleCheck {
       }
     }
     spark.stop()
+  }
+
+  /** Replica r of a row keeps its id plus r · RepStride, so the
+    * replica id is recoverable as id / RepStride.
+    */
+  private[tools] val RepStride = 10000000L
+
+  /** Writes the `factor`× documents and embeddings blow-up of `sfDir`
+    * into `workDir` (the two tables the blow-up drives read).
+    */
+  private[tools] def blowUp(spark: org.apache.spark.sql.SparkSession,
+      sfDir: String, factor: Int, workDir: String, tagEvery: Int): Unit = {
+    val t = graft.Tables(spark, sfDir)
+    val parts = spark.sparkContext.defaultParallelism * 4
+    val reps = spark.range(0, factor).select(col("id").as("rep"))
+
+    t.documents.crossJoin(reps)
+      .select(
+        (col("doc_id") + col("rep") * RepStride).as("doc_id"),
+        concat_ws(" ", transform(split(col("text"), " "), (w, i) =>
+          when(i % tagEvery === 0,
+            concat(w, lit("r"), col("rep").cast("string"))).otherwise(w)))
+          .as("text"),
+        col("lang"), col("source"))
+      .withColumn("n_chars", length(col("text")).cast("long"))
+      .repartition(parts)
+      .write.mode(SaveMode.Overwrite).parquet(s"$workDir/documents.parquet")
+
+    // Replica embeddings get STRONG zero-mean hash noise, keyed per
+    // (vec_id, rep, dim) — ±1.0/dim against the corpus's unit norms,
+    // so EVERY pair of distinct blow-up vectors is noise-dominated
+    // (cosine ≈ 0). The old small positive-biased perturbation left
+    // replica cosines ≈ 0.75 (64-vector near-dup cliques, quadratic
+    // true pair set — the same planted-clique artifact as the text
+    // tags); and noise keyed only by (rep, dim) is worse still: the
+    // shared noise vector dominates every same-rep pair (cos ≈ 0.85,
+    // one 2000-vector ball per replica).
+    t.embeddings.crossJoin(reps)
+      .select(
+        (col("vec_id") + col("rep") * RepStride).as("vec_id"),
+        transform(col("embedding"), (x, i) =>
+          x + (pmod(hash(col("vec_id"), col("rep"), i), lit(2001)) - lit(1000))
+            .cast("float") * lit(0.001f))
+          .as("embedding"),
+        col("label"))
+      // repartition: the blown-up frame descends from ONE small input
+      // split via a broadcast crossJoin — written as-is it is a single
+      // 40 MB parquet file = a single read split, and every embedding
+      // op downstream runs on ONE task (jstack'd). Real corpora have
+      // many files; give the sweep the same property.
+      .repartition(parts)
+      .write.mode(SaveMode.Overwrite).parquet(s"$workDir/embeddings.parquet")
   }
 }

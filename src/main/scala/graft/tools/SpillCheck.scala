@@ -28,16 +28,6 @@ import org.apache.spark.sql.SparkSession
   */
 object SpillCheck {
 
-  private val AddOpens = Seq(
-    "java.base/java.lang", "java.base/java.lang.invoke",
-    "java.base/java.lang.reflect", "java.base/java.io",
-    "java.base/java.net", "java.base/java.nio",
-    "java.base/java.util", "java.base/java.util.concurrent",
-    "java.base/java.util.concurrent.atomic",
-    "java.base/sun.nio.ch", "java.base/sun.nio.cs",
-    "java.base/sun.security.action", "java.base/sun.util.calendar")
-    .map(p => s"--add-opens $p=ALL-UNNAMED").mkString(" ")
-
   def main(args: Array[String]): Unit = {
     require(args.nonEmpty,
       "usage: SpillCheck <blowUpDir> [shufflePartitions] [executors]")
@@ -57,7 +47,7 @@ object SpillCheck {
         .config("spark.executor.memory", "4g")
         .config("spark.sql.shuffle.partitions", parts)
         .config("spark.executor.extraClassPath", sys.props("java.class.path"))
-        .config("spark.executor.extraJavaOptions", AddOpens)
+        .config("spark.executor.extraJavaOptions", ClusterCheck.AddOpens)
         .config("spark.ui.enabled", "false"))
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

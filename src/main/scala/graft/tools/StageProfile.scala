@@ -41,11 +41,16 @@ object StageProfile {
           // does (scan / shuffle-read / shuffle-write volumes)
           val tm = info.taskMetrics
           val what = if (tm == null) "" else {
-            def mb(v: Long) = f"${v / 1e6}%.0fMB"
-            s" [in ${mb(tm.inputMetrics.bytesRead)}" +
-              s" sr ${mb(tm.shuffleReadMetrics.totalBytesRead)}" +
-              s" sw ${mb(tm.shuffleWriteMetrics.bytesWritten)}" +
-              s" spill ${mb(tm.memoryBytesSpilled + tm.diskBytesSpilled)}]"
+            // scaled per value: at sf0.1 most stages move well under
+            // a megabyte, which a fixed MB column rounds to 0
+            def size(v: Long) =
+              if (v >= 1000000L) f"${v / 1e6}%.1fMB"
+              else if (v >= 1000L) f"${v / 1e3}%.1fKB"
+              else s"${v}B"
+            s" [in ${size(tm.inputMetrics.bytesRead)}" +
+              s" sr ${size(tm.shuffleReadMetrics.totalBytesRead)}" +
+              s" sw ${size(tm.shuffleWriteMetrics.bytesWritten)}" +
+              s" spill ${size(tm.memoryBytesSpilled + tm.diskBytesSpilled)}]"
           }
           // SQL operator scopes (Exchange / WholeStageCodegen(n) /
           // ObjectHashAggregate...) — the readable answer to "what is

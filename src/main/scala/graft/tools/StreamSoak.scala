@@ -76,15 +76,12 @@ object StreamSoak {
       val inDocs = inMem.toDF().toDF("doc_id", "ts_us", "text", "embedding")
         .select(col("doc_id"), timestamp_micros(col("ts_us")).as("ts"),
           col("text"), col("embedding"))
-      val inQ = graft.streaming.StreamingIntake.intake(inDocs,
-          minQuality = 0.0, benchBloom = Some(bloom), maxOverlap = 0.5,
-          semBench = Some(art), semTauMicro = 900000L)
-        .writeStream.format("memory").queryName(s"soak_intake_$passN")
-        .outputMode("append").start()
-      (0 until 4).foreach { b =>
-        inMem.addData(feed.filter(_._1 % 4 == b).map(r =>
-          (r._1, BaseUs + b * 60000000L, r._3, r._4)).toSeq: _*)
-        inQ.processAllAvailable()
+      val inQ = StreamScale.memorySink(graft.streaming.StreamingIntake.intake(
+        inDocs, minQuality = 0.0, benchBloom = Some(bloom), maxOverlap = 0.5,
+        semBench = Some(art), semTauMicro = 900000L), s"soak_intake_$passN")
+      StreamScale.closedLoop("ssoak", inQ, inMem, 4) { b =>
+        feed.filter(_._1 % 4 == b).map(r =>
+          (r._1, BaseUs + b * 60000000L, r._3, r._4)).toSeq
       }
       inQ.stop()
       val intakeSig = sig(spark.table(s"soak_intake_$passN")
@@ -93,14 +90,10 @@ object StreamSoak {
 
       // ---- quality terciles
       val qMem = MemoryStream[(Long, String, String)]
-      val qQ = graft.streaming.StreamingQuality.bucketStream(
-          qMem.toDF().toDF("doc_id", "lang", "text"), qModel)
-        .writeStream.format("memory").queryName(s"soak_quality_$passN")
-        .outputMode("append").start()
-      (0 until 4).foreach { b =>
-        qMem.addData(feed.filter(_._1 % 4 == b)
-          .map(r => (r._1, r._2, r._3)).toSeq: _*)
-        qQ.processAllAvailable()
+      val qQ = StreamScale.memorySink(graft.streaming.StreamingQuality.bucketStream(
+        qMem.toDF().toDF("doc_id", "lang", "text"), qModel), s"soak_quality_$passN")
+      StreamScale.closedLoop("ssoak", qQ, qMem, 4) { b =>
+        feed.filter(_._1 % 4 == b).map(r => (r._1, r._2, r._3)).toSeq
       }
       qQ.stop()
       val qualitySig = sig(spark.table(s"soak_quality_$passN")
@@ -109,16 +102,13 @@ object StreamSoak {
       // ---- drift windows (three 1-hour windows + a far sentinel that
       // advances the watermark past them so all three CLOSE)
       val dMem = MemoryStream[(Long, Long, String)]
-      val dQ = graft.streaming.StreamingDrift.driftStream(
-          dMem.toDF().toDF("doc_id", "ts_us", "text")
-            .select(timestamp_micros(col("ts_us")).as("ts"), col("text")),
-          dModel)
-        .writeStream.format("memory").queryName(s"soak_drift_$passN")
-        .outputMode("append").start()
-      (0 until 4).foreach { b =>
-        dMem.addData(feed.filter(_._1 % 4 == b).map(r =>
-          (r._1, BaseUs + (r._1 % 3) * HourUs, r._3)).toSeq: _*)
-        dQ.processAllAvailable()
+      val dQ = StreamScale.memorySink(graft.streaming.StreamingDrift.driftStream(
+        dMem.toDF().toDF("doc_id", "ts_us", "text")
+          .select(timestamp_micros(col("ts_us")).as("ts"), col("text")),
+        dModel), s"soak_drift_$passN")
+      StreamScale.closedLoop("ssoak", dQ, dMem, 4) { b =>
+        feed.filter(_._1 % 4 == b).map(r =>
+          (r._1, BaseUs + (r._1 % 3) * HourUs, r._3)).toSeq
       }
       dMem.addData((-1L, BaseUs + 48L * HourUs, "sentinel flush"))
       dQ.processAllAvailable()

@@ -10,19 +10,26 @@ import org.apache.spark.sql.types.{TimestampNTZType, TimestampType}
   */
 class ArtifactMetaSpec extends SparkSpec {
 
-  test("schema cache keys on the session's parquet-inference conf") {
-    // written with parquet-hadoop directly: a Spark-written file
-    // carries its Spark schema in the footer, which wins over the conf
-    val path = Files.createTempDirectory("graft_ntz").resolve("t.parquet").toString
+  /** One-row parquet file with an int64 `ts` of the given logical
+    * timestamp type, written with parquet-hadoop directly: a
+    * Spark-written file carries its Spark schema in the footer, which
+    * wins over the reader confs under test.
+    */
+  private def writeTs(path: String, unit: String, value: Long): Unit = {
     val schema = org.apache.parquet.schema.MessageTypeParser.parseMessageType(
-      "message m { required int64 ts (TIMESTAMP(MICROS,false)); }")
+      s"message m { required int64 ts (TIMESTAMP($unit,false)); }")
     val w = org.apache.parquet.hadoop.example.ExampleParquetWriter
       .builder(new org.apache.hadoop.fs.Path(s"$path/part-0.parquet"))
       .withType(schema).withConf(spark.sparkContext.hadoopConfiguration)
       .build()
     try w.write(new org.apache.parquet.example.data.simple.SimpleGroupFactory(
-      schema).newGroup().append("ts", 1704164645000000L))
+      schema).newGroup().append("ts", value))
     finally w.close()
+  }
+
+  test("schema cache keys on the session's parquet-inference conf") {
+    val path = Files.createTempDirectory("graft_ntz").resolve("t.parquet").toString
+    writeTs(path, "MICROS", 1704164645000000L)
     val key = "spark.sql.parquet.inferTimestampNTZ.enabled"
     try {
       spark.conf.set(key, "true")
@@ -33,6 +40,21 @@ class ArtifactMetaSpec extends SparkSpec {
         .schema("ts").dataType == TimestampType,
         "a schema inferred under another conf must not be served")
     } finally spark.conf.unset(key)
+  }
+
+  test("Tables.events reads TIMESTAMP(NANOS) exactly and leaves the session conf as it was") {
+    val dir = Files.createTempDirectory("graft_nanos")
+    writeTs(dir.resolve("events.parquet").toString, "NANOS", 1704164645123456789L)
+    // a fresh session off the factory: isolated SQL conf, so no other
+    // suite's reads can have set anything on it
+    val s = spark.newSession()
+    val before = s.conf.getAll
+    val micros = Tables(s, dir.toString).events
+      .select(org.apache.spark.sql.functions.unix_micros(
+        org.apache.spark.sql.functions.col("ts")))
+      .head().getLong(0)
+    assert(micros == 1704164645123456L, "nanos truncate to the exact microsecond")
+    assert(s.conf.getAll == before, "reading events must not write session conf")
   }
 
   test("past the bound only the least-recently-used entry is evicted") {

@@ -277,8 +277,8 @@ class ExportJobSpec extends SparkSpec {
     assert(Files.exists(res.packagePath))
     assert(res.csvFiles == Seq("Tx_Curr_LineList_jdbcround.csv"))
 
-    // config plumbing: DB_URL selects the jdbc source, credentials land
-    // in the session conf
+    // config plumbing: DB_URL selects the jdbc source, credentials are
+    // parsed
     val cfg = graft.sources.ExportConfig.parse(
       s"""{"queries":{"A":"q_line_list"},
           "db_properties":{"DB_URL":"$url","DB_USER":"app","DB_PASS":"x"}}""")
@@ -288,17 +288,22 @@ class ExportJobSpec extends SparkSpec {
     // and the WHOLE ExportMain config flow against the database: a
     // config whose db_properties carries the url must produce the
     // same report rows as the parquet run (the parquet dir argument
-    // is ignored when DB_URL is set)
+    // is ignored when DB_URL is set). User APP: Derby resolves
+    // unqualified table names in the schema named after the user.
     val cfgPath = Files.createTempFile("jdbccfg", ".json")
     Files.writeString(cfgPath,
       s"""{"queries":{"Tx_Curr_LineList":"q_line_list"},
           "constants":{"Region":"R1","Woreda":"W1","Facility":"F1","HMISCode":"H1"},
           "window":{"eth_month":5,"eth_year":2016},
-          "db_properties":{"DB_URL":"$url"}}""")
+          "db_properties":{"DB_URL":"$url","DB_USER":"APP","DB_PASS":"x"}}""")
     val outJ = Files.createTempDirectory("graft_jdbc_main")
     val resJ = graft.sources.ExportMain.run(spark,
       Array(sf, outJ.toString, cfgPath.toString))
     assert(Files.exists(resJ.packagePath))
+    // the credentials held for that run only
+    Seq("graft.jdbc.user", "graft.jdbc.password").foreach { k =>
+      assert(!spark.conf.getAll.contains(k), s"$k left in the session conf")
+    }
     val outP = Files.createTempDirectory("graft_parq_main")
     Files.writeString(cfgPath,
       s"""{"queries":{"Tx_Curr_LineList":"q_line_list"},
