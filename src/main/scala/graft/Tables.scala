@@ -47,20 +47,39 @@ final case class Tables(spark: SparkSession, dir: String) {
     * `GraftSession` session sets it (the reader consults it again at
     * execution time, so it cannot be scoped to this call). Raw nanos
     * convert to a microsecond timestamp with exact integer arithmetic.
+    *
+    * Inside [[Tables.withEvents]] for this session and `dir` this is
+    * the scope's frame instead (an export package's pinned copy).
     */
-  def events: DataFrame = {
-    val raw = table("events")
-    raw.schema("ts").dataType match {
-      case org.apache.spark.sql.types.LongType =>
-        raw.withColumn("ts", timestamp_micros(expr("ts div 1000")))
-      case _ => raw
-    }
+  def events: DataFrame = Tables.scoped.value match {
+    case Some((s, d, frame)) if (s eq spark) && d == dir => frame
+    case _ =>
+      val raw = table("events")
+      raw.schema("ts").dataType match {
+        case org.apache.spark.sql.types.LongType =>
+          raw.withColumn("ts", timestamp_micros(expr("ts div 1000")))
+        case _ => raw
+      }
   }
   def documents: DataFrame = table("documents")
   def embeddings: DataFrame = table("embeddings")
 }
 
 object Tables {
+
+  private val scoped =
+    new scala.util.DynamicVariable[Option[(SparkSession, String, DataFrame)]](None)
+
+  /** Runs `body` with `Tables(spark, dir).events` returning `frame`:
+    * the export package's one `events` copy, so every report built in
+    * `body` plans over it (its partitioning included). Plans capture
+    * the frame when they are built, so only construction has to happen
+    * inside the scope. Other sessions and directories, and code
+    * outside the scope, read the table as usual.
+    */
+  def withEvents[T](spark: SparkSession, dir: String, frame: DataFrame)(
+      body: => T): T =
+    scoped.withValue(Some((spark, dir, frame)))(body)
 
   /** A parquet read whose footer schema comes from [[ArtifactMeta]]:
     * every `Tables(...)` accessor used to run a footer-inference DRIVER

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.{GraftQuery, Tables}
 import graft.functions.DateFns
@@ -338,43 +338,44 @@ object LineLists {
 
   private def ahdBuild(s: SparkSession, dir: String, end: String): DataFrame = {
       val t = Tables(s, dir)
-      val ev = t.events
-      val win = ev.filter(col("ts") <= lit(end))
+      val inWin = col("ts") <= lit(end)
       // "latest non-null attribute per client" — one per attribute
       // shard, ordered by follow-up date (the reference's dominant
       // ordering), one deliberately by the attribute itself
       // SCALE NOTE: the reference computes each extraction as its own
       // ROW_NUMBER CTE — 7 independent shuffles on the same key. The
-      // Spark-first form fuses every same-source extraction into ONE
-      // HashAggregate (conditional max/min over structs — max/min skip
-      // NULLs, so `max(when(type, struct(ts,id,value)))` IS
-      // "latest-where-type" with map-side partial aggregation): the
-      // shuffle moves |users| pre-reduced rows, not |events|, and the
-      // whole report needs 2 aggregations (windowed + unwindowed
-      // frames) instead of 7 window shuffles. Results are identical —
-      // the oracle above still mirrors the reference's CTE form.
-      def latestStruct(typ: String) =
-        max(when(col("event_type") === typ,
+      // Spark-first form fuses every extraction into ONE HashAggregate
+      // (conditional max/min over structs — max/min skip NULLs, so
+      // `max(when(type, struct(ts,id,value)))` IS "latest-where-type"
+      // with map-side partial aggregation): the report window is part
+      // of each windowed extraction's condition, so the windowed and
+      // unwindowed extractions share one pass and need no join. The
+      // shuffle moves |users| pre-reduced rows, not |events|, and on an
+      // export package's user-partitioned events (Tables.withEvents)
+      // there is none. Results are identical — the oracle above still
+      // mirrors the reference's CTE form.
+      def latestStruct(typ: String, cond: Column) =
+        max(when(col("event_type") === typ && cond,
           struct(col("ts"), col("event_id"), col("value"))))
-      val winAgg = win.groupBy("user_id").agg(
-        latestStruct("click").getField("value").as("click_val"),
-        latestStruct("view").getField("value").as("view_val"),
-        max(when(col("event_type") === "purchase",
-          struct(col("value"), col("event_id")))).getField("value").as("max_purchase_val"),
-        min(when(col("event_type") === "error", col("ts"))).as("first_err_ts"),
-        max(struct(col("ts"), col("event_id"), col("event_type"), col("value")))
-          .as("__latest"))
-      val evAgg = ev.groupBy("user_id").agg(
-        latestStruct("error").getField("value").as("err_val"),
-        min(when(col("event_type") === "signup", col("ts"))).as("signup_ts"))
-      val tx = winAgg
+      val tx = t.events.groupBy("user_id").agg(
+          latestStruct("click", inWin).getField("value").as("click_val"),
+          latestStruct("view", inWin).getField("value").as("view_val"),
+          max(when(col("event_type") === "purchase" && inWin,
+            struct(col("value"), col("event_id")))).getField("value").as("max_purchase_val"),
+          min(when(col("event_type") === "error" && inWin, col("ts"))).as("first_err_ts"),
+          max(when(inWin, struct(col("ts"), col("event_id"), col("event_type"), col("value"))))
+            .as("__latest"),
+          latestStruct("error", lit(true)).getField("value").as("err_val"),
+          min(when(col("event_type") === "signup", col("ts"))).as("signup_ts"))
+        // a client with no event in the window has no __latest, so no
+        // event_type: the cohort filter drops it, as the windowed CTE did
         .select(col("user_id"), col("click_val"), col("view_val"),
-          col("max_purchase_val"), col("first_err_ts"),
+          col("max_purchase_val"), col("first_err_ts"), col("err_val"),
+          col("signup_ts"),
           col("__latest.ts").as("ts"), col("__latest.event_type").as("event_type"))
         .filter(col("event_type").isin("view", "click", "purchase", "signup"))
         .filter(date_add(col("ts").cast("date"), 30) >= lit(end).cast("date"))
       tx.join(t.customer, col("user_id") === col("c_custkey"), "left")
-        .join(evAgg, Seq("user_id"), "left")
         .filter(col("event_type") =!= "error") // faithful final guard (redundant with the cohort, as in the reference)
         .select(col("user_id").as("patient_id"),
           date_format(col("ts"), "yyyy-MM-dd").as("followup_on"),
@@ -460,38 +461,36 @@ object LineLists {
 
   private def hvlBuild(s: SparkSession, dir: String, end: String): DataFrame = {
       val t = Tables(s, dir)
-      val ev = t.events
-      val p = ev.filter(col("event_type") === "purchase" && col("ts") <= lit(end))
-      // SCALE NOTE: each extraction is an aggregation (min/max over a
-      // (ts, event_id, …) struct — lexicographic = the CTE's ORDER BY;
-      // aggregates skip NULLs), not a ROW_NUMBER window: partial
-      // aggregation reduces each chain step to |users| rows BEFORE its
-      // shuffle. The oracle keeps the reference's ROW_NUMBER form.
-      val anchor = p.groupBy("user_id")
-        .agg(max(when(col("value") >= 200,
-          struct(col("ts"), col("event_id"), col("value")))).as("a"))
+      // SCALE NOTE: each extraction is a whole-partition window
+      // aggregate over the client's rows — min/max over a (ts, event_id,
+      // …) struct, lexicographic = the CTE's ORDER BY; aggregates skip
+      // NULLs, so `min(when(cond, struct))` IS "earliest-where-cond".
+      // A chained step reads the previous step's struct on the same
+      // row, so the whole chain needs the rows clustered by user_id
+      // once: one exchange on a plain scan, none on an export
+      // package's user-partitioned events (Tables.withEvents), where
+      // the final ORDER BY needs no exchange either. The oracle keeps
+      // the reference's ROW_NUMBER form.
+      val w = org.apache.spark.sql.expressions.Window.partitionBy("user_id")
+      def typ(name: String) = col("event_type") === name
+      val chain = t.events.filter(col("ts") <= lit(end))
+        .withColumn("a", max(when(typ("purchase") && col("value") >= 200,
+          struct(col("ts"), col("event_id"), col("value")))).over(w))
         .filter(col("a").isNotNull)
-        .select(col("user_id"), col("a.ts").as("a_ts"), col("a.value").as("a_val"))
-      // chained: earliest qualifying event INSIDE the window the
-      // anchor opens — the extraction depends on the prior extraction
-      val confirm = p.join(anchor, Seq("user_id")).filter(col("ts") > col("a_ts"))
-        .groupBy("user_id")
-        .agg(min(struct(col("ts"), col("event_id"), col("value"))).as("c"))
-        .select(col("user_id"), col("c.ts").as("c_ts"), col("c.value").as("c_val"))
-      val support = ev.filter(col("event_type") === "view" && col("ts") <= lit(end))
-        .join(anchor, Seq("user_id")).filter(col("ts") >= col("a_ts"))
-        .groupBy("user_id")
-        .agg(min(struct(col("ts"), col("event_id"))).as("s"))
-        .select(col("user_id"), col("s.ts").as("s_ts"))
-      val switchD = ev.filter(col("event_type") === "signup" && col("ts") <= lit(end))
-        .join(confirm, Seq("user_id")).filter(col("ts") >= col("c_ts"))
-        .groupBy("user_id")
-        .agg(min(struct(col("ts"), col("event_id"))).as("w"))
-        .select(col("user_id"), col("w.ts").as("w_ts"))
-      anchor
-        .join(confirm, Seq("user_id"), "left")
-        .join(support, Seq("user_id"), "left")
-        .join(switchD, Seq("user_id"), "left")
+        // chained: earliest qualifying event INSIDE the window the
+        // anchor opens — the extraction depends on the prior extraction
+        .withColumn("c", min(when(typ("purchase") && col("ts") > col("a.ts"),
+          struct(col("ts"), col("event_id"), col("value")))).over(w))
+        .withColumn("s", min(when(typ("view") && col("ts") >= col("a.ts"),
+          struct(col("ts"), col("event_id")))).over(w))
+        .withColumn("w", min(when(typ("signup") && col("c").isNotNull
+          && col("ts") >= col("c.ts"), struct(col("ts"), col("event_id")))).over(w))
+        // every row of a client carries the same extractions: keep one
+        .select(col("user_id"), col("a.ts").as("a_ts"), col("a.value").as("a_val"),
+          col("c.ts").as("c_ts"), col("c.value").as("c_val"),
+          col("s.ts").as("s_ts"), col("w.ts").as("w_ts"))
+        .dropDuplicates("user_id")
+      chain
         .join(t.customer, col("user_id") === col("c_custkey"), "left")
         .select(col("user_id"),
           col("a_val").as("anchor_measure"),

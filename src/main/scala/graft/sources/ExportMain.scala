@@ -67,6 +67,32 @@ object ExportMain {
     }
   }
 
+  /** The package's one `events` copy, range-partitioned on user_id
+    * into the session's `spark.sql.shuffle.partitions` and pinned. The
+    * 12 report queries all read events per client and end in ORDER BY
+    * client (export.py runs its 12 queries against the same warm
+    * MySQL — this is the Spark analog). RangePartitioning(user_id)
+    * covers both the clustering every per-client window and
+    * aggregation needs and the final sort's ordering, so reports built
+    * over it (inside [[Tables.withEvents]]) plan with no exchange on
+    * events, and every stage runs one task per partition. Pinned
+    * through the ledger one source at a time, keyed on the partition
+    * count too: a long-lived driver exporting from many sources holds
+    * only the latest, and a repeat export of the same source in the
+    * same session config skips the materializing count.
+    */
+  private[graft] def pinnedEvents(spark: org.apache.spark.sql.SparkSession,
+      sfDir: String): org.apache.spark.sql.DataFrame = {
+    val n = spark.conf.get("spark.sql.shuffle.partitions").toInt
+    SessionCaches.cached("export-events", s"$sfDir#$n", maxLive = 1) {
+      val byUser = Tables(spark, sfDir).events
+        .repartitionByRange(n, col("user_id"))
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      byUser.count()
+      Seq(byUser)
+    }.head
+  }
+
   private def runWith(spark: org.apache.spark.sql.SparkSession,
       args: Array[String], config: Option[ExportConfig], sfDir: String,
       outDir: String): ExportJob.Result = {
@@ -98,38 +124,31 @@ object ExportMain {
     println(s"[export] window ${Months(m - 1)} $y -> [$start, $end]")
 
     val t = Tables(spark, sfDir)
-    // the 12 report queries all re-read the fact tables; one cached
-    // scan serves every report in the package (export.py runs its 12
-    // queries against the same warm MySQL — this is the Spark analog).
-    // Pinned through the ledger one source at a time: a long-lived
-    // driver exporting from many sources holds only the latest, and a
-    // repeat export of the same source skips the materializing count
-    SessionCaches.cached("export-events", sfDir, maxLive = 1) {
-      val events = t.events.persist(
-        org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      events.count()
-      Seq(events)
-    }
-
+    val events = pinnedEvents(spark, sfDir)
+    // plans capture the pinned frame when they are built, so only the
+    // construction runs in the scope; ExportJob writes them in order
+    def pinned[T](build: => T): T = Tables.withEvents(spark, sfDir, events)(build)
     val queries: Map[String, org.apache.spark.sql.DataFrame] = config match {
       case Some(c) =>
         c.queries.map { case (tag, qname) =>
           // window-dependent reports run at the runtime window; the
           // rest are the registered (fixed-window, oracle-matched)
           // queries unchanged
-          val df = graft.operators.LineLists.asOf.get(qname) match {
+          val df = pinned(graft.operators.LineLists.asOf.get(qname) match {
             case Some(build) => build(spark, sfDir, end)
             case None => SparkEntry.queries.getOrElse(qname,
               throw new IllegalArgumentException(
                 s"config names unknown query '$qname' for tag '$tag'"))(spark, sfDir)
-          }
+          })
           tag -> df
         }.toMap
       case None =>
+        // the window keeps the scan's file order, as before the pin
         val windowed = t.events.filter(
           col("ts") >= start.toString && col("ts") < end.plusDays(1).toString)
         Map(
-          "Event_LineList" -> graft.operators.Relational.lineListAsOf(spark, sfDir, end),
+          "Event_LineList" -> pinned(
+            graft.operators.Relational.lineListAsOf(spark, sfDir, end)),
           "Event_Window" -> windowed)
     }
 

@@ -33,13 +33,16 @@ import org.apache.spark.sql.functions._
   * ~linear and the sweep measures PLAN scaling without the collision
   * floor — use this mode for linearity claims at big factors.
   *
-  * Usage: ScaleCheck <sfDir> <factor> <workDir> <query> [query ...]
+  * Usage: ScaleCheck <sfDir> <factor> <workDir> [query ...]
+  *
+  * With no query named it only builds the blow-up and prints its doc
+  * count (the input StreamScale's families read).
   */
 object ScaleCheck {
 
   def main(args: Array[String]): Unit = {
-    require(args.length >= 4,
-      "usage: ScaleCheck <sfDir> <factor> <workDir> <query> [query ...]")
+    require(args.length >= 3,
+      "usage: ScaleCheck <sfDir> <factor> <workDir> [query ...]")
     val Array(sfDir, factorS, workDir) = args.take(3)
     val factor = factorS.toInt
     val tagEvery = sys.env.getOrElse("SPARK_GRAFT_TAG_EVERY", "4").toInt

@@ -422,7 +422,11 @@ private final class StreamFamilies(spark: SparkSession) {
     *
     * Fitting on the streamed corpus itself (the default) makes the
     * output distribution a built-in sanity check — per-language
-    * terciles, so ~1/3 per bucket. A fitDir that differs from the
+    * terciles, so ~1/3 per bucket. Each cut is the smallest score
+    * whose cumulative count reaches its rank, so for a language of n
+    * docs head ≥ ⌈n/3⌉ and head + middle ≥ ⌈2n/3⌉ exactly; ties at a
+    * cut only move docs into the lower bucket, so middle and tail
+    * have no floor of their own. A fitDir that differs from the
     * stream (e.g. fit sf0.1, stream a blow-up whose replicas carry
     * injected tag tokens) legitimately routes out-of-distribution
     * docs to tail — that's the filter working, not a bug (measured:
@@ -447,12 +451,22 @@ private final class StreamFamilies(spark: SparkSession) {
         .collect().map(r => (r.getLong(0), r.getString(1), r.getString(2))).toSeq
     }.secs
     val out = spark.table("qstream_out")
-    val total = out.count()
-    val dist = out.groupBy("bucket").count().collect()
-      .map(r => s"${r.getString(0)}=${r.getLong(1)}").sorted.mkString(" ")
+    val byLang = out.groupBy("lang", "bucket").count().collect()
+      .map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap
+    val total = byLang.values.sum
+    val dist = byLang.groupMapReduce(_._1._2)(_._2)(_ + _)
+      .map { case (b, c) => s"$b=$c" }.toSeq.sorted.mkString(" ")
     query.stop()
     println(f"[qstream] $total docs bucketed in $secs%.1f s" +
       f" (${total / secs}%.0f docs/s/$cores-core): $dist")
+    require(total == nDocs, s"$total of $nDocs streamed docs bucketed")
+    if (fitDir == dir) byLang.keys.map(_._1).foreach { lang =>
+      def c(b: String) = byLang.getOrElse((lang, b), 0L)
+      val n = c("head") + c("middle") + c("tail")
+      require(c("head") >= (n + 2) / 3 && c("head") + c("middle") >= (2 * n + 2) / 3,
+        s"$lang: head=${c("head")} middle=${c("middle")} tail=${c("tail")}" +
+          " breaks its own terciles")
+    }
   }
 
   /** The streaming SEMANTIC decontamination gate (the quality pattern

@@ -186,17 +186,54 @@ class ExportJobSpec extends SparkSpec {
     }
     SessionCaches.reset("export-events")
     val a1 = export(sf)
-    assert(Tables(spark, sf).events.storageLevel != StorageLevel.NONE)
+    // the live entry's frame (a ledger hit: nothing is rebuilt)
+    val pinA = graft.sources.ExportMain.pinnedEvents(spark, sf)
+    assert(pinA.storageLevel != StorageLevel.NONE)
     val b = export(sfB)
     assert(SessionCaches.liveCount("export-events") == 1)
-    assert(Tables(spark, sf).events.storageLevel == StorageLevel.NONE,
+    assert(pinA.storageLevel == StorageLevel.NONE,
       "the previous source's events are released")
-    assert(Tables(spark, sfB).events.storageLevel != StorageLevel.NONE)
+    assert(graft.sources.ExportMain.pinnedEvents(spark, sfB).storageLevel != StorageLevel.NONE)
     val a2 = export(sf)
     assert(SessionCaches.liveCount("export-events") == 1)
+    assert(pinA.storageLevel != StorageLevel.NONE, "A is pinned again")
     assert(csvs(a1).size == 12 && csvs(a1) == csvs(a2))
     assert(csvs(b).size == 12 && csvs(b) != csvs(a1))
     SessionCaches.reset("export-events")
+  }
+
+  test("the package pin changes plans, not bytes: pinned and unpinned reports write identical CSVs") {
+    val cfgPath = java.nio.file.Paths.get("config/export_config.json")
+    val cfg = graft.sources.ExportConfig.load(cfgPath)
+    // the inner zip's CSVs as raw bytes, by name (the zip itself is
+    // not compared: its entry times differ from run to run)
+    def csvBytes(res: ExportJob.Result): Map[String, Seq[Byte]] = {
+      val zf = new ZipFile(res.packagePath.toFile)
+      val tmpInner = Files.createTempFile("inner", ".zip")
+      Files.copy(zf.getInputStream(zf.getEntry(res.innerZip)), tmpInner,
+        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+      val inner = new ZipFile(tmpInner.toFile)
+      try inner.entries().asScala.map(e =>
+        e.getName -> inner.getInputStream(e).readAllBytes().toSeq).toMap
+      finally { inner.close(); zf.close() }
+    }
+    val pinned = graft.sources.ExportMain.run(spark,
+      Array(sf, Files.createTempDirectory("graft_pinned").toString, cfgPath.toString))
+    // the same 12 report frames, built outside Tables.withEvents, so
+    // every one plans over the parquet scan with its own exchanges
+    val (_, end) = graft.functions.EthiopianCalendar.reportWindow(
+      cfg.ethMonth.get, cfg.ethYear.get)
+    val unpinned = cfg.queries.map { case (tag, q) =>
+      tag -> graft.operators.LineLists.asOf.get(q)
+        .map(_(spark, sf, end)).getOrElse(SparkEntry.queries(q)(spark, sf))
+    }.toMap
+    val plain = ExportJob.run(spark, unpinned, cfg.constants,
+      Files.createTempDirectory("graft_unpinned"), pinned.innerZip.stripSuffix(".zip"))
+    val (a, b) = (csvBytes(pinned), csvBytes(plain))
+    assert(a.size == 12 && a.keySet == b.keySet)
+    a.foreach { case (name, bytes) =>
+      assert(bytes == b(name), s"$name differs between the pinned and unpinned plans")
+    }
   }
 
   test("half-specified config window fails loudly, not with a bare NoSuchElement") {

@@ -94,6 +94,75 @@ class PlanAuditSpec extends SparkSpec {
     assert(p.contains("partial_"), p)
   }
 
+  /** Every node of a finalized plan: through the adaptive wrapper,
+    * query stages and reused exchanges, but not into a cached
+    * relation's own plan (that ran when the frame was pinned).
+    */
+  private def planNodes(
+      p: org.apache.spark.sql.execution.SparkPlan): Seq[org.apache.spark.sql.execution.SparkPlan] = {
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
+    p match {
+      case a: AdaptiveSparkPlanExec => planNodes(a.executedPlan)
+      case q: QueryStageExec => q +: planNodes(q.plan)
+      case r: ReusedExchangeExec => r +: planNodes(r.child)
+      case _ => p +: p.children.flatMap(planNodes)
+    }
+  }
+
+  private def finalPlan(df: org.apache.spark.sql.DataFrame) = {
+    df.collect() // finalize AQE for THIS execution
+    df.queryExecution.executedPlan
+  }
+
+  test("line-list reports over an export package's events shuffle nothing and keep their ORDER BY") {
+    import org.apache.spark.sql.execution._
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    val reports = Seq("q_ll_eligible", "q_ll_threshold", "q_ll_course", "q_pivot_agg",
+      "q_ll_hvl", "q_ll_dual_latest", "q_line_list", "q_ll_ahd")
+    val events = graft.sources.ExportMain.pinnedEvents(spark, sf)
+    // plans capture the frame at build time, as ExportMain's do
+    val built = Tables.withEvents(spark, sf, events) {
+      reports.map(n => n -> SparkEntry.queries(n)(spark, sf))
+    }
+    built.foreach { case (name, df) =>
+      val plan = finalPlan(df)
+      val shuffles = planNodes(plan).collect { case e: ShuffleExchangeExec => e }
+      assert(shuffles.isEmpty, s"$name shuffles inside the package:\n$plan")
+      // the ORDER BY still holds without a sort exchange: a global
+      // Sort at the top over the range-partitioned rows, or, where
+      // Spark drops that Sort as redundant (RemoveRedundantSorts), a
+      // root whose ordering and partitioning already deliver it
+      val order = df.queryExecution.optimizedPlan.collectFirst {
+        case s: org.apache.spark.sql.catalyst.plans.logical.Sort if s.global => s.order
+      }.getOrElse(fail(s"$name has no ORDER BY"))
+      // pre-order: the first node that is not a wrapper is the root
+      val top = planNodes(plan).find {
+        case _: adaptive.QueryStageExec | _: WholeStageCodegenExec | _: InputAdapter => false
+        case _ => true
+      }.get
+      val sorted = top match {
+        case s: SortExec => s.global
+        case _ => org.apache.spark.sql.catalyst.expressions.SortOrder
+            .orderingSatisfies(top.outputOrdering, order) &&
+          top.outputPartitioning.satisfies(
+            org.apache.spark.sql.catalyst.plans.physical.OrderedDistribution(order))
+      }
+      assert(sorted, s"$name lost its ORDER BY:\n$plan")
+    }
+    // outside the scope the same builder reads the parquet scan: the
+    // HVL chain clusters by user_id once, for all four extractions
+    val plan = finalPlan(SparkEntry.queries("q_ll_hvl")(spark, sf))
+    val byUser = planNodes(plan).collect {
+      case e: ShuffleExchangeExec if (e.outputPartitioning match {
+        case h: org.apache.spark.sql.catalyst.plans.physical.HashPartitioning =>
+          h.expressions.map(_.toString).exists(_.startsWith("user_id"))
+        case _ => false
+      }) => e
+    }
+    assert(byUser.size == 1, s"q_ll_hvl unpinned: ${byUser.size} user_id shuffles:\n$plan")
+  }
+
   test("registered ANN/near-dup operators generate candidates via equi-join, not nested loop") {
     // the scale paths must never probe×corpus: no BroadcastNestedLoopJoin
     // and no CartesianProduct anywhere in the registered plans (the IVF
