@@ -349,7 +349,7 @@ object LlmOps {
 
   private val fingerprintQ = GraftQuery(
     "d_fingerprint",
-    None, // xxhash64-based winnowing has no SQL twin; see TextAnalysisSpec
+    None, // xxhash64-based winnowing has no SQL twin; see FingerprintKernelSpec
     (s, dir) => Tables(s, dir).documents
       // no orderBy: rows-only, and the sort's range sampling would
       // run the narrow fingerprint kernel twice over the corpus

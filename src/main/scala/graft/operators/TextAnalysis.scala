@@ -365,8 +365,10 @@ object TextAnalysis {
     */
   /** Catalyst's internal bloom-membership test as a Column (Spark
     * uses BloomFilterMightContain for runtime join filters; no SQL
-    * registration) — shared by the batch op and the streaming intake
-    * gate so both test the SAME filter binary identically.
+    * registration) — shared by the batch bloom legs. The streaming
+    * intake gate's kernel ([[graft.plans.native.FingerprintOverlap]])
+    * reads the same filter binary the same way (BloomFilter.readFrom,
+    * mightContainLong).
     */
   private[graft] def bloomMightContain(bf: Column, v: Column): Column = {
     import org.apache.spark.sql.graftshim.GraftShim.{column, expression}

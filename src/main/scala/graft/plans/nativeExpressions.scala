@@ -333,50 +333,92 @@ object NativeImpl {
   /** See [[native.WinnowingFingerprints]]. */
   def winnowing(text: org.apache.spark.unsafe.types.UTF8String,
       k: Int, w: Int): ArrayData = {
+    val buf = winnowBuffer(text, k)
+    val n = winnowInto(text, k, w, buf)
+    UnsafeArrayData.fromPrimitiveArray(buf,
+      org.apache.spark.unsafe.Platform.LONG_ARRAY_OFFSET, n, 8)
+  }
+
+  /** See [[native.FingerprintOverlap]]: the share of the distinct
+    * winnowing minima the bloom may contain, from the primitive minima
+    * directly (no ArrayData, no per-element predicate).
+    */
+  def fpOverlap(text: org.apache.spark.unsafe.types.UTF8String,
+      bloom: org.apache.spark.util.sketch.BloomFilter, k: Int, w: Int): Double = {
+    val buf = winnowBuffer(text, k)
+    val n = winnowInto(text, k, w, buf)
+    var hits = 0
+    var i = 0
+    while (i < n) { if (bloom.mightContainLong(buf(i))) hits += 1; i += 1 }
+    hits.toDouble / math.max(n, 1).toDouble
+  }
+
+  /** One slot per char k-gram (at least one): the only array
+    * [[winnowInto]] needs.
+    */
+  private def winnowBuffer(text: org.apache.spark.unsafe.types.UTF8String,
+      k: Int): Array[Long] =
+    new Array[Long](math.max(text.numChars() - (k - 1), 1))
+
+  /** Writes the distinct winnowing minima, ascending (signed), to the
+    * prefix of `h` and returns their count. The window minima
+    * overwrite the k-gram hashes they are read from.
+    */
+  private def winnowInto(text: org.apache.spark.unsafe.types.UTF8String,
+      k: Int, w: Int, h: Array[Long]): Int = {
     val nChars = text.numChars()
-    val nGrams = math.max(nChars - (k - 1), 1)
+    val nGrams = h.length
     // char→byte offset table in ONE pass: substringSQL per k-gram
-    // rescans from byte 0 to find char boundaries (O(n) per call,
-    // O(n²) per doc — measured as the contamination hot spot);
-    // hashing the byte range directly is O(n) total and hashes the
-    // exact same bytes, so fingerprints are bit-identical.
+    // rescans from byte 0 to find char boundaries (O(n²) per doc);
+    // hashing each k-gram's byte range directly is O(n) total and
+    // hashes the exact same bytes
     val base = text.getBaseObject
     val off = text.getBaseOffset
     val nBytes = text.numBytes()
     val offs = new Array[Int](nChars + 1)
-    var c = 0
     var b = 0
+    var i = 0
     while (b < nBytes) {
-      offs(c) = b
-      c += 1
+      offs(i) = b
+      i += 1
       b += org.apache.spark.unsafe.types.UTF8String.numBytesForFirstByte(
         org.apache.spark.unsafe.Platform.getByte(base, off + b))
     }
-    offs(c) = nBytes
-    val hashes = new Array[Long](nGrams)
-    var i = 0
+    offs(i) = nBytes
+    i = 0
     while (i < nGrams) {
       val endChar = math.min(i + k, nChars)
+      // i >= nChars only for the empty text: one hash of zero bytes
       val startByte = if (i < nChars) offs(i) else nBytes
-      hashes(i) = XXH64.hashUnsafeBytes(base, off + startByte,
+      h(i) = XXH64.hashUnsafeBytes(base, off + startByte,
         offs(endChar) - startByte, 42L)
       i += 1
     }
+    // sliding minimum: rescan a window only when its minimum slides
+    // out, otherwise compare the one hash that slid in (O(n) expected
+    // on hash values). Consecutive windows sharing a minimum emit it
+    // once. Window i's minimum sits at index >= i and is read before
+    // slot c <= i is written, so the minima overwrite the hashes.
     val nWin = math.max(nGrams - (w - 1), 1)
-    val mins = new java.util.TreeSet[java.lang.Long]()
+    var minPos = -1
+    var c = 0
     i = 0
     while (i < nWin) {
-      var m = hashes(i)
-      var j = i + 1
       val end = math.min(i + w, nGrams)
-      while (j < end) { if (hashes(j) < m) m = hashes(j); j += 1 }
-      mins.add(m)
+      if (minPos < i) {
+        minPos = i
+        var j = i + 1
+        while (j < end) { if (h(j) <= h(minPos)) minPos = j; j += 1 }
+      } else if (h(end - 1) <= h(minPos)) minPos = end - 1
+      val m = h(minPos)
+      if (c == 0 || h(c - 1) != m) { h(c) = m; c += 1 }
       i += 1
     }
-    val out = new Array[Long](mins.size())
-    val it = mins.iterator(); var x = 0
-    while (it.hasNext) { out(x) = it.next(); x += 1 }
-    new GenericArrayData(out)
+    java.util.Arrays.sort(h, 0, c)
+    var d = if (c == 0) 0 else 1
+    i = 1
+    while (i < c) { if (h(i) != h(d - 1)) { h(d) = h(i); d += 1 }; i += 1 }
+    d
   }
 
   /** See [[native.MinHashSigBuckets]]: the minhash signature AND its
@@ -980,11 +1022,12 @@ object native {
 
   /** Winnowing fingerprints (Schleimer/Wilkerson/Aiken, SIGMOD'03) in
     * one pass over the text: hash every char k-gram, take the min of
-    * each sliding window of w hashes, return the distinct mins sorted.
-    * (The HOF formulation re-evaluates the k-gram array per window —
-    * O(n²) interpreted; this is O(n·w) primitive.) Codegen calls the
-    * static impl (NativeImpl.winnowing) — same rationale as
-    * [[WordShingles]].
+    * each sliding window of w hashes, return the distinct mins sorted
+    * (signed ascending). The minima live in one primitive long[] that
+    * is sorted and de-duplicated in place — no boxed set. (The HOF
+    * formulation re-evaluates the k-gram array per window — O(n²)
+    * interpreted.) Codegen calls the static impl (NativeImpl.winnowing)
+    * — same rationale as [[WordShingles]].
     */
   case class WinnowingFingerprints(child: Expression, k: Int, w: Int)
       extends UnaryExpression {
@@ -1000,6 +1043,70 @@ object native {
 
     override protected def withNewChildInternal(c: Expression): WinnowingFingerprints =
       copy(child = c)
+  }
+
+  /** The decontamination gate's ratio in one kernel: of a text's
+    * distinct winnowing minima, the share the benchmark bloom may
+    * contain — hits ÷ max(minima, 1), the value of
+    * `size(filter(winnowing, might_contain)) / greatest(size, 1)`
+    * without the array or the lambda (a higher-order filter is
+    * CodegenFallback and keeps its Filter/Project out of whole-stage
+    * codegen). The bloom must be foldable: like Spark's
+    * BloomFilterMightContain it is deserialized once per expression
+    * instance and referenced from the generated code. Null text or a
+    * null bloom gives null.
+    */
+  case class FingerprintOverlap(left: Expression, right: Expression,
+      k: Int, w: Int) extends BinaryExpression {
+    override def dataType: DataType = DoubleType
+    override def nullable: Boolean = true
+
+    override def checkInputDataTypes()
+        : org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
+      import org.apache.spark.sql.catalyst.analysis.TypeCheckResult._
+      if (!left.dataType.isInstanceOf[StringType])
+        TypeCheckFailure(s"fp_overlap text must be a string, not ${left.dataType}")
+      else if (right.dataType != BinaryType || !right.foldable)
+        TypeCheckFailure("fp_overlap bloom must be a constant binary")
+      else TypeCheckSuccess
+    }
+
+    @transient private lazy val bloom: org.apache.spark.util.sketch.BloomFilter = {
+      val bytes = right.eval().asInstanceOf[Array[Byte]]
+      if (bytes == null) null
+      else org.apache.spark.util.sketch.BloomFilter.readFrom(bytes)
+    }
+
+    override def eval(input: InternalRow): Any =
+      if (bloom == null) null
+      else {
+        val t = left.eval(input)
+        if (t == null) null
+        else NativeImpl.fpOverlap(
+          t.asInstanceOf[org.apache.spark.unsafe.types.UTF8String], bloom, k, w)
+      }
+
+    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+      if (bloom == null) {
+        ev.copy(isNull = org.apache.spark.sql.catalyst.expressions.codegen.TrueLiteral,
+          value = org.apache.spark.sql.catalyst.expressions.codegen.JavaCode
+            .defaultLiteral(dataType))
+      } else {
+        val bf = ctx.addReferenceObj("fpBloom", bloom,
+          classOf[org.apache.spark.util.sketch.BloomFilter].getName)
+        val t = left.genCode(ctx)
+        ev.copy(code = code"""
+          |${t.code}
+          |boolean ${ev.isNull} = ${t.isNull};
+          |double ${ev.value} = 0.0;
+          |if (!${ev.isNull}) {
+          |  ${ev.value} = graft.plans.NativeImpl.fpOverlap(${t.value}, $bf, $k, $w);
+          |}""".stripMargin)
+      }
+
+    override protected def withNewChildrenInternal(
+        newLeft: Expression, newRight: Expression): FingerprintOverlap =
+      copy(left = newLeft, right = newRight)
   }
 
   /** Non-overlapping occurrence count of a literal in a string —
@@ -1631,6 +1738,9 @@ object native {
 
   def winnowing(text: Column, k: Int, w: Int): Column =
     column(WinnowingFingerprints(expression(text), k, w))
+
+  def fpOverlap(text: Column, bloom: Column, k: Int, w: Int): Column =
+    column(FingerprintOverlap(expression(text), expression(bloom), k, w))
 
   def wordShingles(text: Column, k: Int): Column =
     column(WordShingles(expression(text), k))

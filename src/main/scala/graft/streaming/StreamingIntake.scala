@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.functions.TextFns
 import graft.operators.TextAnalysis
@@ -21,10 +21,13 @@ import graft.operators.TextAnalysis
   * ([[graft.operators.TextAnalysis.benchmarkBloomBytes]] — the
   * StreamingQuality model rule: a fixed artifact ships to every
   * worker) and inlined as a literal; each arriving doc's winnowing
-  * fingerprints are membership-tested per row (a higher-order filter
-  * over the ≤len/w fingerprint array — no explode, no aggregation, no
-  * state), and docs whose maybe-overlap ratio exceeds `maxOverlap`
-  * are rejected before they can enter the corpus. One-sided error,
+  * minima are membership-tested per row by one native kernel
+  * ([[graft.plans.native.FingerprintOverlap]]: the minima stay a
+  * primitive array, the bloom is deserialized once per expression, and
+  * the gate's Filter and Project stay in whole-stage codegen — no
+  * explode, no aggregation, no state), and docs whose maybe-overlap
+  * ratio exceeds `maxOverlap` are rejected before they can enter the
+  * corpus. One-sided error,
   * inherited from the bloom: a contaminated doc is NEVER admitted;
   * ~1% of clean docs may be over-rejected at the filter's designed FP
   * rate — the right side of that trade for eval hygiene.
@@ -39,23 +42,6 @@ import graft.operators.TextAnalysis
   */
 object StreamingIntake {
 
-  /** Per-row maybe-overlap ratio of the winnowing fingerprints
-    * against an inlined benchmark bloom — shared by the stream and
-    * the batch twin so the gate is identical by construction.
-    */
-  private def contamRatio(text: Column, bfBytes: Array[Byte],
-      fpK: Int, fpW: Int): Column = {
-    import org.apache.spark.sql.graftshim.GraftShim.column
-    import org.apache.spark.sql.catalyst.expressions.Literal
-    val bfLit = column(Literal.create(bfBytes,
-      org.apache.spark.sql.types.BinaryType))
-    val fps = graft.plans.native.winnowing(text, fpK, fpW)
-    val hits = size(filter(fps,
-      fp => TextAnalysis.bloomMightContain(bfLit, fp)))
-    // a doc too short to fingerprint cannot match the benchmark
-    hits.cast("double") / greatest(size(fps), lit(1)).cast("double")
-  }
-
   private def prepared(docs: DataFrame, minQuality: Double,
       benchBloom: Option[Array[Byte]], maxOverlap: Double,
       fpK: Int, fpW: Int,
@@ -67,9 +53,12 @@ object StreamingIntake {
         ++ TextAnalysis.quality(col("text")): _*)
       .filter(col("quality_score") >= minQuality)
     val gated = benchBloom match {
+      // the per-row maybe-overlap ratio against the inlined bloom:
+      // hits ÷ max(distinct winnowing minima, 1), one codegen'd kernel
+      // call per evaluation, shared by the stream and the batch twin
       case Some(bytes) => q
         .withColumn("contam_ratio",
-          round(contamRatio(col("text"), bytes, fpK, fpW), 6))
+          round(graft.plans.native.fpOverlap(col("text"), lit(bytes), fpK, fpW), 6))
         .filter(col("contam_ratio") <= maxOverlap)
       case None => q
     }

@@ -15,9 +15,11 @@ class NativeCodegenSpec extends SparkSpec {
 
   private def hotDf = {
     import spark.implicits._
-    Seq(
+    // an RDD source: over a local Seq the optimizer folds the whole
+    // projection into a LocalRelation and nothing is generated at all
+    spark.sparkContext.parallelize(Seq(
       ("alpha beta gamma delta epsilon zeta", Array(0.1f, -0.4f, 0.9f, 0.2f)),
-      ("one two three four five six seven eight", Array(-1.0f, 0.5f, 0.25f, -0.75f)))
+      ("one two three four five six seven eight", Array(-1.0f, 0.5f, 0.25f, -0.75f))), 1)
       .toDF("text", "vec")
       .select(
         native.minhashSig(split(col("text"), " "), 8, P, as, bs).as("mh"),
@@ -27,6 +29,7 @@ class NativeCodegenSpec extends SparkSpec {
         native.wordNgrams(col("text"), 2).as("wn"),
         native.intraDedupText(col("text"), 2).as("idd"),
         native.winnowing(col("text"), 5, 4).as("wf"),
+        native.fpOverlap(col("text"), lit(hotBloom), 5, 4).as("fo"),
         native.literalCount(col("text"), "e").as("lc"),
         native.sharedGramCount(col("text"), col("text"), 5).as("sg"),
         native.regexpCount(col("text"), "[aeiou]+").as("rc"),
@@ -47,6 +50,18 @@ class NativeCodegenSpec extends SparkSpec {
           Array(0, 0, 1), 4, 1, 2).as("icc"),
         native.benchArgmax(col("vec"), lit(7L), icsCents,
           Array(1L, 7L, 9L), 4).as("ba"))
+  }
+
+  // a bloom over one hot text's winnowing minima: fpOverlap is 1.0 on
+  // that row and a partial or zero share on the other
+  private lazy val hotBloom: Array[Byte] = {
+    val bf = org.apache.spark.util.sketch.BloomFilter.create(64, 4096)
+    graft.plans.NativeImpl.winnowing(org.apache.spark.unsafe.types.UTF8String
+      .fromString("alpha beta gamma delta epsilon zeta"), 5, 4)
+      .toLongArray().foreach(x => bf.putLong(x))
+    val out = new java.io.ByteArrayOutputStream()
+    bf.writeTo(out)
+    out.toByteArray
   }
 
   // 3 centroids × dim 4, row-major (exhaustive + coarse IvfCellSelect)
@@ -77,8 +92,10 @@ class NativeCodegenSpec extends SparkSpec {
   test("minhash/simhash/hyperplane/shingles/winnowing generate code — no fallback marker") {
     val plan = hotDf.queryExecution.executedPlan
     val code = org.apache.spark.sql.execution.debug.codegenString(plan)
-    assert(code.contains("WholeStageCodegen"), code.take(500))
+    assert(code.contains("Found 1 WholeStageCodegen subtrees"), code.take(500))
     assert(!code.contains("CodegenFallback"), code.take(2000))
+    Seq("wordShingles", "wordNgrams", "intraDedup", "winnowing", "fpOverlap")
+      .foreach(f => assert(code.contains(s"graft.plans.NativeImpl.$f("), f))
   }
 
   test("byte-scan literalCount matches the replace-length construction on edge inputs") {
@@ -155,11 +172,13 @@ class NativeCodegenSpec extends SparkSpec {
     spark.conf.set("spark.sql.codegen.fallback", "false")
     try {
       val rows = hotDf.collect()
+      spark.conf.set("spark.sql.codegen.wholeStage", "false")
       spark.conf.set("spark.sql.codegen.factoryMode", "NO_CODEGEN")
       val interpreted = hotDf.collect()
       assert(rows.map(_.toString).toSeq === interpreted.map(_.toString).toSeq)
     } finally {
       spark.conf.set("spark.sql.codegen.fallback", "true")
+      spark.conf.unset("spark.sql.codegen.wholeStage")
       spark.conf.unset("spark.sql.codegen.factoryMode")
     }
   }

@@ -407,6 +407,74 @@ class PlanAuditSpec extends SparkSpec {
     assert(finalPlan.contains("*(1)"), p) // codegen span
   }
 
+  test("the intake's decontamination gate runs inside whole-stage codegen, batch and streaming") {
+    import org.apache.spark.sql.execution._
+    import org.apache.spark.sql.functions._
+    import graft.streaming.StreamingIntake
+    val docs = Tables(spark, sf).documents
+    val feed = docs.select(col("doc_id"),
+      timestamp_seconds(lit(1704067200L) + col("doc_id")).as("ts"), col("text"))
+    val bloom = graft.operators.TextAnalysis.benchmarkBloomBytes(
+      docs.filter(pmod(xxhash64(col("doc_id"), lit(3L)), lit(50L)) === 0))
+    // the Filter and the Project that evaluate the fingerprint gate
+    // must both sit in a codegen stage (between a WholeStageCodegenExec
+    // and its InputAdapters) with no CodegenFallback expression: one
+    // interpreted expression takes the whole operator out of codegen
+    def fingerprinting(e: org.apache.spark.sql.catalyst.expressions.Expression) =
+      e.exists {
+        case _: graft.plans.native.WinnowingFingerprints |
+             _: graft.plans.native.FingerprintOverlap => true
+        case _ => false
+      }
+    def check(plan: SparkPlan, what: String): Unit = {
+      val nodes = planNodes(plan)
+      def stage(p: SparkPlan): Seq[SparkPlan] = p match {
+        case _: InputAdapter => Nil
+        case _ => p +: p.children.flatMap(stage)
+      }
+      val codegen = nodes.collect { case w: WholeStageCodegenExec => stage(w.child) }
+        .flatten.toSet
+      val gate = nodes.filter {
+        case p @ (_: FilterExec | _: ProjectExec) => p.expressions.exists(fingerprinting)
+        case _ => false
+      }
+      assert(gate.exists(_.isInstanceOf[FilterExec]) &&
+        gate.exists(_.isInstanceOf[ProjectExec]), s"$what: no gate Filter/Project:\n$plan")
+      gate.foreach { g =>
+        assert(codegen.contains(g), s"$what: ${g.nodeName} outside codegen:\n$plan")
+        assert(!g.expressions.exists(_.exists(
+          _.isInstanceOf[org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback])),
+          s"$what: CodegenFallback in ${g.nodeName}:\n$plan")
+      }
+    }
+    val batch = StreamingIntake.intakeBatch(feed, benchBloom = Some(bloom))
+    check(finalPlan(batch), "intakeBatch")
+    import spark.implicits._
+    implicit val sq = spark.sqlContext
+    val mem = org.apache.spark.sql.execution.streaming.runtime
+      .MemoryStream[(Long, java.sql.Timestamp, String)]
+    val q = StreamingIntake.intake(mem.toDF().toDF("doc_id", "ts", "text"),
+        benchBloom = Some(bloom))
+      .writeStream.format("memory").queryName("intake_gate_plan").start()
+    try {
+      val rows = feed.as[(Long, java.sql.Timestamp, String)].collect().toSeq
+      mem.addData(rows)
+      q.processAllAvailable()
+      // the first batch advances the watermark, so a no-data (eviction)
+      // batch follows it; a second batch that does not advance it
+      // leaves a data batch as the last execution
+      mem.addData(rows.take(20))
+      q.processAllAvailable()
+      val exec = q.asInstanceOf[
+        org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper]
+        .streamingQuery.lastExecution
+      check(exec.executedPlan, "intake")
+    } finally {
+      q.stop()
+      spark.catalog.dropTempView("intake_gate_plan")
+    }
+  }
+
   test("bigram LM reuses the doc-bigram exchange and never broadcasts the corpus side") {
     val p = planOf("d_bigram_lm")
     // cf derives from tf so its subtree reuses docBg's shuffle
