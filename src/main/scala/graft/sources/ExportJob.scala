@@ -1,14 +1,20 @@
 package graft.sources
 
-import java.io.{BufferedInputStream, BufferedOutputStream, FileInputStream, FileOutputStream}
-import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Path, Paths}
+import java.io.{BufferedInputStream, BufferedOutputStream, FileInputStream, FileOutputStream, OutputStreamWriter}
+import java.nio.charset.{Charset, StandardCharsets}
+import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import java.security.MessageDigest
 import java.util.zip.{ZipEntry, ZipOutputStream}
+import scala.collection.mutable.ArrayBuffer
 import scala.jdk.CollectionConverters._
 
+import org.apache.spark.TaskContext
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.csv.{CSVOptions, UnivocityGenerator}
 import org.apache.spark.sql.functions.lit
+import org.apache.spark.sql.graftshim.GraftShim
+import org.apache.spark.sql.types.StructType
 
 /** The reference tool's export pipeline (export.py:229-349 +
   * zip_files_with_checksum export.py:145-210), Spark-first:
@@ -19,11 +25,14 @@ import org.apache.spark.sql.functions.lit
   *   3. one CSV per query,
   *   4. zip the CSVs, SHA-256 the zip, package zip+checksum.
   *
-  * Scale: the CSV is written by Spark's distributed csv sink (every
-  * partition writes its own part file in parallel) and the parts are
-  * then stream-concatenated on the driver — file-level IO, never
-  * rows-in-memory, so a 100 TB export streams through. The zip stage
-  * is also streaming (4 MiB buffers).
+  * Scale: the driver plans every report, one after another, up to its
+  * final stage; then ONE Spark job runs every report's final stage
+  * together, each task writing its partition's CSV part file with
+  * Spark's own CSV generator and options (the bytes `df.write.csv`
+  * writes). The parts are then stream-concatenated on the driver —
+  * file-level IO, never rows-in-memory, so a 100 TB export streams
+  * through. The zip stage is also streaming (4 MiB buffers). A failed
+  * package leaves nothing behind.
   */
 object ExportJob {
 
@@ -42,6 +51,12 @@ object ExportJob {
     */
   val MergeBudgetBytes: Long = 1L << 30
 
+  /** The SQL execution name of a report's planning. */
+  val PlanExecution = "graft export: plan report"
+
+  /** The job description of the one job that writes every part file. */
+  val WriteJob = "graft export: write CSV parts"
+
   def run(
       spark: SparkSession,
       queries: Map[String, DataFrame],
@@ -50,69 +65,145 @@ object ExportJob {
       tag: String,
       mergeBudgetBytes: Long = MergeBudgetBytes): Result = {
     Files.createDirectories(outDir)
-    val dataDirs = scala.collection.mutable.ArrayBuffer[Path]()
-    val csvs = queries.toSeq.sortBy(_._1).map { case (name, df0) =>
-      val df = constants.foldLeft(df0) { case (d, (k, v)) => d.withColumn(k, lit(v)) }
-      val partDir = outDir.resolve(s".parts_$name")
-      df.write.mode("overwrite").option("header", "true").csv(partDir.toString)
-      val parts = listParts(partDir)
-      val totalBytes = parts.map(Files.size(_)).sum
-      if (totalBytes <= mergeBudgetBytes) {
-        val csv = outDir.resolve(s"${name}_$tag.csv")
-        mergeCsvParts(parts, csv)
-        deleteRecursively(partDir)
-        csv
-      } else {
-        // manifest-at-scale path: the part files ARE the report (each
-        // carries its own header — spark.read.csv(dir) reads the set
-        // back as one table); the driver only renames them into place
-        // and writes a name,bytes,sha256 manifest. The manifest rides
-        // the checksummed zip in the CSV's stead, so the package
-        // checksum TRANSITIVELY attests every part's content (the
-        // reference contract: its checksum covers the full export) —
-        // the data dir stays beside the package and nothing
-        // corpus-sized moves through one machine.
-        val dataDir = outDir.resolve(s"${name}_$tag")
-        deleteRecursively(dataDir)
-        Files.createDirectories(dataDir)
-        val placed = parts.zipWithIndex.map { case (p, i) =>
-          val t = dataDir.resolve(f"part-$i%05d.csv")
-          Files.move(p, t)
-          t
+    val reports = queries.toSeq.sortBy(_._1).map { case (name, df) =>
+      name -> constants.foldLeft(df) { case (d, (k, v)) => d.withColumn(k, lit(v)) }
+    }
+    // everything this package writes, so that a failure anywhere
+    // (a report's job, a merge, the zip) deletes it all again
+    val created = ArrayBuffer[Path]()
+    try {
+      val partDirs = reports.map { case (name, _) => outDir.resolve(s".parts_$name") }
+      created ++= partDirs
+      writeParts(spark, reports.map(_._2).zip(partDirs))
+      val dataDirs = ArrayBuffer[Path]()
+      val csvs = reports.map(_._1).zip(partDirs).map { case (name, partDir) =>
+        val parts = listParts(partDir)
+        val totalBytes = parts.map(Files.size(_)).sum
+        if (totalBytes <= mergeBudgetBytes) {
+          val csv = outDir.resolve(s"${name}_$tag.csv")
+          created += csv
+          mergeCsvParts(parts, csv)
+          deleteRecursively(partDir)
+          csv
+        } else {
+          // manifest-at-scale path: the part files ARE the report (each
+          // carries its own header — spark.read.csv(dir) reads the set
+          // back as one table); the driver only renames them into place
+          // and writes a name,bytes,sha256 manifest. The manifest rides
+          // the checksummed zip in the CSV's stead, so the package
+          // checksum TRANSITIVELY attests every part's content (the
+          // reference contract: its checksum covers the full export) —
+          // the data dir stays beside the package and nothing
+          // corpus-sized moves through one machine.
+          val dataDir = outDir.resolve(s"${name}_$tag")
+          created += dataDir
+          deleteRecursively(dataDir)
+          Files.createDirectories(dataDir)
+          val placed = parts.zipWithIndex.map { case (p, i) =>
+            val t = dataDir.resolve(f"part-$i%05d.csv")
+            Files.move(p, t)
+            t
+          }
+          deleteRecursively(partDir)
+          dataDirs += dataDir
+          // per-part digests run DISTRIBUTED (one task per part, where
+          // the part lives on a shared FS) — the driver hashes nothing:
+          // it only collects parts-many 64-char strings
+          val digests = partDigests(spark, placed)
+          val manifest = outDir.resolve(s"${name}_${tag}_manifest.csv")
+          created += manifest
+          val lines = "file,bytes,sha256" +: placed.map(p =>
+            s"${dataDir.getFileName}/${p.getFileName},${Files.size(p)}," +
+              digests(p.toString))
+          Files.write(manifest,
+            lines.mkString("", "\n", "\n").getBytes(StandardCharsets.UTF_8))
+          manifest
         }
-        deleteRecursively(partDir)
-        dataDirs += dataDir
-        // per-part digests run DISTRIBUTED (one task per part, where
-        // the part lives on a shared FS) — the driver hashes nothing:
-        // it only collects parts-many 64-char strings
-        val digests = partDigests(spark, placed)
-        val manifest = outDir.resolve(s"${name}_${tag}_manifest.csv")
-        val lines = "file,bytes,sha256" +: placed.map(p =>
-          s"${dataDir.getFileName}/${p.getFileName},${Files.size(p)}," +
-            digests(p.toString))
-        Files.write(manifest,
-          lines.mkString("", "\n", "\n").getBytes(StandardCharsets.UTF_8))
-        manifest
+      }
+
+      val innerZip = outDir.resolve(s"$tag.zip")
+      val checksumFile = outDir.resolve(s"${tag}_checksum.txt")
+      val pkg = outDir.resolve(s"${tag}_packaged.zip")
+      created ++= Seq(innerZip, checksumFile, pkg)
+      zip(innerZip, csvs.map(p => p.getFileName.toString -> p))
+      val checksum = sha256(innerZip)
+      Files.write(checksumFile, checksum.getBytes(StandardCharsets.UTF_8))
+      zip(pkg, Seq(
+        innerZip.getFileName.toString -> innerZip,
+        checksumFile.getFileName.toString -> checksumFile))
+      // mirror the reference's cleanup of intermediates (export.py:204-210,317-326)
+      Files.deleteIfExists(innerZip)
+      Files.deleteIfExists(checksumFile)
+      csvs.foreach(Files.deleteIfExists(_))
+      Result(pkg, s"$tag.zip", checksum, csvs.map(_.getFileName.toString),
+        dataDirs.toSeq.map(_.getFileName.toString))
+    } catch {
+      case e: Throwable =>
+        created.foreach { p =>
+          try deleteRecursively(p) catch { case c: Throwable => e.addSuppressed(c) }
+        }
+        throw e
+    }
+  }
+
+  /** Write every report's part files into its part dir. The driver
+    * plans the reports one after another, in the given order: each
+    * report's Catalyst phases and AQE stage jobs (broadcasts, shuffle
+    * map stages) run on this thread, in their own SQL execution, and
+    * finish before the next report starts, so no planning ever runs
+    * while a job does. What is left of each report is its final
+    * stage; one job runs them all, so their tasks share the cores
+    * instead of queueing report by report.
+    */
+  private def writeParts(spark: SparkSession, reports: Seq[(DataFrame, Path)]): Unit = {
+    val sc = spark.sparkContext
+    val options = GraftShim.csvWriteOptions(spark)
+    val writers = reports.map { case (df, partDir) =>
+      val schema = df.schema
+      GraftShim.checkCsvWritable(schema)
+      deleteRecursively(partDir)
+      Files.createDirectories(partDir)
+      val rows = GraftShim.plannedRows(df, PlanExecution)
+      // a frame with no partitions still gets its header-only part, as
+      // Spark's csv sink writes one for it
+      val parts = if (rows.getNumPartitions > 0) rows
+        else sc.parallelize(Seq.empty[InternalRow], 1)
+      val dir = partDir.toString
+      parts.mapPartitionsWithIndex { (i, it) =>
+        writePart(Paths.get(dir), i, it, schema, options)
+        Iterator.empty[Unit]
       }
     }
-
-    val innerZip = outDir.resolve(s"$tag.zip")
-    zip(innerZip, csvs.map(p => p.getFileName.toString -> p))
-    val checksum = sha256(innerZip)
-    val checksumFile = outDir.resolve(s"${tag}_checksum.txt")
-    Files.write(checksumFile, checksum.getBytes(StandardCharsets.UTF_8))
-
-    val pkg = outDir.resolve(s"${tag}_packaged.zip")
-    zip(pkg, Seq(
-      innerZip.getFileName.toString -> innerZip,
-      checksumFile.getFileName.toString -> checksumFile))
-    // mirror the reference's cleanup of intermediates (export.py:204-210,317-326)
-    Files.deleteIfExists(innerZip)
-    Files.deleteIfExists(checksumFile)
-    csvs.foreach(Files.deleteIfExists(_))
-    Result(pkg, s"$tag.zip", checksum, csvs.map(_.getFileName.toString),
-      dataDirs.toSeq.map(_.getFileName.toString))
+    if (writers.nonEmpty) {
+      val prior = sc.getLocalProperty("spark.job.description")
+      sc.setJobDescription(WriteJob)
+      try GraftShim.withSqlConf(spark)(sc.union(writers).count())
+      finally sc.setJobDescription(prior)
+    }
   }
+
+  /** One task's part file, as Spark's `CsvOutputWriter` writes it:
+    * the header, then every row, through `UnivocityGenerator`. Like
+    * Spark's csv sink, an empty partition writes no file unless it is
+    * partition 0 (the header-only CSV of a 0-row report). The bytes go
+    * to a hidden attempt-named file first and are renamed into place,
+    * so a retried or failed attempt never leaves a torn part.
+    */
+  private def writePart(dir: Path, i: Int, rows: Iterator[InternalRow],
+      schema: StructType, options: CSVOptions): Unit =
+    if (i == 0 || rows.hasNext) {
+      val tmp = dir.resolve(f".part-$i%05d.${TaskContext.get().taskAttemptId()}.tmp")
+      try {
+        val gen = new UnivocityGenerator(schema, new OutputStreamWriter(
+          new BufferedOutputStream(Files.newOutputStream(tmp), 1 << 16),
+          Charset.forName(options.charset)), options)
+        try {
+          gen.writeHeaders()
+          rows.foreach(gen.write)
+        } finally gen.close()
+        Files.move(tmp, dir.resolve(f"part-$i%05d.csv"), StandardCopyOption.ATOMIC_MOVE)
+      } finally Files.deleteIfExists(tmp)
+    }
 
   /** SHA-256 of every part file, computed on executors — one task per
     * part (the parts of a >1 GiB report live on a shared filesystem
@@ -129,7 +220,7 @@ object ExportJob {
       .collect().toMap
   }
 
-  private def listParts(partDir: Path): Seq[Path] = {
+  private[graft] def listParts(partDir: Path): Seq[Path] = {
     // Files.list holds an OS directory fd until closed — a leak per
     // call in a long-lived driver running repeated exports
     val s = Files.list(partDir)
@@ -144,7 +235,7 @@ object ExportJob {
     * each part (a line-based merge would normalize newlines inside
     * quoted multiline fields); O(buffer) memory.
     */
-  private def mergeCsvParts(parts: Seq[Path], target: Path): Unit = {
+  private[graft] def mergeCsvParts(parts: Seq[Path], target: Path): Unit = {
     val out = new BufferedOutputStream(new FileOutputStream(target.toFile), 4 << 20)
     try {
       var first = true

@@ -39,6 +39,49 @@ object GraftShim {
       .map(_.cachedRepresentation.stats.sizeInBytes)
   }
 
+  private def classic(spark: org.apache.spark.sql.SparkSession) =
+    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+
+  /** The frame's result rows, planned on the calling thread: analysis,
+    * optimization, planning and AQE's broadcast and shuffle stage jobs
+    * all run here, inside one SQL execution named `name`, so its
+    * Catalyst phases and stage jobs stay visible to listeners. Only
+    * the final stage is left; whoever runs the returned RDD runs it.
+    */
+  def plannedRows(df: org.apache.spark.sql.Dataset[_],
+      name: String): org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow] = {
+    val qe = df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]].queryExecution
+    org.apache.spark.sql.execution.SQLExecution.withNewExecutionId(qe, Some(name))(qe.toRdd)
+  }
+
+  /** The check Spark's csv sink makes before it writes a byte: every
+    * column type is one the CSV source supports. Throws the error
+    * `df.write.csv` throws.
+    */
+  def checkCsvWritable(schema: org.apache.spark.sql.types.StructType): Unit =
+    org.apache.spark.sql.execution.datasources.DataSourceUtils.verifySchema(
+      new org.apache.spark.sql.execution.datasources.csv.CSVFileFormat, schema)
+
+  /** The options `df.write.option("header", "true").csv` hands its
+    * `CsvOutputWriter`, read under the session's conf (column pruning
+    * only matters to reads).
+    */
+  def csvWriteOptions(spark: org.apache.spark.sql.SparkSession)
+      : org.apache.spark.sql.catalyst.csv.CSVOptions = {
+    val conf = classic(spark).sessionState.conf
+    org.apache.spark.sql.internal.SQLConf.withExistingConf(conf) {
+      new org.apache.spark.sql.catalyst.csv.CSVOptions(
+        Map("header" -> "true"), true, conf.sessionLocalTimeZone)
+    }
+  }
+
+  /** Run `body`'s jobs with the session's SQL conf visible to their
+    * tasks, as a SQL execution's jobs see it (what Spark's csv sink
+    * formats with, e.g. the time parser policy, is read in the task).
+    */
+  def withSqlConf[T](spark: org.apache.spark.sql.SparkSession)(body: => T): T =
+    org.apache.spark.sql.execution.SQLExecution.withSQLConfPropagated(classic(spark))(body)
+
   /** Register a function into a live session's registry (the
     * SparkSessionExtensions path only applies at session build time).
     */

@@ -119,6 +119,27 @@ class ExportJobSpec extends SparkSpec {
     inner.close(); zf.close()
   }
 
+  test("a report that fails mid-package leaves no partial package behind") {
+    import org.apache.spark.sql.functions.{col, concat, lit, raise_error, when}
+    val out = Files.createTempDirectory("graft_export_fail")
+    // range frames, so the failing row is met in a task, not folded
+    // away while the driver plans
+    val good = spark.range(1, 41, 1, 4)
+      .select(col("id"), concat(lit("v"), col("id")).as("v"))
+    val bad = good.select(col("id"),
+      when(col("id") === 7, raise_error(lit("injected report failure")))
+        .otherwise(col("v")).as("v"))
+    val e = intercept[Exception] {
+      ExportJob.run(spark, Map("a_good" -> good, "b_bad" -> bad, "c_good" -> good),
+        Seq("Facility" -> "F1"), out, "failtag")
+    }
+    val messages = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .map(_.getMessage).mkString(" | ")
+    assert(messages.contains("injected report failure"), messages)
+    val left = Files.list(out).iterator().asScala.map(_.getFileName.toString).toSeq
+    assert(left.isEmpty, s"partial package left in outDir: ${left.mkString(", ")}")
+  }
+
   test("export config parses tags, constants and window (export_config.json semantics)") {
     val c = graft.sources.ExportConfig.load(
       java.nio.file.Paths.get("config/export_config.json"))
