@@ -60,8 +60,4 @@ object DateFns {
 
   /** MySQL DATE_ADD(a, INTERVAL n DAY). */
   def addDays(a: Column, n: Int): Column = date_add(a.cast("date"), n)
-
-  /** MySQL DATE_ADD(a, INTERVAL n MONTH) — end-of-month clamped, same
-    * rule as Spark/DuckDB add_months/interval arithmetic. */
-  def addMonths(a: Column, n: Int): Column = add_months(a.cast("date"), n)
 }

@@ -40,25 +40,12 @@ object EthiopianCalendar {
     (yearE.cast("int"), monthE.cast("int"), dayE.cast("int"))
   }
 
-  def ethYear(c: Column): Column  = ethFields(c)._1
-  def ethMonth(c: Column): Column = ethFields(c)._2
-  def ethDay(c: Column): Column   = ethFields(c)._3
-
   /** Render as the reference's 'D/M/Y' format; null-safe like the
     * MySQL function (null date → null string).
     */
   def ethiopianDMY(c: Column): Column = {
     val (y, m, d) = ethFields(c)
     concat(d.cast("string"), lit("/"), m.cast("string"), lit("/"), y.cast("string"))
-  }
-
-  /** Inverse Column form: Ethiopian (year, month 1-13, day) columns →
-    * Gregorian date. Same arithmetic as [[toGregorian]].
-    */
-  def gregorianDate(yE: Column, mE: Column, dE: Column): Column = {
-    val j = lit(EpochJdn) + lit(365L) + lit(365L) * (yE - 1) +
-      floor(yE / 4) + lit(30L) * (mE - 1) + (dE - 1)
-    date_add(to_date(lit("1970-01-01")), (j - lit(UnixEpochJdn)).cast("int"))
   }
 
   // ---------------------------------------------------------------- Scala

@@ -303,7 +303,7 @@ object MediaCodecs {
   }
 
   /** Encode arbitrary full-frame pixel planes as an APNG — the
-    * re-encode half of a real video-frame transform (resize).
+    * generalized form behind [[buildApng]].
     */
   def encodeApng(width: Int, height: Int, channels: Int,
       frames: Seq[Array[Byte]]): Array[Byte] = {
@@ -443,81 +443,6 @@ object MediaCodecs {
     val ihdr = java.util.Arrays.copyOfRange(apng, 16, 29)
     PngSig ++ chunk("IHDR", ihdr) ++ chunk("IDAT", stream) ++
       chunk("IEND", Array.emptyByteArray)
-  }
-
-  /** Encode an arbitrary 8-bit pixel plane as a spec-valid PNG
-    * (filter-0 scanlines, one IDAT) — the re-encode half of a real
-    * pixel transform. channels 1/3/4 → gray/RGB/RGBA.
-    */
-  def encodePng(width: Int, height: Int, channels: Int,
-      pixels: Array[Byte]): Array[Byte] = {
-    require(width > 0 && height > 0)
-    require(pixels.length == width * height * channels,
-      s"plane ${pixels.length} != $width*$height*$channels")
-    val colorType = channels match {
-      case 1 => 0
-      case 3 => 2
-      case 4 => 6
-      case other => throw new IllegalArgumentException(s"channels $other")
-    }
-    val rowBytes = width * channels
-    val raw = new Array[Byte](height * (1 + rowBytes))
-    var y = 0
-    while (y < height) {
-      System.arraycopy(pixels, y * rowBytes, raw, y * (1 + rowBytes) + 1, rowBytes)
-      y += 1
-    }
-    val ihdr = be32(width.toLong) ++ be32(height.toLong) ++
-      Array[Byte](8, colorType.toByte, 0, 0, 0)
-    val deflater = new Deflater(Deflater.BEST_SPEED)
-    deflater.setInput(raw); deflater.finish()
-    val out = new ByteArrayOutputStream()
-    val buf = new Array[Byte](8192)
-    while (!deflater.finished()) out.write(buf, 0, deflater.deflate(buf))
-    deflater.end()
-    PngSig ++ chunk("IHDR", ihdr) ++ chunk("IDAT", out.toByteArray) ++
-      chunk("IEND", Array.emptyByteArray)
-  }
-
-  /** Box-filter resample of an interleaved 8-bit plane: every target
-    * pixel is the rounded mean of the source rectangle it maps to
-    * (≥1 source pixel) — a true area average on downscale,
-    * nearest-neighbour on upscale. Pure per-pixel arithmetic, O(sw·sh)
-    * per image.
-    */
-  def resamplePlane(src: Array[Byte], srcW: Int, srcH: Int, channels: Int,
-      dstW: Int, dstH: Int): Array[Byte] = {
-    require(srcW > 0 && srcH > 0 && dstW > 0 && dstH > 0)
-    require(src.length == srcW * srcH * channels)
-    val out = new Array[Byte](dstW * dstH * channels)
-    var ty = 0
-    while (ty < dstH) {
-      val y0 = ty * srcH / dstH
-      val y1 = math.max(y0 + 1, (ty + 1) * srcH / dstH)
-      var tx = 0
-      while (tx < dstW) {
-        val x0 = tx * srcW / dstW
-        val x1 = math.max(x0 + 1, (tx + 1) * srcW / dstW)
-        var c = 0
-        while (c < channels) {
-          var s = 0L; var n = 0
-          var y = y0
-          while (y < y1) {
-            var x = x0
-            while (x < x1) {
-              s += src((y * srcW + x) * channels + c) & 0xFF
-              n += 1; x += 1
-            }
-            y += 1
-          }
-          out((ty * dstW + tx) * channels + c) = ((s + n / 2) / n).toByte
-          c += 1
-        }
-        tx += 1
-      }
-      ty += 1
-    }
-    out
   }
 
   // ------------------------------------------------------------ JPEG
@@ -856,9 +781,8 @@ object MediaCodecs {
       subsample = true)
 
   /** Encode an arbitrary sample plane (via the accessor) as a
-    * baseline JPEG -- the generalized form behind [[buildJpeg]], and
-    * what a real pixel transform ([[graft.operators.MediaOps.resize]])
-    * re-encodes through. `subsample` selects 4:2:0 (color only).
+    * baseline JPEG -- the generalized form behind [[buildJpeg]] and
+    * [[buildJpeg420]]. `subsample` selects 4:2:0 (color only).
     */
   def encodeJpeg(width: Int, height: Int, channels: Int,
       sample: (Int, Int, Int) => Int, comment: String,

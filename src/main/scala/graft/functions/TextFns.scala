@@ -33,14 +33,6 @@ object TextFns {
   def wordShingles(text: Column, k: Int): Column =
     graft.plans.native.wordShingles(text, k)
 
-  /** HOF reference formulation of [[wordShingles]] (for tests). */
-  def wordShinglesHof(text: Column, k: Int): Column = {
-    val toks = words(text)
-    array_distinct(transform(
-      sequence(lit(1), greatest(size(toks) - (k - 1), lit(1))),
-      i => concat_ws(" ", slice(toks, i, lit(k)))))
-  }
-
   /** Jaccard similarity of two string arrays (distinct-set semantics,
     * exact integer sizes divided in double — deterministic).
     */

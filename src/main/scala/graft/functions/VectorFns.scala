@@ -20,14 +20,6 @@ object VectorFns {
     */
   def dot(a: Column, b: Column): Column = graft.plans.native.floatDot(a, b)
 
-  /** Interpreted HOF formulation of [[dot]], kept as the reference
-    * implementation the native expression is property-tested against.
-    */
-  def dotHof(a: Column, b: Column): Column =
-    aggregate(
-      zip_with(a, b, (x, y) => x.cast("double") * y.cast("double")),
-      lit(0.0), (acc, x) => acc + x)
-
   /** ‖a‖₂ in double. */
   def norm(a: Column): Column = sqrt(dot(a, a))
 

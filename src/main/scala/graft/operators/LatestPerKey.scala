@@ -21,22 +21,4 @@ object LatestPerKey {
         row_number().over(Window.partitionBy(keys: _*).orderBy(order: _*)))
       .filter(col("__rn") === 1)
       .drop("__rn")
-
-  /** Aggregation formulation: max_by(payload, ordering-struct) — the
-    * same semantics when "latest" means max of (ts, id, …) ascending
-    * tiebreaks. Unlike the window form this is a HashAggregate with
-    * map-side partial aggregation: each input partition reduces to
-    * ≤ |keys| rows BEFORE the shuffle, so on a 1000-executor cluster
-    * the shuffle moves |keys| rows, not |events|. Prefer this form
-    * when the per-key history is deep; the window form when you also
-    * need rank > 1 rows.
-    */
-  def viaAggregation(df: DataFrame, keys: Seq[String],
-      maxOf: Seq[String]): DataFrame = {
-    val payload = struct(df.columns.map(col): _*)
-    val ordering = struct(maxOf.map(col): _*)
-    df.groupBy(keys.map(col): _*)
-      .agg(max_by(payload, ordering).as("__row"))
-      .select(col("__row.*"))
-  }
 }

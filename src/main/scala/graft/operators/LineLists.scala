@@ -582,8 +582,13 @@ object LineLists {
     * depends on the window end. Each registered query above is its
     * builder evaluated at the fixed oracle window; ExportMain feeds
     * these the window derived from the configured (or current)
-    * Ethiopian month. q_ll_course has no window dependence and is
-    * deliberately absent.
+    * Ethiopian month. Three configured reports read the whole history
+    * and have no twin: q_ll_course (deliberately: a course pairs a
+    * client's first start with the last completion ever seen),
+    * q_pivot_agg (registered and oracle-checked as per-client flags
+    * over all events, so a window cut would not equal it at the oracle
+    * end) and q_range_join (the generic interval join, not a dated
+    * report).
     */
   val asOf: Map[String, (SparkSession, String, java.time.LocalDate) => DataFrame] = Map(
     "q_line_list" -> ((s, d, e) => Relational.lineListAsOf(s, d, e)),
@@ -592,5 +597,6 @@ object LineLists {
     "q_ll_dual_latest" -> ((s, d, e) => dualLatestBuild(s, d, e.toString)),
     "q_ll_ahd" -> ((s, d, e) => ahdBuild(s, d, e.toString)),
     "q_ll_hvl" -> ((s, d, e) => hvlBuild(s, d, e.toString)),
-    "q_ll_episode" -> ((s, d, e) => episodeBuild(s, d, e.toString)))
+    "q_ll_episode" -> ((s, d, e) => episodeBuild(s, d, e.toString)),
+    "q_outcome_summary" -> ((s, d, e) => Relational.outcomeSummaryBuild(s, d, e.toString)))
 }

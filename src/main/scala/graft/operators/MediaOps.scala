@@ -22,13 +22,6 @@ import org.apache.spark.sql.types._
 object MediaOps {
   import graft.functions.MediaCodecs
 
-  val mediaSchema: StructType = StructType(Seq(
-    StructField("media_id", LongType, nullable = false),
-    StructField("mime", StringType, nullable = false),
-    StructField("width", IntegerType, nullable = true),
-    StructField("height", IntegerType, nullable = true),
-    StructField("payload", BinaryType, nullable = false)))
-
   val featureSchema: StructType = StructType(Seq(
     StructField("media_id", LongType, nullable = false),
     StructField("mime", StringType, nullable = false),
@@ -118,65 +111,6 @@ object MediaOps {
           byteFeature(payload))
       }
     }(enc)
-  }
-
-  /** REAL image resize (round 6): decode the payload to its pixel
-    * plane, box-filter resample to the target dims, re-encode in the
-    * SAME container — PNG through decodePngPixels → resamplePlane →
-    * encodePng, JPEG through decodeJpegPixels → resamplePlane →
-    * encodeJpeg. The output parses as a valid file of the target
-    * dimensions. Non-image payloads (audio) and undecodable images
-    * keep the deterministic payload-level stand-in so the operator
-    * stays total. Batched via mapPartitions like extractFeatures —
-    * per-partition init, rows stream, media bytes never hit the
-    * driver.
-    */
-  def resize(media: DataFrame, targetW: Int, targetH: Int): DataFrame = {
-    val enc = RowEncoder.encoderFor(mediaSchema)
-    media.select("media_id", "mime", "width", "height", "payload")
-      .mapPartitions { rows =>
-        rows.map { r =>
-          val payload = r.getAs[Array[Byte]]("payload")
-          val resized: Option[Array[Byte]] =
-            MediaCodecs.parse(payload).map(_.fmt) match {
-              case Some("png") if MediaCodecs.apngFrameCount(payload).isDefined =>
-                // video: EVERY animation frame resamples; the output
-                // is an APNG with the same frame count at target dims
-                MediaCodecs.decodeApngFrames(payload).map { a =>
-                  MediaCodecs.encodeApng(targetW, targetH, a.channels,
-                    a.frames.map(MediaCodecs.resamplePlane(_, a.width,
-                      a.height, a.channels, targetW, targetH)))
-                }
-              case Some("png") => MediaCodecs.decodePngPixels(payload).map { p =>
-                MediaCodecs.encodePng(targetW, targetH, p.channels,
-                  MediaCodecs.resamplePlane(p.pixels, p.width, p.height,
-                    p.channels, targetW, targetH))
-              }
-              case Some("jpeg") =>
-                MediaCodecs.decodeJpegPixels(payload).flatMap { p =>
-                  if (p.channels != 1 && p.channels != 3) None
-                  else {
-                    val rp = MediaCodecs.resamplePlane(p.pixels, p.width,
-                      p.height, p.channels, targetW, targetH)
-                    Some(MediaCodecs.encodeJpeg(targetW, targetH, p.channels,
-                      (x, y, c) => rp((y * targetW + x) * p.channels + c) & 0xFF,
-                      "graft resize"))
-                  }
-                }
-              case _ => None
-            }
-          val out = resized.getOrElse {
-            // payload-level stand-in for non-image/undecodable rows
-            val w = if (r.isNullAt(2)) 1 else math.max(r.getInt(2), 1)
-            val h = if (r.isNullAt(3)) 1 else math.max(r.getInt(3), 1)
-            val outLen = math.max(1,
-              payload.length.toLong * (targetW.toLong * targetH)
-                / (w.toLong * h)).toInt
-            java.util.Arrays.copyOf(payload, math.min(outLen, payload.length))
-          }
-          Row(r.getLong(0), r.getString(1), targetW, targetH, out)
-        }
-      }(enc)
   }
 
   val frameSchema: StructType = StructType(Seq(

@@ -540,18 +540,20 @@ object Relational {
           ELSE 'ACTIVE' END AS outcome,
         COUNT(*) AS n
       FROM latest GROUP BY 1 ORDER BY outcome"""),
-    (s, dir) => {
-      val latest = LatestPerKey(
-        Tables(s, dir).events.filter(col("ts") <= lit(EventsEnd)),
+    (s, dir) => outcomeSummaryBuild(s, dir, EventsEnd))
+
+  /** q_outcome_summary at any report end (its `LineLists.asOf` twin). */
+  private[operators] def outcomeSummaryBuild(s: SparkSession, dir: String,
+      reportEnd: String): DataFrame =
+    LatestPerKey(
+        Tables(s, dir).events.filter(col("ts") <= lit(reportEnd)),
         Seq(col("user_id")), Seq(col("ts").desc, col("event_id").desc))
-      latest
-        .groupBy(when(col("event_type") === "error", "LOST")
-          .when(col("event_type") === "purchase", "ACTIVE_BUYER")
-          .when(col("event_type") === "signup", "NEW")
-          .otherwise("ACTIVE").as("outcome"))
-        .agg(count(lit(1)).as("n"))
-        .orderBy("outcome")
-    })
+      .groupBy(when(col("event_type") === "error", "LOST")
+        .when(col("event_type") === "purchase", "ACTIVE_BUYER")
+        .when(col("event_type") === "signup", "NEW")
+        .otherwise("ACTIVE").as("outcome"))
+      .agg(count(lit(1)).as("n"))
+      .orderBy("outcome")
 
   // ------------------------------------------------------------------
   // 21b. q_outcome_matrix — the TI × New × status conditional-sum

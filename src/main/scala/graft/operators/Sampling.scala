@@ -22,15 +22,6 @@ object Sampling {
       .drop("__hr")
   }
 
-  /** Fraction variant: keep rows whose hash falls in the bottom
-    * `fraction` of the md5 space (first 8 hex chars as a uniform
-    * 32-bit draw). Same consistency property, no per-group shuffle.
-    */
-  def consistentFraction(df: DataFrame, idCol: String, fraction: Double): DataFrame =
-    df.filter(
-      conv(substring(md5(col(idCol).cast("string")), 1, 8), 16, 10).cast("long")
-        < lit((fraction * (1L << 32)).toLong))
-
   /** Deterministic train/val/test holdout: each row's 32-bit draw is
     * the first 8 hex chars of md5(id), compared LEXICOGRAPHICALLY
     * against hex cut points — equal-length lowercase hex compares

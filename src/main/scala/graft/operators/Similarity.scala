@@ -1134,7 +1134,7 @@ object Similarity {
     * so the shuffle moves O(dims × tasks), not O(rows). The dim-length
     * stat arrays then broadcast back over the corpus and quantization
     * is one native codegen pass per row (the HOF `transform`
-    * formulation, kept below as the spec's reference, does an
+    * formulation, kept in QuantizeSpec as the reference, does an
     * interpreted element_at(stats, i) scan per element — O(dim²) per
     * row, measured 13.6 s vs sub-second at the 64× blow-up).
     *
@@ -1147,22 +1147,11 @@ object Similarity {
       graft.plans.native.scalarQuantizeCodes(col("embedding"), mns, mxs, levels)
     }
 
-  /** Interpreted HOF formulation of [[scalarQuantize]] — the reference
-    * implementation the native expression is property-tested against.
+  /** The shared quantizer: per-dimension min/max stat arrays, then
+    * `codes(mins, maxs)` per row (QuantizeSpec keeps the interpreted
+    * HOF reference as another `codes`).
     */
-  def scalarQuantizeHof(emb: DataFrame, levels: Int = 256): DataFrame =
-    quantizeWith(emb, levels) { (mns, mxs) =>
-      val lv = lit(levels.toDouble)
-      transform(col("embedding"), (x, i) => {
-        val mn = element_at(mns, i + 1)
-        val mx = element_at(mxs, i + 1)
-        when(mx === mn, 0L).otherwise(
-          least(floor((x.cast("double") - mn) * lv / (mx - mn)),
-            lit((levels - 1).toLong)))
-      })
-    }
-
-  private def quantizeWith(emb: DataFrame, levels: Int)(
+  private[graft] def quantizeWith(emb: DataFrame, levels: Int)(
       codes: (Column, Column) => Column): DataFrame = {
     val stats = emb
       .select(posexplode(col("embedding")).as(Seq("dim", "x")))

@@ -31,8 +31,10 @@ import org.apache.spark.sql.types.StructType
   * Spark's own CSV generator and options (the bytes `df.write.csv`
   * writes). The parts are then stream-concatenated on the driver —
   * file-level IO, never rows-in-memory, so a 100 TB export streams
-  * through. The zip stage is also streaming (4 MiB buffers). A failed
-  * package leaves nothing behind.
+  * through. The zip stage is also streaming (4 MiB buffers). The
+  * package appears under its final name only once it is complete; a
+  * failed run deletes what it wrote and leaves an earlier package of
+  * the same tag in place.
   */
 object ExportJob {
 
@@ -68,20 +70,30 @@ object ExportJob {
     val reports = queries.toSeq.sortBy(_._1).map { case (name, df) =>
       name -> constants.foldLeft(df) { case (d, (k, v)) => d.withColumn(k, lit(v)) }
     }
-    // everything this package writes, so that a failure anywhere
-    // (a report's job, a merge, the zip) deletes it all again
+    // everything this run has written, each path recorded once the run
+    // has created it, so that a failure anywhere (a report's job, a
+    // merge, the zip) deletes exactly that and nothing an earlier run
+    // left, such as the previous package of the same tag
     val created = ArrayBuffer[Path]()
+    def touch(p: Path): Path = {
+      Files.newOutputStream(p).close()
+      created += p
+      p
+    }
     try {
-      val partDirs = reports.map { case (name, _) => outDir.resolve(s".parts_$name") }
-      created ++= partDirs
+      val partDirs = reports.map { case (name, _) =>
+        val partDir = outDir.resolve(s".parts_$name")
+        deleteRecursively(partDir)
+        created += Files.createDirectories(partDir)
+        partDir
+      }
       writeParts(spark, reports.map(_._2).zip(partDirs))
       val dataDirs = ArrayBuffer[Path]()
       val csvs = reports.map(_._1).zip(partDirs).map { case (name, partDir) =>
         val parts = listParts(partDir)
         val totalBytes = parts.map(Files.size(_)).sum
         if (totalBytes <= mergeBudgetBytes) {
-          val csv = outDir.resolve(s"${name}_$tag.csv")
-          created += csv
+          val csv = touch(outDir.resolve(s"${name}_$tag.csv"))
           mergeCsvParts(parts, csv)
           deleteRecursively(partDir)
           csv
@@ -96,9 +108,8 @@ object ExportJob {
           // the data dir stays beside the package and nothing
           // corpus-sized moves through one machine.
           val dataDir = outDir.resolve(s"${name}_$tag")
-          created += dataDir
           deleteRecursively(dataDir)
-          Files.createDirectories(dataDir)
+          created += Files.createDirectories(dataDir)
           val placed = parts.zipWithIndex.map { case (p, i) =>
             val t = dataDir.resolve(f"part-$i%05d.csv")
             Files.move(p, t)
@@ -110,8 +121,7 @@ object ExportJob {
           // the part lives on a shared FS) — the driver hashes nothing:
           // it only collects parts-many 64-char strings
           val digests = partDigests(spark, placed)
-          val manifest = outDir.resolve(s"${name}_${tag}_manifest.csv")
-          created += manifest
+          val manifest = touch(outDir.resolve(s"${name}_${tag}_manifest.csv"))
           val lines = "file,bytes,sha256" +: placed.map(p =>
             s"${dataDir.getFileName}/${p.getFileName},${Files.size(p)}," +
               digests(p.toString))
@@ -121,20 +131,23 @@ object ExportJob {
         }
       }
 
-      val innerZip = outDir.resolve(s"$tag.zip")
-      val checksumFile = outDir.resolve(s"${tag}_checksum.txt")
-      val pkg = outDir.resolve(s"${tag}_packaged.zip")
-      created ++= Seq(innerZip, checksumFile, pkg)
+      val innerZip = touch(outDir.resolve(s"$tag.zip"))
       zip(innerZip, csvs.map(p => p.getFileName.toString -> p))
       val checksum = sha256(innerZip)
+      val checksumFile = touch(outDir.resolve(s"${tag}_checksum.txt"))
       Files.write(checksumFile, checksum.getBytes(StandardCharsets.UTF_8))
-      zip(pkg, Seq(
+      // the package is written under a hidden name and renamed into
+      // place last, so a reader (or a crash) never sees a torn one
+      val staged = touch(outDir.resolve(s".${tag}_packaged.zip.tmp"))
+      zip(staged, Seq(
         innerZip.getFileName.toString -> innerZip,
         checksumFile.getFileName.toString -> checksumFile))
       // mirror the reference's cleanup of intermediates (export.py:204-210,317-326)
       Files.deleteIfExists(innerZip)
       Files.deleteIfExists(checksumFile)
       csvs.foreach(Files.deleteIfExists(_))
+      val pkg = Files.move(staged, outDir.resolve(s"${tag}_packaged.zip"),
+        StandardCopyOption.ATOMIC_MOVE)
       Result(pkg, s"$tag.zip", checksum, csvs.map(_.getFileName.toString),
         dataDirs.toSeq.map(_.getFileName.toString))
     } catch {
@@ -161,8 +174,6 @@ object ExportJob {
     val writers = reports.map { case (df, partDir) =>
       val schema = df.schema
       GraftShim.checkCsvWritable(schema)
-      deleteRecursively(partDir)
-      Files.createDirectories(partDir)
       val rows = GraftShim.plannedRows(df, PlanExecution)
       // a frame with no partitions still gets its header-only part, as
       // Spark's csv sink writes one for it

@@ -3,57 +3,10 @@ package graft.sources
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Multi-format read/write + partitioned layout (SURVEY.md "sources/
-  * sinks"). The reference exports CSV from a SQL store; at 100 TB the
-  * layout IS the index: date-partitioned parquet means every
-  * report-window query prunes to the window's partitions before a
-  * byte is read.
+/** Small-file compaction for parquet datasets (the persisted IVF
+  * index's codes go through it).
   */
 object TableSink {
-
-  // ------------------------------------------------------- formats
-
-  def writeCsv(df: DataFrame, path: String): Unit =
-    df.write.mode(SaveMode.Overwrite).option("header", "true").csv(path)
-
-  def readCsv(spark: SparkSession, path: String): DataFrame =
-    spark.read.option("header", "true").option("inferSchema", "true").csv(path)
-
-  def writeJson(df: DataFrame, path: String): Unit =
-    df.write.mode(SaveMode.Overwrite).json(path)
-
-  def readJson(spark: SparkSession, path: String): DataFrame =
-    spark.read.json(path)
-
-  def writeParquet(df: DataFrame, path: String): Unit =
-    df.write.mode(SaveMode.Overwrite).parquet(path)
-
-  /** ORC — the other columnar format a warehouse migration meets;
-    * same pushdown/pruning machinery as parquet in Spark.
-    */
-  def writeOrc(df: DataFrame, path: String): Unit =
-    df.write.mode(SaveMode.Overwrite).orc(path)
-
-  def readOrc(spark: SparkSession, path: String): DataFrame =
-    spark.read.orc(path)
-
-  // --------------------------------------------- partitioned layout
-
-  /** Write date-partitioned parquet: one directory per day of `tsCol`.
-    * Queries filtering on `p_date` prune partitions at planning time.
-    */
-  def writeDatePartitioned(df: DataFrame, tsCol: String, path: String,
-      maxRecordsPerFile: Int = 5000000): Unit =
-    df.withColumn("p_date", date_format(col(tsCol), "yyyy-MM-dd"))
-      .write.mode(SaveMode.Overwrite)
-      .option("maxRecordsPerFile", maxRecordsPerFile)
-      .partitionBy("p_date")
-      .parquet(path)
-
-  def readPartitioned(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
-
-  // -------------------------------------------------- compaction
 
   /** Compact a parquet dataset's small files into ~`targetFileBytes`
     * files (the operational fix for the small-files problem: a 100 TB

@@ -194,19 +194,6 @@ object EventStream {
       }
   }
 
-  /** Streaming exact dedup — the streaming twin of d_exact_dedup for
-    * continuous ingestion: an event is dropped when its dedup key was
-    * already seen within the watermark horizon. State is keyed by the
-    * dedup key and evicted by the watermark, so memory is bounded by
-    * (arrival rate × delay), not stream length — the property that
-    * matters at 100 TB/day.
-    */
-  def dedupStream(events: DataFrame, keyCols: Seq[String],
-      delay: String = "10 minutes"): DataFrame =
-    events
-      .withWatermark("ts", delay)
-      .dropDuplicatesWithinWatermark(keyCols)
-
   /** Stream-stream time-bounded join (click attribution): each click
     * joins the views of the same user that happened at most
     * `withinMinutes` before it. Both sides are watermarked AND the
@@ -230,26 +217,4 @@ object EventStream {
       .select(col("c_user").as("user_id"), col("click_id"), col("view_id"),
         col("view_ts"), col("click_ts"), col("value"))
   }
-
-  /** Batch twin of [[attributeClicks]] for parity checks. */
-  def attributeClicksBatch(views: DataFrame, clicks: DataFrame,
-      withinMinutes: Int = 10): DataFrame = {
-    val v = views.select(col("user_id").as("v_user"),
-      col("ts").as("view_ts"), col("event_id").as("view_id"))
-    val c = clicks.select(col("user_id").as("c_user"),
-      col("ts").as("click_ts"), col("event_id").as("click_id"), col("value"))
-    c.join(v, expr(
-        s"""c_user = v_user AND click_ts >= view_ts
-           AND click_ts <= view_ts + INTERVAL $withinMinutes MINUTES"""))
-      .select(col("c_user").as("user_id"), col("click_id"), col("view_id"),
-        col("view_ts"), col("click_ts"), col("value"))
-  }
-
-  /** Batch-equivalent of windowedCounts for parity checks. */
-  def windowedCountsBatch(events: DataFrame): DataFrame =
-    events
-      .groupBy(window(col("ts"), "1 hour"), col("event_type"))
-      .agg(count(lit(1)).as("n"), sum(col("value")).as("sum_value"))
-      .select(col("window.start").as("window_start"), col("event_type"),
-        col("n"), col("sum_value"))
 }

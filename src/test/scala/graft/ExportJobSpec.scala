@@ -140,6 +140,64 @@ class ExportJobSpec extends SparkSpec {
     assert(left.isEmpty, s"partial package left in outDir: ${left.mkString(", ")}")
   }
 
+  test("a failing re-export keeps the previous package byte for byte") {
+    import spark.implicits._
+    val out = Files.createTempDirectory("graft_export_rerun")
+    val df = Seq((1L, "a"), (2L, "b")).toDF("id", "v")
+    val first = ExportJob.run(spark, Map("r" -> df), Nil, out, "t")
+    val bytes = Files.readAllBytes(first.packagePath)
+    // a directory holds the inner zip's name, so the rerun cannot write it
+    Files.createDirectory(out.resolve("t.zip"))
+    intercept[java.io.IOException] {
+      ExportJob.run(spark, Map("r" -> df), Nil, out, "t")
+    }
+    assert(Files.exists(first.packagePath), "the failed rerun deleted the previous package")
+    assert(Files.readAllBytes(first.packagePath).sameElements(bytes))
+    val left = Files.list(out).iterator().asScala.map(_.getFileName.toString).toSet
+    assert(left == Set("t.zip", "t_packaged.zip"), left.mkString(", "))
+  }
+
+  test("a month sweep: each configured report follows the month or is declared window-free") {
+    // the configured reports that read the whole history, and why
+    val windowFree = Map(
+      "q_ll_course" -> "deliberate: a course pairs a client's first start with the last completion ever seen",
+      "q_pivot_agg" -> "registered and oracle-checked as per-client flags over all events",
+      "q_range_join" -> "the generic interval join, not a dated report")
+    val cfgPath = java.nio.file.Paths.get("config/export_config.json")
+    val cfg = graft.sources.ExportConfig.load(cfgPath)
+    val base = new String(Files.readAllBytes(cfgPath), "UTF-8")
+    // each report's CSV bytes, by tag, for one Ethiopian month of 2016
+    def export(month: Int): Map[String, Seq[Byte]] = {
+      val monthCfg = Files.createTempFile("graft_month", ".json")
+      Files.writeString(monthCfg,
+        base.replaceAll("(\"eth_month\"\\s*:\\s*)\\d+", "$1" + month))
+      val res = graft.sources.ExportMain.run(spark, Array(sf,
+        Files.createTempDirectory("graft_month").toString, monthCfg.toString))
+      val zf = new ZipFile(res.packagePath.toFile)
+      val tmpInner = Files.createTempFile("inner", ".zip")
+      Files.copy(zf.getInputStream(zf.getEntry(res.innerZip)), tmpInner,
+        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+      val inner = new ZipFile(tmpInner.toFile)
+      val suffix = s"_${res.innerZip.stripSuffix(".zip")}.csv"
+      try inner.entries().asScala.map(e => e.getName.stripSuffix(suffix) ->
+        inner.getInputStream(e).readAllBytes().toSeq).toMap
+      finally { inner.close(); zf.close() }
+    }
+    // Tahisas 2016 ends 2023-12-30, before the first event; Tir 2016
+    // ends 2024-01-29, inside the data
+    val (tahisas, tir) = (export(4), export(5))
+    assert(tir.keySet == cfg.queries.map(_._1).toSet && tahisas.keySet == tir.keySet)
+    cfg.queries.foreach { case (tag, q) =>
+      val same = tahisas(tag) == tir(tag)
+      if (windowFree.contains(q))
+        assert(same, s"$tag ($q) changed, though declared window-free: ${windowFree(q)}")
+      else {
+        assert(graft.operators.LineLists.asOf.contains(q), s"$tag ($q) has no as-of twin")
+        assert(!same, s"$tag ($q) is the same in both months")
+      }
+    }
+  }
+
   test("export config parses tags, constants and window (export_config.json semantics)") {
     val c = graft.sources.ExportConfig.load(
       java.nio.file.Paths.get("config/export_config.json"))

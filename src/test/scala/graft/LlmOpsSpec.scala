@@ -1,11 +1,26 @@
 package graft
 
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import graft.operators.{Dedup, Similarity, TextAnalysis}
 
 class LlmOpsSpec extends SparkSpec {
 
   private def docs = Tables(spark, sf).documents
+
+  /** Interpreted HOF reference of the native [[graft.functions.TextFns.wordShingles]]. */
+  private def wordShinglesHof(text: Column, k: Int): Column = {
+    val toks = graft.functions.TextFns.words(text)
+    array_distinct(transform(
+      sequence(lit(1), greatest(size(toks) - (k - 1), lit(1))),
+      i => concat_ws(" ", slice(toks, i, lit(k)))))
+  }
+
+  /** Interpreted HOF reference of the native [[graft.functions.VectorFns.dot]]. */
+  private def dotHof(a: Column, b: Column): Column =
+    aggregate(
+      zip_with(a, b, (x, y) => x.cast("double") * y.cast("double")),
+      lit(0.0), (acc, x) => acc + x)
 
   test("minhash LSH finds the exact-jaccard near-dup pairs") {
     // ground truth: prefix-blocked exact word-set jaccard >= 0.8
@@ -246,7 +261,7 @@ class LlmOpsSpec extends SparkSpec {
     val d = docs.limit(100)
     val mismatches = d.select(
         TextFns.wordShingles(lower(col("text")), 3).as("a"),
-        TextFns.wordShinglesHof(lower(col("text")), 3).as("b"))
+        wordShinglesHof(lower(col("text")), 3).as("b"))
       .filter(not(col("a") === col("b"))).count()
     assert(mismatches == 0)
   }
@@ -259,7 +274,7 @@ class LlmOpsSpec extends SparkSpec {
       .limit(500)
     val diff = pairs
       .select(abs(VectorFns.dot(col("ea"), col("eb"))
-        - VectorFns.dotHof(col("ea"), col("eb"))).as("d"))
+        - dotHof(col("ea"), col("eb"))).as("d"))
       .agg(max(col("d"))).head().getDouble(0)
     assert(diff == 0.0, s"native vs HOF dot differ by $diff")
   }

@@ -443,54 +443,6 @@ class MediaOpsSpec extends SparkSpec {
     }
   }
 
-  test("resize really resamples pixels: output parses at target dims") {
-    val media = MediaOps.syntheticMedia(spark, 12)
-    val src = media.collect().map(r => r.getLong(0) -> r).toMap
-    val out = MediaOps.resize(media, 32, 24).collect()
-    out.foreach { r =>
-      assert(r.getAs[Int]("width") == 32 && r.getAs[Int]("height") == 24)
-      val payload = r.getAs[Array[Byte]]("payload")
-      assert(payload.nonEmpty)
-      val orig = src(r.getLong(0)).getAs[Array[Byte]]("payload")
-      r.getString(1) match {
-        case "image/png" =>
-          // PNG re-encode is lossless: decoded output must EQUAL a
-          // local box resample of the decoded source, byte for byte
-          val op = MediaCodecs.decodePngPixels(payload).get
-          assert(op.width == 32 && op.height == 24)
-          val sp = MediaCodecs.decodePngPixels(orig).get
-          val want = MediaCodecs.resamplePlane(sp.pixels, sp.width, sp.height,
-            sp.channels, 32, 24)
-          assert(java.util.Arrays.equals(op.pixels, want))
-        case "image/jpeg" =>
-          // JPEG re-encode re-quantizes: decoded output must match
-          // the local resample within DCT quantization error
-          val op = MediaCodecs.decodeJpegPixels(payload).get
-          assert(op.width == 32 && op.height == 24)
-          val sp = MediaCodecs.decodeJpegPixels(orig).get
-          val want = MediaCodecs.resamplePlane(sp.pixels, sp.width, sp.height,
-            sp.channels, 32, 24)
-          val meanErr = op.pixels.indices
-            .map(i => math.abs((op.pixels(i) & 0xFF) - (want(i) & 0xFF))).sum
-            .toDouble / op.pixels.length
-          assert(meanErr <= 8.0, s"jpeg resize mean err $meanErr")
-        case "video/apng" =>
-          // APNG re-encode is lossless: every resampled frame must
-          // equal a local resample of the decoded source frame
-          val oa = MediaCodecs.decodeApngFrames(payload).get
-          assert(oa.width == 32 && oa.height == 24)
-          val sa = MediaCodecs.decodeApngFrames(orig).get
-          assert(oa.frames.length == sa.frames.length, "frame count kept")
-          oa.frames.indices.foreach { f =>
-            val want = MediaCodecs.resamplePlane(sa.frames(f), sa.width,
-              sa.height, sa.channels, 32, 24)
-            assert(java.util.Arrays.equals(oa.frames(f), want), s"frame $f")
-          }
-        case _ => // audio keeps the payload-level stand-in
-      }
-    }
-  }
-
   test("apng round-trips every frame and demuxes to standalone stills") {
     for (ct <- Seq(0, 2, 6); n <- Seq(1, 4)) {
       val w = 20; val h = 11; val seed = 77 + ct + n

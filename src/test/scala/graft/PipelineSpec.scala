@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.operators.{Dedup, DedupPipeline, Sampling, Similarity, SkewJoin}
+import graft.operators.{Dedup, DedupPipeline, Sampling, Similarity}
 
 class PipelineSpec extends SparkSpec {
 
@@ -169,21 +169,6 @@ class PipelineSpec extends SparkSpec {
         textCol = "body", idCol = "id", threshold = 0.8)
       .select("id").collect().map(_.getLong(0)).toSet
     assert(kept == Set(11L, 13L), s"kept $kept")
-  }
-
-  test("salted join equals plain join") {
-    val t = Tables(spark, sf)
-    val orders = t.orders
-    val customer = t.customer
-    val plain = orders.join(customer,
-        orders("o_custkey") === customer("c_custkey"))
-      .select("o_orderkey", "c_name")
-      .collect().map(_.toString).sorted
-    val salted = SkewJoin.saltedJoin(t.orders, t.customer,
-        "o_custkey", "c_custkey", nSalts = 8)
-      .select("o_orderkey", "c_name")
-      .collect().map(_.toString).sorted
-    assert(plain.sameElements(salted))
   }
 
   test("ivf ann overlaps brute-force top-k with bounded candidate work") {

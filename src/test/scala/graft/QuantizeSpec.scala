@@ -1,11 +1,25 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.operators.{Dedup, Similarity}
 
 class QuantizeSpec extends SparkSpec {
 
   private def emb = Tables(spark, sf).embeddings
+
+  /** Interpreted HOF reference of the native quantizer in [[Similarity.scalarQuantize]]. */
+  private def scalarQuantizeHof(emb: DataFrame, levels: Int): DataFrame =
+    Similarity.quantizeWith(emb, levels) { (mns, mxs) =>
+      val lv = lit(levels.toDouble)
+      transform(col("embedding"), (x, i) => {
+        val mn = element_at(mns, i + 1)
+        val mx = element_at(mxs, i + 1)
+        when(mx === mn, 0L).otherwise(
+          least(floor((x.cast("double") - mn) * lv / (mx - mn)),
+            lit((levels - 1).toLong)))
+      })
+    }
 
   test("scalar quantization codes match an independent driver-side computation") {
     val q = Similarity.scalarQuantize(emb, levels = 256)
@@ -29,7 +43,7 @@ class QuantizeSpec extends SparkSpec {
   test("native quantize codes match the interpreted HOF reference bit-for-bit") {
     val nat = Similarity.scalarQuantize(emb, levels = 256)
       .collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
-    val hof = Similarity.scalarQuantizeHof(emb, levels = 256)
+    val hof = scalarQuantizeHof(emb, levels = 256)
       .collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
     assert(nat.keySet == hof.keySet)
     nat.foreach { case (id, codes) => assert(codes == hof(id), s"vec $id") }

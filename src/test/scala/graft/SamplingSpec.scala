@@ -17,22 +17,6 @@ class SamplingSpec extends SparkSpec {
     assert(a.size <= 5 * 5) // ≤ k per language
   }
 
-  test("consistent sample membership is independent of the rest of the group") {
-    // union-compatibility: a doc sampled from a SUBSET stays sampled
-    // when the subset grows only if its hash still ranks in bottom-k —
-    // but fraction-based membership never changes with group content
-    val docs = Tables(spark, sf).documents
-    val full = Sampling.consistentFraction(docs, "doc_id", 0.3)
-      .select("doc_id").collect().map(_.getLong(0)).toSet
-    val half = Sampling.consistentFraction(
-        docs.filter(col("doc_id") % 2 === 0), "doc_id", 0.3)
-      .select("doc_id").collect().map(_.getLong(0)).toSet
-    assert(half == full.filter(_ % 2 == 0))
-    // fraction lands near the target on uniform hashes
-    val frac = full.size.toDouble / docs.count()
-    assert(frac > 0.2 && frac < 0.4, s"got $frac")
-  }
-
   test("mix sample honors per-domain quota bounds and is partition-stable") {
     val docs = Tables(spark, sf).documents
     def run(df: org.apache.spark.sql.DataFrame) =

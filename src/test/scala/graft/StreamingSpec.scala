@@ -2,6 +2,7 @@ package graft
 
 import java.sql.Timestamp
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.OutputMode
 import graft.streaming.EventStream
@@ -10,6 +11,31 @@ import graft.streaming.EventStream.Event
 class StreamingSpec extends SparkSpec {
 
   private def ts(s: String) = Timestamp.valueOf(s)
+
+  /** Batch twin of [[EventStream.windowedCounts]], the parity reference. */
+  private def windowedCountsBatch(events: DataFrame): DataFrame = {
+    import org.apache.spark.sql.functions._
+    events
+      .groupBy(window(col("ts"), "1 hour"), col("event_type"))
+      .agg(count(lit(1)).as("n"), sum(col("value")).as("sum_value"))
+      .select(col("window.start").as("window_start"), col("event_type"),
+        col("n"), col("sum_value"))
+  }
+
+  /** Batch twin of [[EventStream.attributeClicks]], the parity reference. */
+  private def attributeClicksBatch(views: DataFrame, clicks: DataFrame,
+      withinMinutes: Int = 10): DataFrame = {
+    import org.apache.spark.sql.functions._
+    val v = views.select(col("user_id").as("v_user"),
+      col("ts").as("view_ts"), col("event_id").as("view_id"))
+    val c = clicks.select(col("user_id").as("c_user"),
+      col("ts").as("click_ts"), col("event_id").as("click_id"), col("value"))
+    c.join(v, expr(
+        s"""c_user = v_user AND click_ts >= view_ts
+           AND click_ts <= view_ts + INTERVAL $withinMinutes MINUTES"""))
+      .select(col("c_user").as("user_id"), col("click_id"), col("view_id"),
+        col("view_ts"), col("click_ts"), col("value"))
+  }
 
   test("windowed counts with watermark match batch computation") {
     import spark.implicits._
@@ -31,7 +57,7 @@ class StreamingSpec extends SparkSpec {
       .select("window_start", "event_type", "n", "sum_value")
       .collect().map(r => (r.getTimestamp(0), r.getString(1), r.getLong(2), r.getDouble(3)))
       .toSet
-    val batch = EventStream.windowedCountsBatch(events.toDF())
+    val batch = windowedCountsBatch(events.toDF())
       .collect().map(r => (r.getTimestamp(0), r.getString(1), r.getLong(2), r.getDouble(3)))
       .toSet
     assert(batch.subsetOf(streamed ++ batch) && streamed.subsetOf(batch),
@@ -43,8 +69,8 @@ class StreamingSpec extends SparkSpec {
     implicit val sq = spark.sqlContext
     // real events table, streamed in one batch + a watermark-advancing
     // sentinel far in the future so every real session closes
-    val ds = graft.operators.TypedOps.events(spark, sf)
-      .map(e => Event(e.event_id, e.ts, e.user_id, e.event_type, e.value))
+    val ds = Tables(spark, sf).events
+      .select("event_id", "ts", "user_id", "event_type", "value").as[Event]
     val mem = MemoryStream[Event]
     val q = EventStream.sessionize(mem.toDS(), gapMinutes = 30)
       .writeStream.format("memory").queryName("sess_x")
@@ -69,31 +95,6 @@ class StreamingSpec extends SparkSpec {
       }.toSet
     assert(streamed == batch,
       s"only-streamed=${(streamed -- batch).take(3)} only-batch=${(batch -- streamed).take(3)}")
-  }
-
-  test("streaming dedup drops within-watermark duplicates, keeps the rest") {
-    import spark.implicits._
-    implicit val sq = spark.sqlContext
-    val mem = MemoryStream[Event]
-    val q = EventStream.dedupStream(mem.toDF(), Seq("user_id", "event_type"))
-      .writeStream.format("memory").queryName("dedup")
-      .outputMode(OutputMode.Append()).start()
-    mem.addData(
-      Event(1, ts("2024-01-01 10:00:00"), 7, "view", 1.0),
-      Event(2, ts("2024-01-01 10:03:00"), 7, "view", 2.0), // dup key in window
-      Event(3, ts("2024-01-01 10:04:00"), 7, "click", 3.0),
-      Event(4, ts("2024-01-01 10:05:00"), 8, "view", 4.0))
-    q.processAllAvailable()
-    // advance the watermark far past the horizon, then the same key
-    // again: state was evicted, so the event is KEPT (bounded state,
-    // horizon-scoped semantics)
-    mem.addData(Event(5, ts("2024-01-01 12:00:00"), 9, "view", 0.0))
-    q.processAllAvailable()
-    mem.addData(Event(6, ts("2024-01-01 12:01:00"), 7, "view", 9.0))
-    q.processAllAvailable()
-    q.stop()
-    val kept = spark.table("dedup").as[Event].collect().map(_.event_id).toSet
-    assert(kept == Set(1L, 3L, 4L, 5L, 6L), kept.toSeq.sorted.mkString(","))
   }
 
   test("streaming intake admits, scrubs and dedups exactly like the batch twin") {
@@ -497,7 +498,7 @@ class StreamingSpec extends SparkSpec {
     val streamed = spark.table("attr")
       .select("click_id", "view_id").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
-    val batch = EventStream.attributeClicksBatch(views.toDF(), clicks.toDF())
+    val batch = attributeClicksBatch(views.toDF(), clicks.toDF())
       .select("click_id", "view_id").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(batch == Set((20L, 10L), (21L, 11L)), batch.toSeq.sorted.mkString(","))

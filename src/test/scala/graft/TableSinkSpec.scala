@@ -6,54 +6,6 @@ import graft.sources.TableSink
 
 class TableSinkSpec extends SparkSpec {
 
-  test("csv/json/parquet round-trips preserve data") {
-    val src = Tables(spark, sf).nation
-    val dir = Files.createTempDirectory("graft_fmt")
-    TableSink.writeCsv(src, s"$dir/csv")
-    TableSink.writeJson(src, s"$dir/json")
-    TableSink.writeParquet(src, s"$dir/pq")
-    val want = src.collect().map(_.toString).sorted
-    assert(TableSink.readCsv(spark, s"$dir/csv").collect().map(_.toString).sorted
-      .sameElements(want))
-    assert(TableSink.readJson(spark, s"$dir/json")
-      .select("n_nationkey", "n_name", "n_regionkey") // json reorders
-      .collect().map(_.toString).sorted.sameElements(want))
-    assert(spark.read.parquet(s"$dir/pq").collect().map(_.toString).sorted
-      .sameElements(want))
-  }
-
-  test("orc round-trip preserves data and pushes filters to the scan") {
-    val src = Tables(spark, sf).nation
-    val dir = Files.createTempDirectory("graft_orc")
-    TableSink.writeOrc(src, s"$dir/orc")
-    val back = TableSink.readOrc(spark, s"$dir/orc")
-    assert(back.collect().map(_.toString).sorted
-      .sameElements(src.collect().map(_.toString).sorted))
-    // same pushdown machinery as parquet
-    val filtered = back.filter(col("n_regionkey") === 1).select("n_name")
-    filtered.collect()
-    val plan = filtered.queryExecution.executedPlan.toString
-    assert(plan.contains("PushedFilters: [") && plan.contains("n_regionkey"), plan)
-    assert(plan.contains("ReadSchema") && !plan.contains("n_comment"),
-      "orc scan must prune unused columns: " + plan)
-  }
-
-  test("date-partitioned write prunes partitions on read") {
-    val dir = Files.createTempDirectory("graft_part")
-    TableSink.writeDatePartitioned(Tables(spark, sf).events, "ts", s"$dir/events")
-    val df = TableSink.readPartitioned(spark, s"$dir/events")
-      .filter(col("p_date") === "2024-01-05")
-    df.collect()
-    val plan = df.queryExecution.executedPlan.toString
-    assert(plan.contains("PartitionFilters: [isnotnull(p_date"), plan)
-    // pruned scan reads only the matching partition directory
-    val allDays = TableSink.readPartitioned(spark, s"$dir/events")
-      .select(countDistinct(col("p_date"))).head().getLong(0)
-    assert(allDays > 1, "test premise: multiple partitions exist")
-    val prunedDays = df.select(countDistinct(col("p_date"))).head().getLong(0)
-    assert(prunedDays <= 1)
-  }
-
   test("compaction merges small files, preserves rows, and is idempotent") {
     val dir = Files.createTempDirectory("graft_compact")
     val src = Tables(spark, sf).customer
