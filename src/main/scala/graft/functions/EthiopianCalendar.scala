@@ -79,17 +79,6 @@ object EthiopianCalendar {
     (start, end)
   }
 
-  /** The CURDATE() analog (6 uses in the reference, always as
-    * COALESCE(REPORT_END_DATE, CURDATE())): the report window of the
-    * Ethiopian month containing `today` — callers pass
-    * LocalDate.now() for a true "as of now" run, or any date for
-    * reproducible backfill.
-    */
-  def reportWindowAsOf(today: LocalDate): (LocalDate, LocalDate) = {
-    val (y, m, _) = toEthiopian(today)
-    reportWindow(m, y)
-  }
-
   /** DuckDB SQL fragment computing the same 'D/M/Y' string for a date
     * expression — used to build oracle SQL that mirrors
     * [[ethiopianDMY]] exactly (integer floor-div `//` on positive

@@ -1,12 +1,14 @@
 package graft.sources
 
-import java.io.{BufferedInputStream, BufferedOutputStream, FileInputStream, FileOutputStream, OutputStreamWriter}
+import java.io.{BufferedInputStream, BufferedOutputStream, FileInputStream, OutputStream, OutputStreamWriter}
 import java.nio.charset.{Charset, StandardCharsets}
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
-import java.security.MessageDigest
+import java.security.{DigestOutputStream, MessageDigest}
 import java.util.zip.{ZipEntry, ZipOutputStream}
+import scala.collection.immutable.ListMap
 import scala.collection.mutable.ArrayBuffer
 import scala.jdk.CollectionConverters._
+import scala.util.Using
 
 import org.apache.spark.TaskContext
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -29,9 +31,12 @@ import org.apache.spark.sql.types.StructType
   * final stage; then ONE Spark job runs every report's final stage
   * together, each task writing its partition's CSV part file with
   * Spark's own CSV generator and options (the bytes `df.write.csv`
-  * writes). The parts are then stream-concatenated on the driver —
-  * file-level IO, never rows-in-memory, so a 100 TB export streams
-  * through. The zip stage is also streaming (4 MiB buffers). The
+  * writes). The driver then writes the package in one streaming pass:
+  * each report's parts are concatenated straight into its entry of the
+  * inner zip, which is itself written into the package's `<tag>.zip`
+  * entry and digested on the way — file-level IO, never rows-in-memory,
+  * and no intermediate CSV, inner zip or checksum file on disk
+  * (`ZipOutputStream` switches to ZIP64 on its own past 4 GiB). The
   * package appears under its final name only once it is complete; a
   * failed run deletes what it wrote and leaves an earlier package of
   * the same tag in place.
@@ -42,16 +47,7 @@ object ExportJob {
       packagePath: Path,
       innerZip: String,
       checksum: String,
-      csvFiles: Seq[String],
-      dataDirs: Seq[String] = Nil)
-
-  /** Reports at or under this many bytes merge to one CSV on the
-    * driver (the reference's facility-sized artifact — a byte-stream
-    * concat, seconds at worst); past it the driver funnel would
-    * SERIALIZE a distributed write through one machine, so the report
-    * ships as its parallel part files + a manifest instead.
-    */
-  val MergeBudgetBytes: Long = 1L << 30
+      csvFiles: Seq[String])
 
   /** The SQL execution name of a report's planning. */
   val PlanExecution = "graft export: plan report"
@@ -64,22 +60,18 @@ object ExportJob {
       queries: Map[String, DataFrame],
       constants: Seq[(String, String)],
       outDir: Path,
-      tag: String,
-      mergeBudgetBytes: Long = MergeBudgetBytes): Result = {
+      tag: String): Result = {
     Files.createDirectories(outDir)
+    // one projection appends (or replaces in place) every constant
+    val constantCols = ListMap(constants.map { case (k, v) => k -> lit(v) }: _*)
     val reports = queries.toSeq.sortBy(_._1).map { case (name, df) =>
-      name -> constants.foldLeft(df) { case (d, (k, v)) => d.withColumn(k, lit(v)) }
+      name -> df.withColumns(constantCols)
     }
     // everything this run has written, each path recorded once the run
-    // has created it, so that a failure anywhere (a report's job, a
-    // merge, the zip) deletes exactly that and nothing an earlier run
-    // left, such as the previous package of the same tag
+    // has created it, so that a failure anywhere (a report's job, the
+    // package) deletes exactly that and nothing an earlier run left,
+    // such as the previous package of the same tag
     val created = ArrayBuffer[Path]()
-    def touch(p: Path): Path = {
-      Files.newOutputStream(p).close()
-      created += p
-      p
-    }
     try {
       val partDirs = reports.map { case (name, _) =>
         val partDir = outDir.resolve(s".parts_$name")
@@ -88,68 +80,37 @@ object ExportJob {
         partDir
       }
       writeParts(spark, reports.map(_._2).zip(partDirs))
-      val dataDirs = ArrayBuffer[Path]()
-      val csvs = reports.map(_._1).zip(partDirs).map { case (name, partDir) =>
-        val parts = listParts(partDir)
-        val totalBytes = parts.map(Files.size(_)).sum
-        if (totalBytes <= mergeBudgetBytes) {
-          val csv = touch(outDir.resolve(s"${name}_$tag.csv"))
-          mergeCsvParts(parts, csv)
-          deleteRecursively(partDir)
-          csv
-        } else {
-          // manifest-at-scale path: the part files ARE the report (each
-          // carries its own header — spark.read.csv(dir) reads the set
-          // back as one table); the driver only renames them into place
-          // and writes a name,bytes,sha256 manifest. The manifest rides
-          // the checksummed zip in the CSV's stead, so the package
-          // checksum TRANSITIVELY attests every part's content (the
-          // reference contract: its checksum covers the full export) —
-          // the data dir stays beside the package and nothing
-          // corpus-sized moves through one machine.
-          val dataDir = outDir.resolve(s"${name}_$tag")
-          deleteRecursively(dataDir)
-          created += Files.createDirectories(dataDir)
-          val placed = parts.zipWithIndex.map { case (p, i) =>
-            val t = dataDir.resolve(f"part-$i%05d.csv")
-            Files.move(p, t)
-            t
-          }
-          deleteRecursively(partDir)
-          dataDirs += dataDir
-          // per-part digests run DISTRIBUTED (one task per part, where
-          // the part lives on a shared FS) — the driver hashes nothing:
-          // it only collects parts-many 64-char strings
-          val digests = partDigests(spark, placed)
-          val manifest = touch(outDir.resolve(s"${name}_${tag}_manifest.csv"))
-          val lines = "file,bytes,sha256" +: placed.map(p =>
-            s"${dataDir.getFileName}/${p.getFileName},${Files.size(p)}," +
-              digests(p.toString))
-          Files.write(manifest,
-            lines.mkString("", "\n", "\n").getBytes(StandardCharsets.UTF_8))
-          manifest
-        }
-      }
-
-      val innerZip = touch(outDir.resolve(s"$tag.zip"))
-      zip(innerZip, csvs.map(p => p.getFileName.toString -> p))
-      val checksum = sha256(innerZip)
-      val checksumFile = touch(outDir.resolve(s"${tag}_checksum.txt"))
-      Files.write(checksumFile, checksum.getBytes(StandardCharsets.UTF_8))
+      val csvs = reports.map { case (name, _) => s"${name}_$tag.csv" }
       // the package is written under a hidden name and renamed into
       // place last, so a reader (or a crash) never sees a torn one
-      val staged = touch(outDir.resolve(s".${tag}_packaged.zip.tmp"))
-      zip(staged, Seq(
-        innerZip.getFileName.toString -> innerZip,
-        checksumFile.getFileName.toString -> checksumFile))
-      // mirror the reference's cleanup of intermediates (export.py:204-210,317-326)
-      Files.deleteIfExists(innerZip)
-      Files.deleteIfExists(checksumFile)
-      csvs.foreach(Files.deleteIfExists(_))
+      val staged = outDir.resolve(s".${tag}_packaged.zip.tmp")
+      val out = Files.newOutputStream(staged)
+      created += staged
+      val md = MessageDigest.getInstance("SHA-256")
+      val checksum = Using.resource(new ZipOutputStream(
+          new BufferedOutputStream(out, 4 << 20))) { pkg =>
+        pkg.putNextEntry(new ZipEntry(s"$tag.zip"))
+        // the inner zip's bytes are digested on their way into the
+        // package entry; closing the inner zip must not close the package
+        val digested = new DigestOutputStream(pkg, md) {
+          override def close(): Unit = flush()
+        }
+        Using.resource(new ZipOutputStream(new BufferedOutputStream(digested, 1 << 16))) { inner =>
+          csvs.zip(partDirs).foreach { case (csv, partDir) =>
+            inner.putNextEntry(new ZipEntry(csv))
+            mergeCsvParts(listParts(partDir), inner)
+            inner.closeEntry()
+            deleteRecursively(partDir)
+          }
+        }
+        val hex = md.digest().map("%02x".format(_)).mkString
+        pkg.putNextEntry(new ZipEntry(s"${tag}_checksum.txt"))
+        pkg.write(hex.getBytes(StandardCharsets.UTF_8))
+        hex
+      }
       val pkg = Files.move(staged, outDir.resolve(s"${tag}_packaged.zip"),
         StandardCopyOption.ATOMIC_MOVE)
-      Result(pkg, s"$tag.zip", checksum, csvs.map(_.getFileName.toString),
-        dataDirs.toSeq.map(_.getFileName.toString))
+      Result(pkg, s"$tag.zip", checksum, csvs)
     } catch {
       case e: Throwable =>
         created.foreach { p =>
@@ -216,21 +177,6 @@ object ExportJob {
       } finally Files.deleteIfExists(tmp)
     }
 
-  /** SHA-256 of every part file, computed on executors — one task per
-    * part (the parts of a >1 GiB report live on a shared filesystem
-    * in a real deployment; hashing them serially on the driver would
-    * re-serialize the distributed write the manifest path exists to
-    * avoid). Returns path → hex digest.
-    */
-  private def partDigests(spark: SparkSession,
-      parts: Seq[Path]): Map[String, String] = {
-    import spark.implicits._
-    spark.createDataset(parts.map(_.toString))
-      .repartition(parts.size)
-      .map(p => (p, sha256(Paths.get(p))))
-      .collect().toMap
-  }
-
   private[graft] def listParts(partDir: Path): Seq[Path] = {
     // Files.list holds an OS directory fd until closed — a leak per
     // call in a long-lived driver running repeated exports
@@ -241,58 +187,29 @@ object ExportJob {
     finally s.close()
   }
 
-  /** Concatenate Spark csv part files into one CSV, keeping a single
-    * header row. Bytes are copied verbatim after the header line of
-    * each part (a line-based merge would normalize newlines inside
-    * quoted multiline fields); O(buffer) memory.
+  /** Concatenate Spark csv part files into one CSV on `out`, keeping a
+    * single header row. Bytes are copied verbatim after the header line
+    * of each part (a line-based merge would normalize newlines inside
+    * quoted multiline fields); O(buffer) memory. `out` stays open.
     */
-  private[graft] def mergeCsvParts(parts: Seq[Path], target: Path): Unit = {
-    val out = new BufferedOutputStream(new FileOutputStream(target.toFile), 4 << 20)
-    try {
-      var first = true
-      parts.foreach { p =>
-        val in = new BufferedInputStream(new FileInputStream(p.toFile), 4 << 20)
-        try {
-          // scan past the header line (headers never contain newlines)
-          var b = in.read()
-          val header = new java.io.ByteArrayOutputStream()
-          while (b >= 0 && b != '\n') { header.write(b); b = in.read() }
-          if (first && (header.size() > 0 || b == '\n')) {
-            out.write(header.toByteArray); out.write('\n'); first = false
-          }
-          // raw byte copy of the remainder
-          val buf = new Array[Byte](1 << 16)
-          var n = in.read(buf)
-          while (n >= 0) { out.write(buf, 0, n); n = in.read(buf) }
-        } finally in.close()
-      }
-    } finally out.close()
-  }
-
-  private def zip(target: Path, entries: Seq[(String, Path)]): Unit = {
-    val zos = new ZipOutputStream(new BufferedOutputStream(
-      new FileOutputStream(target.toFile), 4 << 20))
-    try entries.foreach { case (name, p) =>
-      zos.putNextEntry(new ZipEntry(name))
+  private[graft] def mergeCsvParts(parts: Seq[Path], out: OutputStream): Unit = {
+    var first = true
+    parts.foreach { p =>
       val in = new BufferedInputStream(new FileInputStream(p.toFile), 4 << 20)
       try {
+        // scan past the header line (headers never contain newlines)
+        var b = in.read()
+        val header = new java.io.ByteArrayOutputStream()
+        while (b >= 0 && b != '\n') { header.write(b); b = in.read() }
+        if (first && (header.size() > 0 || b == '\n')) {
+          out.write(header.toByteArray); out.write('\n'); first = false
+        }
+        // raw byte copy of the remainder
         val buf = new Array[Byte](1 << 16)
         var n = in.read(buf)
-        while (n >= 0) { zos.write(buf, 0, n); n = in.read(buf) }
+        while (n >= 0) { out.write(buf, 0, n); n = in.read(buf) }
       } finally in.close()
-      zos.closeEntry()
-    } finally zos.close()
-  }
-
-  def sha256(p: Path): String = {
-    val md = MessageDigest.getInstance("SHA-256")
-    val in = new BufferedInputStream(new FileInputStream(p.toFile), 4 << 20)
-    try {
-      val buf = new Array[Byte](1 << 16)
-      var n = in.read(buf)
-      while (n >= 0) { md.update(buf, 0, n); n = in.read(buf) }
-    } finally in.close()
-    md.digest().map("%02x".format(_)).mkString
+    }
   }
 
   private def deleteRecursively(p: Path): Unit = {

@@ -1,6 +1,6 @@
 package graft.sources
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.Paths
 import java.time.LocalDate
 
 import org.apache.spark.sql.functions.col
@@ -11,22 +11,22 @@ import graft.functions.EthiopianCalendar
   * derive the Gregorian report window from an Ethiopian month + year,
   * run every configured query, package the CSVs (zip + SHA-256).
   *
-  * Two invocation modes:
+  *   runMain graft.sources.ExportMain <dataDir> <outDir> <config.json>
   *
-  *   runMain graft.sources.ExportMain <sfDir> <outDir> <ethMonth 1-13> <ethYear>
-  *   runMain graft.sources.ExportMain <sfDir> <outDir> <config.json>
-  *
-  * Config mode mirrors export_config.json: the JSON names the
-  * queries (tag → SparkEntry.queries key), the constant columns, and
-  * optionally the window. With no window configured the run is
-  * "as of now" — the Ethiopian month containing today, the
-  * COALESCE(REPORT_END_DATE, CURDATE()) behavior of the reference.
+  * The JSON mirrors export_config.json: it names the queries (tag →
+  * SparkEntry.queries key), the constant columns (derived from the dim
+  * tables when absent), optionally the window and the JDBC source.
+  * With no window configured the run is "as of now" — the Ethiopian
+  * month containing today, the COALESCE(REPORT_END_DATE, CURDATE())
+  * behavior of the reference.
   */
 object ExportMain {
 
   /** Ethiopian month names as in export.py:102-103. */
   val Months = Seq("Meskerem", "Tikimit", "Hidar", "Tahisas", "Tir", "Yekatit",
     "Megabit", "Miazia", "Ginbot", "Sene", "Hamle", "Nehassie", "Pagume")
+
+  val Usage = "usage: ExportMain <dataDir> <outDir> <config.json>"
 
   def main(args: Array[String]): Unit = {
     val spark = GraftSession.local(
@@ -42,25 +42,23 @@ object ExportMain {
     */
   def run(spark: org.apache.spark.sql.SparkSession,
       args: Array[String]): ExportJob.Result = {
-    val (argDir, outDir) = (args(0), args(1))
-    val config: Option[ExportConfig] =
-      if (args.length >= 3 && args(2).endsWith(".json"))
-        Some(ExportConfig.load(Paths.get(args(2))))
-      else None
+    if (args.length != 3 || !args(2).endsWith(".json"))
+      throw new IllegalArgumentException(s"$Usage (got ${args.mkString(" ")})")
+    val Array(argDir, outDir, configPath) = args
+    val config = ExportConfig.load(Paths.get(configPath))
 
     // configured DB_URL switches the source to JDBC (the reference's
     // analytics_db); otherwise the parquet directory argument stands
-    val sfDir = config.flatMap(_.dbUrl).getOrElse(argDir)
+    val sfDir = config.dbUrl.getOrElse(argDir)
     // the config's credentials hold for this run only: the prior
     // values come back afterwards, so the password does not stay
     // readable in the session conf and a later export without
     // credentials does not silently reuse them
-    val creds = config.toSeq.flatMap(c => Seq(
-      "DB_USER" -> "graft.jdbc.user", "DB_PASS" -> "graft.jdbc.password")
-      .flatMap { case (k, key) => c.db.get(k).map(key -> _) })
+    val creds = Seq("DB_USER" -> "graft.jdbc.user", "DB_PASS" -> "graft.jdbc.password")
+      .flatMap { case (k, key) => config.db.get(k).map(key -> _) }
     val prior = creds.map { case (key, _) => key -> spark.conf.getOption(key) }
     creds.foreach { case (key, v) => spark.conf.set(key, v) }
-    try runWith(spark, args, config, sfDir, outDir)
+    try runWith(spark, config, sfDir, outDir)
     finally prior.foreach {
       case (key, Some(v)) => spark.conf.set(key, v)
       case (key, None) => spark.conf.unset(key)
@@ -94,27 +92,20 @@ object ExportMain {
   }
 
   private def runWith(spark: org.apache.spark.sql.SparkSession,
-      args: Array[String], config: Option[ExportConfig], sfDir: String,
-      outDir: String): ExportJob.Result = {
+      config: ExportConfig, sfDir: String, outDir: String): ExportJob.Result = {
 
-    // window: CLI args > config > "as of now" (CURDATE semantics)
-    def numeric(s: String) = s.nonEmpty && s.forall(_.isDigit)
-    val (m, y) = (config, args.drop(2)) match {
-      case (_, Array(mS, yS, _*)) if numeric(mS) && numeric(yS) =>
-        (mS.toInt, yS.toInt)
-      case (_, Array(mS, yS, _*)) =>
-        throw new IllegalArgumentException(
-          s"window args must be numeric: month=$mS year=$yS")
-      case (Some(c), _) if c.ethMonth.isDefined || c.ethYear.isDefined =>
+    // window: config, else "as of now" (CURDATE semantics)
+    val (m, y) =
+      if (config.ethMonth.isDefined || config.ethYear.isDefined) {
         // a half-specified window is a config mistake, not "as of now"
-        if (c.ethMonth.isEmpty || c.ethYear.isEmpty)
+        if (config.ethMonth.isEmpty || config.ethYear.isEmpty)
           throw new IllegalArgumentException("config window needs BOTH " +
-            s"eth_month and eth_year (got month=${c.ethMonth}, year=${c.ethYear})")
-        (c.ethMonth.get, c.ethYear.get)
-      case _ =>
+            s"eth_month and eth_year (got month=${config.ethMonth}, year=${config.ethYear})")
+        (config.ethMonth.get, config.ethYear.get)
+      } else {
         val (ey, em, _) = EthiopianCalendar.toEthiopian(LocalDate.now())
         (em, ey)
-    }
+      }
     // validate BEFORE the window math: an out-of-range month would
     // otherwise compute a silently-wrong window and only crash later
     // at the month-name lookup with a bare IndexOutOfBounds
@@ -128,34 +119,23 @@ object ExportMain {
     // plans capture the pinned frame when they are built, so only the
     // construction runs in the scope; ExportJob writes them in order
     def pinned[T](build: => T): T = Tables.withEvents(spark, sfDir, events)(build)
-    val queries: Map[String, org.apache.spark.sql.DataFrame] = config match {
-      case Some(c) =>
-        c.queries.map { case (tag, qname) =>
-          // window-dependent reports run at the runtime window; the
-          // rest are the registered (fixed-window, oracle-matched)
-          // queries unchanged
-          val df = pinned(graft.operators.LineLists.asOf.get(qname) match {
-            case Some(build) => build(spark, sfDir, end)
-            case None => SparkEntry.queries.getOrElse(qname,
-              throw new IllegalArgumentException(
-                s"config names unknown query '$qname' for tag '$tag'"))(spark, sfDir)
-          })
-          tag -> df
-        }.toMap
-      case None =>
-        // the window keeps the scan's file order, as before the pin
-        val windowed = t.events.filter(
-          col("ts") >= start.toString && col("ts") < end.plusDays(1).toString)
-        Map(
-          "Event_LineList" -> pinned(
-            graft.operators.Relational.lineListAsOf(spark, sfDir, end)),
-          "Event_Window" -> windowed)
-    }
+    val queries = config.queries.map { case (tag, qname) =>
+      // window-dependent reports run at the runtime window; the rest
+      // are the registered (fixed-window, oracle-matched) queries
+      // unchanged
+      tag -> pinned(graft.operators.LineLists.asOf.get(qname) match {
+        case Some(build) => build(spark, sfDir, end)
+        case None => SparkEntry.queries.getOrElse(qname,
+          throw new IllegalArgumentException(
+            s"config names unknown query '$qname' for tag '$tag'"))(spark, sfDir)
+      })
+    }.toMap
 
     // constants from config, else from the dim tables, first row —
     // mirroring the facility_details/hmiscode lookups (export.py:257-279)
-    val constants: Seq[(String, String)] = config.map(_.constants).filter(_.nonEmpty)
-      .getOrElse {
+    val constants: Seq[(String, String)] =
+      if (config.constants.nonEmpty) config.constants
+      else {
         val firstNation = t.nation.orderBy("n_nationkey").limit(1)
           .join(t.region, col("n_regionkey") === col("r_regionkey"))
           .select("r_name", "n_name").head()

@@ -11,6 +11,11 @@ import graft.sources.ExportJob
 
 class ExportJobSpec extends SparkSpec {
 
+  /** The reference digest: SHA-256 of a file, read back from disk. */
+  private def sha256(p: java.nio.file.Path): String =
+    java.security.MessageDigest.getInstance("SHA-256").digest(Files.readAllBytes(p))
+      .map("%02x".format(_)).mkString
+
   test("csv merge preserves quoted multiline fields byte-exactly") {
     import spark.implicits._
     val out = Files.createTempDirectory("graft_multiline")
@@ -77,46 +82,10 @@ class ExportJobSpec extends SparkSpec {
     assert(csv.head.split(",").takeRight(3).toSeq == Seq("Region", "Facility", "HMISCode"))
     assert(csv.tail.nonEmpty && csv.tail.forall(_.endsWith("Addis,TestFacility,H123")))
     inner.close(); zf.close()
-  }
-
-  test("manifest-at-scale path: part files + manifest replace the driver merge past the byte gate") {
-    import spark.implicits._
-    val out = Files.createTempDirectory("graft_export_manifest")
-    val df = (1 to 500).map(i => (i.toLong, s"name$i")).toDF("id", "name")
-      .repartition(4)
-    val res = ExportJob.run(spark, Map("big" -> df),
-      constants = Seq("Facility" -> "F1"), outDir = out, tag = "t1",
-      mergeBudgetBytes = 1L)
-    assert(res.dataDirs == Seq("big_t1"))
-    assert(res.csvFiles == Seq("big_t1_manifest.csv"))
-    // the data dir stays beside the package and reads back as one
-    // table (every part carries its own header)
-    val dataDir = out.resolve("big_t1")
-    val back = spark.read.option("header", "true").csv(dataDir.toString)
-    assert(back.count() == 500)
-    assert(back.columns.toSeq == Seq("id", "name", "Facility"))
-    // the packaged manifest lists exactly the on-disk parts with sizes
-    val zf = new ZipFile(res.packagePath.toFile)
-    val tmpInner = Files.createTempFile("inner", ".zip")
-    Files.copy(zf.getInputStream(zf.getEntry("t1.zip")), tmpInner,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    val inner = new ZipFile(tmpInner.toFile)
-    val lines = Source.fromInputStream(
-        inner.getInputStream(inner.getEntry("big_t1_manifest.csv")))
-      .getLines().toSeq
-    assert(lines.head == "file,bytes,sha256")
-    val listed = lines.tail.map { l =>
-      val Array(f, b, h) = l.split(","); f -> ((b.toLong, h))
-    }.toMap
-    // name, size AND content digest of every on-disk part — the
-    // package checksum now transitively attests part content
-    val onDisk = Files.list(dataDir).iterator().asScala
-      .map(p => s"big_t1/${p.getFileName}" ->
-        ((Files.size(p), ExportJob.sha256(p)))).toMap
-    assert(listed == onDisk && listed.nonEmpty)
-    assert(listed.values.map(_._2).toSeq.distinct.length == listed.size,
-      "distinct parts must carry distinct digests")
-    inner.close(); zf.close()
+    // the package is all that is left: no part dir, CSV, inner zip or
+    // checksum file beside it
+    val left = Files.list(out).iterator().asScala.map(_.getFileName.toString).toSet
+    assert(left == Set("TestFacilityH123_Tir_2016_packaged.zip"), left.mkString(", "))
   }
 
   test("a report that fails mid-package leaves no partial package behind") {
@@ -141,20 +110,32 @@ class ExportJobSpec extends SparkSpec {
   }
 
   test("a failing re-export keeps the previous package byte for byte") {
-    import spark.implicits._
+    import org.apache.spark.sql.functions.{col, lit, raise_error, when}
     val out = Files.createTempDirectory("graft_export_rerun")
-    val df = Seq((1L, "a"), (2L, "b")).toDF("id", "v")
+    // a range frame, so the failing row is met in a task of the write job
+    val df = spark.range(1, 41, 1, 4).select(col("id"))
     val first = ExportJob.run(spark, Map("r" -> df), Nil, out, "t")
     val bytes = Files.readAllBytes(first.packagePath)
-    // a directory holds the inner zip's name, so the rerun cannot write it
-    Files.createDirectory(out.resolve("t.zip"))
+    def assertKept(blocking: String*): Unit = {
+      assert(Files.exists(first.packagePath), "the failed rerun deleted the previous package")
+      assert(Files.readAllBytes(first.packagePath).sameElements(bytes))
+      val left = Files.list(out).iterator().asScala.map(_.getFileName.toString).toSet
+      assert(left == Set("t_packaged.zip") ++ blocking, left.mkString(", "))
+    }
+    // the rerun's write job fails in a report's task
+    val bad = df.select(when(col("id") === 7, raise_error(lit("injected rerun failure")))
+      .otherwise(col("id")).as("id"))
+    val e = intercept[Exception](ExportJob.run(spark, Map("r" -> bad), Nil, out, "t"))
+    val messages = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .map(_.getMessage).mkString(" | ")
+    assert(messages.contains("injected rerun failure"), messages)
+    assertKept()
+    // a directory holds the staged package's name, so the rerun cannot write it
+    Files.createDirectory(out.resolve(".t_packaged.zip.tmp"))
     intercept[java.io.IOException] {
       ExportJob.run(spark, Map("r" -> df), Nil, out, "t")
     }
-    assert(Files.exists(first.packagePath), "the failed rerun deleted the previous package")
-    assert(Files.readAllBytes(first.packagePath).sameElements(bytes))
-    val left = Files.list(out).iterator().asScala.map(_.getFileName.toString).toSet
-    assert(left == Set("t.zip", "t_packaged.zip"), left.mkString(", "))
+    assertKept(".t_packaged.zip.tmp")
   }
 
   test("a month sweep: each configured report follows the month or is declared window-free") {
@@ -257,7 +238,7 @@ class ExportJobSpec extends SparkSpec {
       val tmpInner = Files.createTempFile("inner", ".zip")
       Files.copy(zf.getInputStream(zf.getEntry(res.innerZip)), tmpInner,
         java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-      assert(ExportJob.sha256(tmpInner) == res.checksum)
+      assert(sha256(tmpInner) == res.checksum)
       val inner = new ZipFile(tmpInner.toFile)
       try inner.entries().asScala.map(e => e.getName ->
         Source.fromInputStream(inner.getInputStream(e)).mkString).toMap
@@ -352,15 +333,26 @@ class ExportJobSpec extends SparkSpec {
     }
   }
 
-  test("reportWindowAsOf picks the Ethiopian month containing today") {
-    import graft.functions.EthiopianCalendar._
-    val today = java.time.LocalDate.parse("2024-01-15")
-    val (start, end) = reportWindowAsOf(today)
-    val (y, m, _) = toEthiopian(today)
-    assert((start, end) == reportWindow(m, y))
-    assert(!start.isAfter(end))
-    // the window always spans 30 days (21st -> 20th of consecutive months)
-    assert(java.time.temporal.ChronoUnit.DAYS.between(start, end) == 29)
+  test("a windowless config exports as of now: the tag names today's Ethiopian month") {
+    val cfgPath = Files.createTempFile("asofnow", ".json")
+    Files.writeString(cfgPath, """{"queries":{"A":"q_line_list"}}""")
+    val (y, m, _) = graft.functions.EthiopianCalendar.toEthiopian(java.time.LocalDate.now())
+    val res = graft.sources.ExportMain.run(spark,
+      Array(sf, Files.createTempDirectory("graft_asofnow").toString, cfgPath.toString))
+    val month = graft.sources.ExportMain.Months(m - 1)
+    assert(res.packagePath.getFileName.toString.endsWith(s"_${month}_${y}_packaged.zip"),
+      res.packagePath)
+    assert(res.csvFiles == Seq(s"A_${res.innerZip.stripSuffix(".zip")}.csv"))
+  }
+
+  test("ExportMain refuses anything but <dataDir> <outDir> <config.json> with its usage line") {
+    val out = Files.createTempDirectory("graft_usage").toString
+    Seq(Array(sf, out, "5", "2016"), Array(sf, out), Array(sf, out, "c.json", "5"))
+      .foreach { args =>
+        val e = intercept[IllegalArgumentException](graft.sources.ExportMain.run(spark, args))
+        assert(e.getMessage.contains(graft.sources.ExportMain.Usage), e.getMessage)
+      }
+    assert(Files.list(java.nio.file.Paths.get(out)).count() == 0)
   }
 
   test("jdbc-sourced export round-trips a report through embedded Derby") {

@@ -28,9 +28,9 @@ class ExportWriterSpec extends SparkSpec with Eventually {
   private def sparkCsv(df: DataFrame): Seq[Byte] = {
     val dir = Files.createTempDirectory("graft_ref_csv")
     df.write.mode("overwrite").option("header", "true").csv(dir.toString)
-    val merged = Files.createTempFile("graft_ref", ".csv")
+    val merged = new java.io.ByteArrayOutputStream()
     ExportJob.mergeCsvParts(ExportJob.listParts(dir), merged)
-    Files.readAllBytes(merged).toSeq
+    merged.toByteArray.toSeq
   }
 
   /** The CSV an export package carries for the one report `df`. */
