@@ -179,10 +179,10 @@ object MediaCodecs {
   }
 
   /** Inflate one zlib scanline stream and reverse the five PNG
-    * filters — the shared decode core behind [[decodePngPixels]] and
-    * the per-frame APNG decode ([[decodeApngFrames]]).
+    * filters — the decode core behind [[decodePngPixels]], shared
+    * with MediaOpsSpec's per-frame APNG reference decoder.
     */
-  private def inflateUnfilter(z: Array[Byte], w: Int, h: Int,
+  private[graft] def inflateUnfilter(z: Array[Byte], w: Int, h: Int,
       bpp: Int): Option[Array[Byte]] = {
     val inflater = new java.util.zip.Inflater()
     inflater.setInput(z)
@@ -409,29 +409,6 @@ object MediaCodecs {
     }
     if (fi != n - 1) return None
     Some(frames.map(_.toByteArray))
-  }
-
-  /** Decoded APNG frames: each a full pixel plane. */
-  final case class ApngFrames(width: Int, height: Int, channels: Int,
-      frames: Vector[Array[Byte]])
-
-  /** FULL APNG frame decode: demux the per-frame streams, then
-    * inflate + unfilter each with the shared PNG core.
-    */
-  def decodeApngFrames(bytes: Array[Byte]): Option[ApngFrames] = {
-    val meta = parsePng(bytes).getOrElse(return None)
-    if (!meta.bitDepth.contains(8)) return None
-    val bpp = (bytes(25) & 0xFF) match {
-      case 0 => 1
-      case 2 => 3
-      case 6 => 4
-      case _ => return None
-    }
-    val w = meta.width.get; val h = meta.height.get
-    val streams = apngFrameStreams(bytes).getOrElse(return None)
-    val planes = streams.map(z =>
-      inflateUnfilter(z, w, h, bpp).getOrElse(return None))
-    Some(ApngFrames(w, h, bpp, planes))
   }
 
   /** Re-wrap one demuxed APNG frame stream as a standalone still PNG

@@ -163,11 +163,8 @@ object Bpe {
     * (token-weighted) and a deterministic id assigned by
     * (count desc, symbol asc). Vocabulary-sized throughout; the id
     * window runs over the aggregated symbol table, never the corpus.
+    * `syms` is [[learn]]'s final symbol table.
     */
-  def vocabReport(docs: DataFrame, merges: Int = Merges,
-      textCol: String = "text"): DataFrame =
-    vocabReportFrom(learn(docs, merges, textCol)._2)
-
   private[graft] def vocabReportFrom(syms: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     syms.groupBy("sym").agg(sum(col("freq")).as("sym_freq"))
@@ -218,12 +215,9 @@ object Bpe {
     * Scale shape: ONE corpus explode collapsed map-side to
     * (lang, word) — per-language-vocabulary-sized, so the exchange
     * and the symbols-per-word join never carry corpus rows; the
-    * output is one row per language.
+    * output is one row per language. `syms` is [[learn]]'s final
+    * symbol table.
     */
-  def fertility(docs: DataFrame, merges: Int = Merges,
-      textCol: String = "text", langCol: String = "lang"): DataFrame =
-    fertilityFrom(docs, learn(docs, merges, textCol)._2, textCol, langCol)
-
   private[graft] def fertilityFrom(docs: DataFrame, syms: DataFrame,
       textCol: String = "text", langCol: String = "lang"): DataFrame = {
     val wt = syms.groupBy("word").agg(count(lit(1)).as("n_sym"))

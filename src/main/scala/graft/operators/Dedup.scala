@@ -933,7 +933,7 @@ object Dedup {
   // -------------------------------------------- embedding cosine pairs
 
   /** Cosine near-dup pairs, probe side restricted by `probeFilter`
-    * (brute force baseline; see Similarity.lshTopK for the bucketed
+    * (brute force baseline; [[embeddingNearDupLsh]] is the bucketed
     * scale path).
     */
   /** LSH-bucketed cosine near-dup — the scale path: candidates must

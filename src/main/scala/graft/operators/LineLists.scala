@@ -192,8 +192,7 @@ object LineLists {
   // ------------------------------------------------------------------
   // Batch sessionization — gaps-and-islands: session boundary when the
   // gap to the previous event exceeds 30 minutes; running sum of
-  // boundary flags numbers the sessions. The batch twin of
-  // streaming.EventStream.sessionize (same gap rule).
+  // boundary flags numbers the sessions.
   // ------------------------------------------------------------------
   private val sessionizeBatch = GraftQuery(
     "q_sessionize_batch",

@@ -152,7 +152,7 @@ object LlmOps {
     *
     * Routed through the session-scoped persisted index
     * ([[graft.sources.AnnIndexCache]]): the first probe in a process
-    * builds the index (the same seeded fit ivfTopK runs — results
+    * builds the index (the same seeded fit as the in-query form — results
     * bit-identical, IvfIndexSpec pins the registry path), repeated
     * probes pay only probe-batch cost. Repeated probing IS the ANN
     * access pattern; the in-query re-fit was 2/3 of the 256× wall.
@@ -1826,7 +1826,7 @@ object LlmOps {
       Bpe.cachedLearn(Tables(s, dir).documents, dir)._1)
       .orderBy("rank"))
 
-  /** BPE vocabulary artifact (Bpe.vocabReport): distinct final
+  /** BPE vocabulary artifact (Bpe.vocabReportFrom): distinct final
     * symbols with token-weighted corpus counts and deterministic ids
     * — the second half of the shipped tokenizer (merges + vocab).
     */
@@ -1863,7 +1863,7 @@ object LlmOps {
       Bpe.cachedLearn(Tables(s, dir).documents, dir)._2)
       .orderBy("doc_id"))
 
-  /** Per-language tokenizer fertility (Bpe.fertility): tokens/word
+  /** Per-language tokenizer fertility (Bpe.fertilityFrom): tokens/word
     * and chars/token by language under the learned merges — the
     * multilingual-tokenizer evaluation step. Exact integer ppm
     * ratios; the oracle replays training merge-for-merge (the

@@ -262,7 +262,7 @@ object Retrieval {
     * doc_id whose partitions are per-doc DISTINCT TERM counts (tens
     * to thousands, never corpus-sized) — WindowGroupLimit prunes to
     * k per group map-side before the sort, so this is NOT the
-    * big-candidate-set trap that forced BoundedTopK in ivfTopK.
+    * big-candidate-set trap that forced BoundedTopK in the IVF scan.
     * Ties break on the term string for cross-engine determinism.
     *
     * The vocab join carries a shuffle_hash hint — the AQE
@@ -394,19 +394,6 @@ object Retrieval {
     * allows). Measured at the blow-up: 64× 29.8 → 19.2 s, 256×
     * 141.7 → 44.8 s e2e (the 4.75× ratio drops to 2.3× — sublinear).
     */
-  /** LM-scoring stage of [[perplexityBucket]], exposed for plan
-    * auditing (the bucket assignment runs over an eager
-    * localCheckpoint of this frame, so the registered query's
-    * executedPlan cannot show these joins): per-language clean-slice
-    * bigram counts LEFT-joined back onto every document's bigrams
-    * with deterministic integer smoothing, reduced to one scored row
-    * per document.
-    */
-  def perplexityScores(docs: DataFrame, textCol: String = "text",
-      idCol: String = "doc_id", langCol: String = "lang"): DataFrame =
-    perplexityScoresWithLm(docs, textCol, idCol, langCol,
-      perplexityScoreTableGate(docs))._1
-
   /** The perplexity plan-shape gate: the "scoretable" shape iff the
     * estimated occurrence shuffle (occ shuffle ≈ 4× the optimized-plan
     * bytes — 722 MB of 1024× documents → the measured 2.8 GB
@@ -421,11 +408,17 @@ object Retrieval {
     estOccShuffle < Dedup.cacheBudgetBytes(docs)
   }
 
-  /** [[perplexityScores]] plus the persisted LM count frame, so
-    * [[perplexityBucket]] can release the cache once the scored frame
-    * materializes. Repeated standalone calls retire the previous
-    * call's cache (the minhashLsh lifecycle). `scoreTable` is the
-    * plan-shape verdict ([[perplexityScoreTableGate]]).
+  /** LM-scoring stage of [[perplexityBucket]]: per-language
+    * clean-slice bigram counts LEFT-joined back onto every document's
+    * bigrams with deterministic integer smoothing, reduced to one
+    * scored row per document. Returned with the persisted LM count
+    * frame, so [[perplexityBucket]] can release the cache once the
+    * scored frame materializes. Repeated standalone calls retire the
+    * previous call's cache (the minhashLsh lifecycle). `scoreTable` is
+    * the plan-shape verdict ([[perplexityScoreTableGate]]). The bucket
+    * assignment runs over an eager localCheckpoint of the scores, so
+    * the registered query's executedPlan cannot show these joins;
+    * PlanAuditSpec audits this frame directly.
     */
   private[this] var lastLm: Option[DataFrame] = None
   private[graft] def perplexityScoresWithLm(docs: DataFrame, textCol: String,

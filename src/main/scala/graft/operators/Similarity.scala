@@ -617,38 +617,6 @@ object Similarity {
     }.toDF("probe_id", "mmr_rank", "neighbor_id", "mmr")
   }
 
-  /** LSH-bucketed ANN: candidates share a hyperplane-signature bucket;
-    * exact cosine + top-k within candidates. Recall < 1, cost
-    * O(candidates); multi-probe (nTables signatures) recovers recall.
-    */
-  def lshTopK(emb: DataFrame, probeFilter: Column, k: Int,
-      bits: Int = 12, nTables: Int = 4): DataFrame = {
-    val base = emb.select(col("vec_id"), col("embedding"),
-      VectorFns.norm(col("embedding")).as("nrm"))
-      .filter(col("nrm") > 0) // zero-norm policy, see bruteForceTopK
-    // nTables signatures per vector: table t uses planes [t*bits, (t+1)*bits)
-    val bucketed = base.select(col("vec_id"), col("embedding"), col("nrm"),
-      explode(array((0 until nTables).map { tbl =>
-        struct(lit(tbl).as("tbl"), signatureForTable(col("embedding"), bits, tbl).as("sig"))
-      }: _*)).as("b"))
-      .select(col("vec_id"), col("embedding"), col("nrm"),
-        col("b.tbl"), col("b.sig"))
-    val probes = bucketed.filter(probeFilter)
-      .select(col("tbl"), col("sig"), col("vec_id").as("probe_id"),
-        col("embedding").as("emb_p"), col("nrm").as("nrm_p"))
-    val cands = probes.join(bucketed, Seq("tbl", "sig"))
-      .filter(col("probe_id") =!= col("vec_id"))
-      .dropDuplicates("probe_id", "vec_id")
-      .withColumn("cos",
-        VectorFns.dot(col("emb_p"), col("embedding")) / (col("nrm_p") * col("nrm")))
-    val w = Window.partitionBy("probe_id")
-      .orderBy(gridKey(col("cos")).desc, col("vec_id"))
-    cands.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("probe_id"), col("rank"), col("vec_id").as("neighbor_id"),
-        round(col("cos"), 4).as("cos_r"))
-  }
-
   /** Cell count for the KMeans-partitioned ops when the caller doesn't
     * pin one (`nCells = 0`): ~one cell per `targetCellSize` vectors,
     * floored at 16 (the small-corpus / spec regime — unchanged
@@ -665,9 +633,10 @@ object Similarity {
     if (nCells > 0) nCells
     else math.min(maxCells.toLong, math.max(16L, n / targetCellSize)).toInt
 
-  /** The ivfTopK sizing + seeded fit, exposed for the persisted-index
-    * build ([[graft.sources.IvfIndex]]) so index-then-probe
-    * reproduces the self-contained op exactly.
+  /** The IVF sizing + seeded fit, shared by the persisted-index
+    * build ([[graft.sources.IvfIndex]]) and IvfIndexSpec's in-query
+    * reference (`ivfTopK`), so index-then-probe reproduces the
+    * self-contained form exactly.
     */
   private[graft] def cellsFor(n: Long, nCells: Int): Int = autoCells(n, nCells)
   private[graft] def fitKMeansOn(base: DataFrame, cells: Int, trainSample: Int)
@@ -728,7 +697,7 @@ object Similarity {
       .repartition(base.sparkSession.sessionState.conf.numShufflePartitions)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try
-      // initMode is caller-chosen: ivfTopK uses seeded RANDOM init
+      // initMode is caller-chosen: the IVF index uses seeded RANDOM init
       // (k-means|| spends ~2 jobs per init step re-scanning the
       // sample — roughly half the fit wall at the 64× blow-up — and
       // IVF recall is carried by nProbe + the re-rank margin, gate
@@ -846,65 +815,14 @@ object Similarity {
     (flat, supers, cellSuper, dim)
   }
 
-  /** IVF (inverted-file) ANN: partition the corpus into k Voronoi
-    * cells via KMeans centroids trained on a sample; each probe scans
-    * only its nProbe nearest cells. The classic trade: train once,
-    * then candidate generation is an equi-join on cell id — corpus
-    * stays partitioned by cell, probes replicate nProbe× (tiny side).
-    * `nCells = 0` (default) derives the cell count from the corpus
-    * size ([[autoCells]]) so per-probe scan cost stays ~constant as
-    * the corpus grows.
-    */
-  def ivfTopK(emb: DataFrame, probeFilter: Column, k: Int,
-      nCells: Int = 0, nProbe: Int = 4, trainSample: Int = 2000): DataFrame = {
-    import org.apache.spark.ml.clustering.KMeans
-    import org.apache.spark.ml.functions.array_to_vector
-    val spark = emb.sparkSession
-
-    val base = emb.select(col("vec_id"), col("embedding"),
-      graft.functions.VectorFns.norm(col("embedding")).as("nrm"))
-      .filter(col("nrm") > 0) // zero-norm policy, see bruteForceTopK
-      .withColumn("features", array_to_vector(col("embedding")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // sizing count runs on the just-persisted base, so it IS the
-    // cache materialization pass (KMeans + assignment read the cached
-    // blocks) — not an extra uncached source scan per invocation
-    val cells = autoCells(base.count(), nCells)
-    val model = fitKMeans(base, cells, trainSample, initMode = "random")
-    // persist the ASSIGNED frame (it feeds the probe branch, the code
-    // scan, and the re-rank join — unpersisted, each consumer re-runs
-    // the KMeans assignment pass) and release the float base: after
-    // this point every read is either codes or an id-keyed re-rank.
-    val assigned = model.transform(base)
-      .withColumnRenamed("prediction", "cell")
-      .drop("features")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    assigned.count()
-    base.unpersist()
-
-    val probes = assigned.filter(probeFilter)
-      .select(col("vec_id").as("probe_id"), col("embedding").as("emb_p"),
-        col("nrm").as("nrm_p"))
-    val out = ivfScan(assigned, probes, model, k, nProbe)
-      // materialize the probes×k result eagerly so the corpus-sized
-      // assignment cache can be RELEASED before returning — repeated
-      // ANN calls in a long-lived driver would otherwise each pin a
-      // cached corpus (the bm25 unpersist rationale). The pinned
-      // result is probes×k rows — probe-sized, not corpus-sized.
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    out.count()
-    assigned.unpersist()
-    out
-  }
-
-  /** The IVF-SQ candidate scan + exact re-rank behind [[ivfTopK]] and
-    * [[labelPropagate]]: `assigned` is the searchable corpus
+  /** The IVF-SQ candidate scan + exact re-rank behind
+    * [[labelPropagate]] and IvfIndexSpec's in-query reference: `assigned` is the searchable corpus
     * ((vec_id, embedding, nrm, cell) + any carry columns, already
     * cell-assigned and persisted by the caller), `probes` is
     * (probe_id, emb_p, nrm_p) — NOT required to be a subset of the
     * corpus. Returns (probe_id, rank, neighbor_id, cos_r), lazily.
     */
-  private def ivfScan(assigned: DataFrame, probes: DataFrame,
+  private[graft] def ivfScan(assigned: DataFrame, probes: DataFrame,
       model: org.apache.spark.ml.clustering.KMeansModel, k: Int,
       nProbe: Int): DataFrame = {
     // probe → its nProbe nearest cells: one native per-row selection
@@ -1035,8 +953,8 @@ object Similarity {
     val seedBase = base.filter(seedFilter)
       .withColumn("features", array_to_vector(col("embedding")))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // sizing count doubles as the cache materialization (ivfTopK
-    // rule); 128-vector cells (the knnGraph sizing) — the probe side
+    // sizing count doubles as the cache materialization (the IVF
+    // build rule); 128-vector cells (the knnGraph sizing) — the probe side
     // is the whole unlabeled corpus, so per-probe scan volume
     // (nProbe · cellSize vectors) is the direct per-probe cost
     val nSeeds = seedBase.count()
@@ -1116,12 +1034,6 @@ object Similarity {
       .filter(col("__vr") === 1)
       .select(col("probe_id").as("vec_id"), col("seed_label").as("pred_label"),
         col("n_votes"))
-
-  /** Hyperplane signature whose planes are offset per table (plane
-    * index j + tbl·bits), so tables are independent.
-    */
-  private def signatureForTable(a: Column, bits: Int, tbl: Int): Column =
-    graft.functions.VectorFns.hyperplaneSignature(a, bits, planeOffset = tbl * bits)
 
   /** Global per-dimension scalar quantization of the embedding column
     * to `levels` integer codes (the int8-class memory/bandwidth
@@ -1222,7 +1134,7 @@ object Similarity {
     *
     * Scale shape: the pair space is Σ cluster², never n² — candidate
     * generation is the equi-join on the cluster id, exactly the IVF
-    * partitioning [[ivfTopK]] uses (cells stay partitioned; nothing
+    * partitioning [[graft.sources.IvfIndex]] uses (cells stay partitioned; nothing
     * replicates). The keep policy (drop iff a smaller-id near-dup
     * exists in your cluster) is one-sided and local, so it needs no
     * iterative component propagation — the documented SemDeDup trade:
@@ -1233,7 +1145,7 @@ object Similarity {
     * near-dup neighbor for dropped items, = vec_id for kept ones.
     *
     * The per-call assignment cache stays pinned until the (lazy,
-    * corpus-sized) result is consumed — unlike ivfTopK the output is
+    * corpus-sized) result is consumed — unlike an ANN top-k the output is
     * as large as the input, so eager materialize-and-release would
     * just move the memory. Long-lived drivers running many semdedup
     * passes should `spark.catalog.clearCache()` between passes.

@@ -20,8 +20,8 @@ import org.apache.spark.sql.DataFrame
   *    (nCells, trainSample) never share an index. If the underlying
   *    data is rewritten in-process, call [[reset]] — the cache cannot
   *    see the rewrite.
-  *  - The build is the same seeded fit as `Similarity.ivfTopK`, so a
-  *    cached-index probe returns ivfTopK's rows bit-for-bit
+  *  - The build is the same seeded fit as the in-query IVF form, so a
+  *    cached-index probe returns its rows bit-for-bit
   *    (IvfIndexSpec pins the registry path).
   *
   * Naming, eviction, and build concurrency delegate to [[DirCache]]:

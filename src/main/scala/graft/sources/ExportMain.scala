@@ -31,10 +31,21 @@ object ExportMain {
   def main(args: Array[String]): Unit = {
     val spark = GraftSession.local(
       sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt, "graft-export")
+    val (compiles0, compileNs0) = codegenTotals
     val res = run(spark, args)
-    println(s"[export] package=${res.packagePath} sha256=${res.checksum} files=${res.csvFiles.mkString(",")}")
+    val (compiles, compileNs) = codegenTotals
+    // whether this run paid Spark's Janino compile cost: a one-shot
+    // run compiles every generated class once, a warm one none
+    println(s"[export] package=${res.packagePath} sha256=${res.checksum} " +
+      s"files=${res.csvFiles.mkString(",")} codegen_compiles=${compiles - compiles0} " +
+      s"codegen_ms=${(compileNs - compileNs0) / 1000000}")
     spark.stop()
   }
+
+  /** JVM-wide totals of Spark's generated-class compiles: (count, ns). */
+  private def codegenTotals: (Long, Long) =
+    (org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount,
+      org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator.compileTime)
 
   /** The whole export flow minus session lifecycle — testable
     * end-to-end (main owns create/stop; specs pass the shared

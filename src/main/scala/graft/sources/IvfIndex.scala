@@ -5,9 +5,9 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Persisted IVF-SQ index — the build-once / probe-many shape a real
-  * ANN deployment runs at 100 TB (SURVEY §2.5). [[graft.operators.
-  * Similarity.ivfTopK]] is the self-contained form: it fits KMeans,
-  * assigns and SQ8-codes the corpus inside every query — right for a
+  * ANN deployment runs at 100 TB (SURVEY §2.5). The self-contained
+  * form (IvfIndexSpec's reference `ivfTopK`) fits KMeans, assigns and
+  * SQ8-codes the corpus inside every query — right for a
   * one-shot, wasteful when the same corpus is probed repeatedly (the
   * index build is the expensive stage: assignment is n·cells·dim
   * flops). This splits it:
@@ -21,7 +21,8 @@ import org.apache.spark.sql.functions._
   *    batch regardless of corpus size.
   *  - [[topK]] ranks cells for a probe batch against the broadcast
   *    centroid table, scans ONLY the probed cells' partitions through
-  *    the same bounded-heap + exact-re-rank machinery as ivfTopK, and
+  *    the same bounded-heap + exact-re-rank machinery as the in-query
+  *    form, and
   *    returns (probe_id, rank, neighbor_id, cos_r).
   *
   * The cell set read per batch is collected driver-side — bounded by
@@ -198,9 +199,9 @@ object IvfIndex {
   }
 
   /** Fit + assign + code the corpus and write the index. Determinism:
-    * same corpus + params → the same seeded KMeans fit ivfTopK runs,
-    * so probing the index reproduces ivfTopK's results exactly
-    * (spec-asserted).
+    * same corpus + params → the same seeded KMeans fit as the in-query
+    * form, so probing the index reproduces its results exactly
+    * (IvfIndexSpec).
     */
   def build(emb: DataFrame, dir: String, nCells: Int = 0,
       trainSample: Int = 2000): Unit = {
@@ -416,7 +417,7 @@ object IvfIndex {
       col("embedding").as("emb_p"),
       graft.functions.VectorFns.norm(col("embedding")).as("nrm_p"))
       .filter(col("nrm_p") > 0) // zero-norm policy: unrankable probes
-    // same native selection as ivfTopK's in-query form — the centroid
+    // same native selection as the in-query form — the centroid
     // table collected cell-ordered, so selection (and thus results)
     // stay bit-identical between index-then-probe and the
     // self-contained op (spec-asserted)
@@ -458,7 +459,7 @@ object IvfIndex {
     val codesAll = readCodes(spark, dir)
     val codes = codesAll
       .filter(col("cell").isin(cellSet.map(Integer.valueOf).toSeq: _*))
-    val m = k + 16 // SQ8 rank-jitter margin, as ivfTopK
+    val m = k + 16 // SQ8 rank-jitter margin, as the in-query form
     // probe-side join strategy is SIZE-GATED: the broadcast is the
     // thin-probe fast path (probes ≪ corpus, the IVF premise — and
     // left to AQE the tiny probe shuffle coalesces to ONE partition

@@ -2,27 +2,24 @@ package graft.streaming
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Structured Streaming surface (SURVEY.md §2.4): the reference tool
   * is batch (monthly report windows), but the same event data arrives
-  * continuously at scale — these are the streaming twins of
-  * q_window_time (windowed aggregation with a watermark) and the
-  * line-list "latest status per user" (stateful sessionization).
+  * continuously at scale — this is the streaming twin of
+  * q_window_time (windowed aggregation with a watermark) and a
+  * bounded-state frequent-items summary.
   *
-  * Scale: state is partitioned by the group key; watermark bounds
-  * state size; sessionization uses processing timeouts so idle keys
-  * are evicted, not accumulated.
+  * Scale: state is partitioned by the group key; the watermark bounds
+  * state size; event-time timeouts evict closed windows instead of
+  * accumulating them.
   */
 object EventStream {
 
   final case class Event(event_id: Long, ts: Timestamp, user_id: Long,
       event_type: String, value: Double)
-
-  final case class Session(user_id: Long, n_events: Long, total_value: Double,
-      first_ts: Timestamp, last_ts: Timestamp, closed: Boolean)
 
   /** Tumbling 1-hour counts per event_type with a 10-minute watermark
     * (late data beyond the watermark is dropped, state is bounded).
@@ -34,83 +31,6 @@ object EventStream {
       .agg(count(lit(1)).as("n"), sum(col("value")).as("sum_value"))
       .select(col("window.start").as("window_start"), col("event_type"),
         col("n"), col("sum_value"))
-
-  /** Session per user: events within `gapMinutes` of each other belong
-    * to one session; a session closes when the event-time watermark
-    * passes last_ts + gap (EventTimeTimeout — deterministic, and state
-    * is bounded by event time rather than wall clock, which is what
-    * survives reprocessing/backfill at scale).
-    *
-    * Out-of-order arrivals (late but inside the watermark, so they
-    * cross micro-batch boundaries unsorted): a late event folds into
-    * the OPEN session and the interval is tracked as [min(first_ts),
-    * max(last_ts)] — the gap test always measures against the MAX
-    * seen, so a late arrival can neither drag the session's endpoint
-    * backward (which would split a later in-gap event off wrongly and
-    * fire the timeout early) nor invert the emitted interval. Events
-    * with a null ts are dropped (no event time — they can neither be
-    * watermarked nor assigned).
-    */
-  def sessionize(events: Dataset[Event], gapMinutes: Int = 30): Dataset[Session] = {
-    import events.sparkSession.implicits._
-    // the in-gap test below measures only against last_ts, so an
-    // out-of-order arrival EARLIER than first_ts folds into the open
-    // session on a negative delta. That is provably correct only while
-    // lateness is bounded by the gap: the 10-minute watermark admits
-    // events at most 10 min behind the max seen, so gap >= watermark
-    // delay makes a beyond-gap backward merge impossible (ADVICE r13 —
-    // a smaller gap would need a first_ts-side split too)
-    require(gapMinutes.toLong * 60000L >= 10L * 60000L,
-      s"gapMinutes=$gapMinutes is below the 10-minute watermark delay: " +
-        "a late event could precede the open session's start by more " +
-        "than the gap and silently fold in; raise gapMinutes")
-    events
-      .filter(_.ts != null)
-      .withWatermark("ts", "10 minutes")
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[Session, Session](
-        OutputMode.Append(), GroupStateTimeout.EventTimeTimeout()) {
-        (userId: Long, rows: Iterator[Event], state: GroupState[Session]) =>
-          if (state.hasTimedOut) {
-            val closed = state.get.copy(closed = true)
-            state.remove()
-            Iterator.single(closed)
-          } else {
-            val evs = rows.toSeq.sortBy(e => (e.ts.getTime, e.event_id))
-            val out = scala.collection.mutable.ListBuffer.empty[Session]
-            var cur = state.getOption
-            evs.foreach { e =>
-              cur = cur match {
-                case None =>
-                  Some(Session(userId, 1, e.value, e.ts, e.ts, closed = false))
-                case Some(s) if e.ts.getTime - s.last_ts.getTime <= gapMinutes * 60000L =>
-                  // min/max, not assignment: a cross-batch late event
-                  // must not move the session endpoint backward
-                  Some(s.copy(n_events = s.n_events + 1,
-                    total_value = s.total_value + e.value,
-                    first_ts = if (e.ts.before(s.first_ts)) e.ts else s.first_ts,
-                    last_ts = if (e.ts.after(s.last_ts)) e.ts else s.last_ts))
-                case Some(s) => // event-time gap exceeded: close, start new
-                  out += s.copy(closed = true)
-                  Some(Session(userId, 1, e.value, e.ts, e.ts, closed = false))
-              }
-            }
-            cur.foreach { s =>
-              state.update(s)
-              // close when the watermark passes the session gap. If the
-              // expiry is already at/behind the watermark (late-arriving
-              // final event), clamp to watermark+1 — skipping the
-              // registration entirely would leave the session open and
-              // its state retained forever unless the key sees another
-              // event.
-              val timeoutAt = s.last_ts.getTime + gapMinutes * 60000L
-              state.setTimeoutTimestamp(
-                math.max(timeoutAt, state.getCurrentWatermarkMs() + 1))
-            }
-            out.iterator
-          }
-      }
-  }
 
   final case class HeavyHitter(window_start: Timestamp, item: String,
       est_count: Long, max_err: Long, rank: Int)
@@ -129,8 +49,9 @@ object EventStream {
     * est_count − max_err ≤ true ≤ est_count.
     *
     * State is keyed by window start and evicted by EventTimeTimeout
-    * when the watermark passes the window end (the sessionize clamp
-    * rule) — in-flight windows × capacity counters, regardless of
+    * when the watermark passes the window end (clamped to watermark + 1
+    * when the end is already behind it, so no window stays registered
+    * forever) — in-flight windows × capacity counters, regardless of
     * stream length or item cardinality. Rows are folded in
     * (ts, item) order per micro-batch so a given batch split is
     * deterministic; like any streaming sketch, the summary (not the
@@ -192,29 +113,5 @@ object EventStream {
             Iterator.empty
           }
       }
-  }
-
-  /** Stream-stream time-bounded join (click attribution): each click
-    * joins the views of the same user that happened at most
-    * `withinMinutes` before it. Both sides are watermarked AND the
-    * join condition carries the time bound — together they let Spark
-    * evict buffered rows once the watermark passes view_ts + bound,
-    * so join state is (arrival rate × bound), not stream length.
-    * Without the range predicate a stream-stream join must buffer a
-    * side forever — the bound is what makes this run at 100 TB/day.
-    */
-  def attributeClicks(views: DataFrame, clicks: DataFrame,
-      withinMinutes: Int = 10, delay: String = "10 minutes"): DataFrame = {
-    val v = views.select(col("user_id").as("v_user"),
-      col("ts").as("view_ts"), col("event_id").as("view_id"))
-      .withWatermark("view_ts", delay)
-    val c = clicks.select(col("user_id").as("c_user"),
-      col("ts").as("click_ts"), col("event_id").as("click_id"), col("value"))
-      .withWatermark("click_ts", delay)
-    c.join(v, expr(
-        s"""c_user = v_user AND click_ts >= view_ts
-           AND click_ts <= view_ts + INTERVAL $withinMinutes MINUTES"""))
-      .select(col("c_user").as("user_id"), col("click_id"), col("view_id"),
-        col("view_ts"), col("click_ts"), col("value"))
   }
 }

@@ -34,7 +34,8 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * consumer can say WHAT drifted, not just how much.
   *
   * State is keyed by window start and evicted by EventTimeTimeout at
-  * window close + watermark (the sessionize clamp rule): in-flight
+  * window close + watermark (clamped to watermark + 1, as
+  * EventStream.heavyHitters does): in-flight
   * windows × (vocab size + 2) longs, bounded for any stream length.
   */
 object StreamingDrift {

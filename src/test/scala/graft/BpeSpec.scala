@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import graft.operators.Bpe
 
 /** Bpe.learn/trainReport/encodeStats vs an in-test reference
@@ -43,6 +44,15 @@ class BpeSpec extends SparkSpec {
     texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }.toDF("doc_id", "text")
   }
 
+  /** The vocabulary and fertility artifacts on a fresh (uncached)
+    * training run, as the registered queries build them over the
+    * session-cached one.
+    */
+  private def vocabReport(docs: DataFrame, merges: Int = Bpe.Merges) =
+    Bpe.vocabReportFrom(Bpe.learn(docs, merges)._2)
+  private def fertility(docs: DataFrame, merges: Int) =
+    Bpe.fertilityFrom(docs, Bpe.learn(docs, merges)._2)
+
   private def wordFreqOf(texts: Seq[String]): Map[String, Long] =
     texts.flatMap(_.toLowerCase.split(" ")).filter(_.nonEmpty)
       .groupBy(identity).map { case (w, ws) => w -> ws.size.toLong }
@@ -82,7 +92,7 @@ class BpeSpec extends SparkSpec {
 
   test("vocab report: ids ordered by weighted count, symbols cover the corpus") {
     val texts = Seq("low lower lowest low", "newer newest low slow")
-    val got = Bpe.vocabReport(docsDf(texts), merges = 6)
+    val got = vocabReport(docsDf(texts), merges = 6)
       .orderBy("token_id").collect()
       .map(r => (r.getInt(0), r.getString(1), r.getLong(2)))
     val (_, words) = refBpe(wordFreqOf(texts), 6)
@@ -104,7 +114,7 @@ class BpeSpec extends SparkSpec {
       .orderBy("rank").collect()
       .map(r => (r.getInt(0), r.getString(1), r.getString(2), r.getLong(3))).toSeq
     assert(got == Seq((1, "a", "b", 2L)))
-    val vocab = Bpe.vocabReport(docsDf(texts), merges = 8).collect()
+    val vocab = vocabReport(docsDf(texts), merges = 8).collect()
       .map(r => (r.getString(1), r.getLong(2))).toSeq
     assert(vocab == Seq(("ab", 2L)))
     // no pairs at all (every word one char): empty merge list with the
@@ -114,7 +124,7 @@ class BpeSpec extends SparkSpec {
     assert(tr.columns.toSeq ==
       Seq("rank", "left_sym", "right_sym", "pair_freq"))
     assert(tr.count() == 0L)
-    val v2 = Bpe.vocabReport(docsDf(single), merges = 4).collect()
+    val v2 = vocabReport(docsDf(single), merges = 4).collect()
       .map(r => (r.getString(1), r.getLong(2))).toSet
     assert(v2 == Set(("a", 2L), ("b", 1L)))
   }
@@ -144,7 +154,7 @@ class BpeSpec extends SparkSpec {
     val viaCache = Bpe.vocabReportFrom(
       Bpe.cachedLearn(docsDf(texts), "k2")._2)
       .orderBy("token_id").collect().toSeq
-    val directSmall = Bpe.vocabReport(docsDf(texts))
+    val directSmall = vocabReport(docsDf(texts))
       .orderBy("token_id").collect().toSeq
     assert(viaCache == directSmall)
     // breadth: a second corpus must NOT evict the first (the SoakCheck
@@ -170,7 +180,7 @@ class BpeSpec extends SparkSpec {
     // ab+c); zz words stay 2 symbols (y,y wins no merges here)
     val docs = Seq((1L, "en", "abc abc abc abc"), (2L, "qq", "xy xy"))
       .toDF("doc_id", "lang", "text")
-    val got = Bpe.fertility(docs, merges = 2)
+    val got = fertility(docs, merges = 2)
       .orderBy("lang").collect()
       .map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3),
         r.getLong(4), r.getLong(5))).toSeq

@@ -2,9 +2,41 @@ package graft
 
 import graft.operators.Similarity
 import graft.sources.IvfIndex
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 class IvfIndexSpec extends SparkSpec {
+
+  /** The self-contained in-query IVF form, the index's reference: fit
+    * KMeans on a sample, assign the corpus to cells, probe the nProbe
+    * nearest cells and re-rank exactly, all inside one call. Same
+    * sizing, seeded fit and scan as [[IvfIndex.build]] + [[IvfIndex.topK]].
+    */
+  private def ivfTopK(emb: DataFrame, probeFilter: Column, k: Int,
+      nCells: Int = 0, nProbe: Int = 4, trainSample: Int = 2000): DataFrame = {
+    import org.apache.spark.ml.functions.array_to_vector
+    val base = emb.select(col("vec_id"), col("embedding"),
+      graft.functions.VectorFns.norm(col("embedding")).as("nrm"))
+      .filter(col("nrm") > 0)
+      .withColumn("features", array_to_vector(col("embedding")))
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val cells = Similarity.cellsFor(base.count(), nCells)
+    val model = Similarity.fitKMeansOn(base, cells, trainSample)
+    val assigned = model.transform(base)
+      .withColumnRenamed("prediction", "cell")
+      .drop("features")
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    assigned.count()
+    base.unpersist()
+    val probes = assigned.filter(probeFilter)
+      .select(col("vec_id").as("probe_id"), col("embedding").as("emb_p"),
+        col("nrm").as("nrm_p"))
+    val out = Similarity.ivfScan(assigned, probes, model, k, nProbe)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    out.count()
+    assigned.unpersist()
+    out
+  }
 
   test("persisted index probes reproduce ivfTopK exactly") {
     val emb = Tables(spark, sf).embeddings
@@ -15,7 +47,7 @@ class IvfIndexSpec extends SparkSpec {
     val probes = emb.filter(col("vec_id") % 50 === 0)
     val indexed = IvfIndex.topK(spark, dir, probes, k = 5, nProbe = 4)
       .collect().map(_.toString).sorted
-    val direct = Similarity.ivfTopK(emb, col("vec_id") % 50 === 0, k = 5,
+    val direct = ivfTopK(emb, col("vec_id") % 50 === 0, k = 5,
         nCells = 8, nProbe = 4)
       .collect().map(_.toString).sorted
     assert(indexed.sameElements(direct))
@@ -91,7 +123,7 @@ class IvfIndexSpec extends SparkSpec {
     val emb = Tables(spark, sf).embeddings
     val viaRegistry = SparkEntry.queries("d_ann_topk")(spark, sf)
       .collect().map(_.toString)
-    val direct = Similarity.ivfTopK(emb, col("vec_id") % 50 === 0, k = 5)
+    val direct = ivfTopK(emb, col("vec_id") % 50 === 0, k = 5)
       .orderBy("probe_id", "rank").collect().map(_.toString)
     assert(viaRegistry.sameElements(direct))
     // second registry call hits the cached index (no rebuild) and

@@ -176,8 +176,10 @@ class PipelineSpec extends SparkSpec {
     val brute = Similarity.bruteForceTopK(emb, col("vec_id") % 50 === 0, k = 5)
       .select("probe_id", "neighbor_id").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
-    val ivf = Similarity.ivfTopK(emb, col("vec_id") % 50 === 0, k = 5,
-      nCells = 8, nProbe = 4)
+    val dir = java.nio.file.Files.createTempDirectory("graft-ivf").toString
+    graft.sources.IvfIndex.build(emb, dir, nCells = 8)
+    val ivf = graft.sources.IvfIndex.topK(spark, dir,
+        emb.filter(col("vec_id") % 50 === 0), k = 5, nProbe = 4)
       .select("probe_id", "neighbor_id").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     val recall = (brute & ivf).size.toDouble / brute.size

@@ -249,7 +249,9 @@ class PlanAuditSpec extends SparkSpec {
     // the scoring stage runs behind an eager localCheckpoint, so the
     // registered frame's executedPlan cannot show it — audit it
     // directly (the mmrCandidates pattern)
-    val s = operators.Retrieval.perplexityScores(Tables(spark, sf).documents)
+    val docs = Tables(spark, sf).documents
+    val s = operators.Retrieval.perplexityScoresWithLm(docs, "text", "doc_id",
+      "lang", operators.Retrieval.perplexityScoreTableGate(docs))._1
     s.collect()
     val sp = s.queryExecution.executedPlan.toString
     val finalPlan = sp.split("== Initial Plan ==").head

@@ -22,21 +22,6 @@ class StreamingSpec extends SparkSpec {
         col("n"), col("sum_value"))
   }
 
-  /** Batch twin of [[EventStream.attributeClicks]], the parity reference. */
-  private def attributeClicksBatch(views: DataFrame, clicks: DataFrame,
-      withinMinutes: Int = 10): DataFrame = {
-    import org.apache.spark.sql.functions._
-    val v = views.select(col("user_id").as("v_user"),
-      col("ts").as("view_ts"), col("event_id").as("view_id"))
-    val c = clicks.select(col("user_id").as("c_user"),
-      col("ts").as("click_ts"), col("event_id").as("click_id"), col("value"))
-    c.join(v, expr(
-        s"""c_user = v_user AND click_ts >= view_ts
-           AND click_ts <= view_ts + INTERVAL $withinMinutes MINUTES"""))
-      .select(col("c_user").as("user_id"), col("click_id"), col("view_id"),
-        col("view_ts"), col("click_ts"), col("value"))
-  }
-
   test("windowed counts with watermark match batch computation") {
     import spark.implicits._
     implicit val sq = spark.sqlContext
@@ -62,39 +47,6 @@ class StreamingSpec extends SparkSpec {
       .toSet
     assert(batch.subsetOf(streamed ++ batch) && streamed.subsetOf(batch),
       s"streamed=$streamed batch=$batch")
-  }
-
-  test("streaming sessions agree with the batch gaps-and-islands query") {
-    import spark.implicits._
-    implicit val sq = spark.sqlContext
-    // real events table, streamed in one batch + a watermark-advancing
-    // sentinel far in the future so every real session closes
-    val ds = Tables(spark, sf).events
-      .select("event_id", "ts", "user_id", "event_type", "value").as[Event]
-    val mem = MemoryStream[Event]
-    val q = EventStream.sessionize(mem.toDS(), gapMinutes = 30)
-      .writeStream.format("memory").queryName("sess_x")
-      .outputMode(OutputMode.Append()).start()
-    mem.addData(ds.collect().toSeq: _*)
-    q.processAllAvailable()
-    mem.addData(Event(-1, ts("2030-01-01 00:00:00"), -1, "sentinel", 0.0))
-    q.processAllAvailable()
-    mem.addData(Event(-2, ts("2030-01-01 00:01:00"), -1, "sentinel", 0.0))
-    q.processAllAvailable()
-    q.stop()
-    val streamed = spark.table("sess_x").as[EventStream.Session]
-      .filter(_.user_id >= 0)
-      .collect().map(s => (s.user_id, s.first_ts.getTime / 1000,
-        s.last_ts.getTime / 1000, s.n_events)).toSet
-    val batch = SparkEntry.queries("q_sessionize_batch")(spark, sf)
-      .collect().map { r =>
-        (r.getLong(0),
-          java.sql.Timestamp.valueOf(r.getString(4)).getTime / 1000,
-          java.sql.Timestamp.valueOf(r.getString(5)).getTime / 1000,
-          r.getLong(2))
-      }.toSet
-    assert(streamed == batch,
-      s"only-streamed=${(streamed -- batch).take(3)} only-batch=${(batch -- streamed).take(3)}")
   }
 
   test("streaming intake admits, scrubs and dedups exactly like the batch twin") {
@@ -441,70 +393,6 @@ class StreamingSpec extends SparkSpec {
     assert(streamKept == batchKept, s"stream=$streamKept batch=$batchKept")
   }
 
-  test("sessionization closes on event-time gap") {
-    import spark.implicits._
-    implicit val sq = spark.sqlContext
-    val mem = MemoryStream[Event]
-    val q = EventStream.sessionize(mem.toDS(), gapMinutes = 30)
-      .writeStream.format("memory").queryName("sess")
-      .outputMode(OutputMode.Append()).start()
-    mem.addData(
-      Event(1, ts("2024-01-01 10:00:00"), 7, "view", 1.0),
-      Event(2, ts("2024-01-01 10:10:00"), 7, "click", 2.0),
-      // > 30 min event-time gap: closes the first session inline
-      Event(3, ts("2024-01-01 11:00:00"), 7, "view", 10.0))
-    q.processAllAvailable()
-    // other-user event far in the future advances the watermark past
-    // 11:00 + 30min -> user 7's open session closes via timeout
-    mem.addData(Event(4, ts("2024-01-01 16:00:00"), 9, "view", 1.0))
-    q.processAllAvailable()
-    mem.addData(Event(5, ts("2024-01-01 16:01:00"), 9, "view", 1.0))
-    q.processAllAvailable()
-    q.stop()
-    val sessions = spark.table("sess").as[EventStream.Session].collect()
-      .sortBy(_.first_ts.getTime)
-    assert(sessions.length == 2, sessions.mkString(";"))
-    assert(sessions(0).user_id == 7 && sessions(0).n_events == 2
-      && sessions(0).total_value == 3.0 && sessions(0).closed)
-    assert(sessions(1).user_id == 7 && sessions(1).n_events == 1
-      && sessions(1).total_value == 10.0 && sessions(1).closed)
-  }
-
-  test("stream-stream click attribution matches the batch twin across micro-batches") {
-    import spark.implicits._
-    implicit val sq = spark.sqlContext
-    val views = Seq(
-      Event(10, ts("2024-01-01 10:00:00"), 1, "view", 0.0),
-      Event(11, ts("2024-01-01 10:20:00"), 1, "view", 0.0),
-      Event(12, ts("2024-01-01 10:00:00"), 2, "view", 0.0))
-    val clicks = Seq(
-      Event(20, ts("2024-01-01 10:05:00"), 1, "click", 1.0), // → view 10
-      Event(21, ts("2024-01-01 10:25:00"), 1, "click", 2.0), // → view 11 only (10 is >10min old)
-      Event(22, ts("2024-01-01 10:30:00"), 2, "click", 3.0)) // no view within 10min
-    val vMem = MemoryStream[Event]
-    val cMem = MemoryStream[Event]
-    val q = EventStream.attributeClicks(vMem.toDF(), cMem.toDF())
-      .writeStream.format("memory").queryName("attr")
-      .outputMode(OutputMode.Append()).start()
-    // views and clicks arrive in different micro-batches: the join
-    // must buffer the view side in state until its click shows up
-    vMem.addData(views: _*)
-    q.processAllAvailable()
-    cMem.addData(clicks.take(2): _*)
-    q.processAllAvailable()
-    cMem.addData(clicks.drop(2): _*)
-    q.processAllAvailable()
-    q.stop()
-    val streamed = spark.table("attr")
-      .select("click_id", "view_id").collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSet
-    val batch = attributeClicksBatch(views.toDF(), clicks.toDF())
-      .select("click_id", "view_id").collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(batch == Set((20L, 10L), (21L, 11L)), batch.toSeq.sorted.mkString(","))
-    assert(streamed == batch, s"streamed=$streamed batch=$batch")
-  }
-
   test("streaming heavy hitters: guarantee holds, state stays at capacity") {
     import spark.implicits._
     implicit val sq = spark.sqlContext
@@ -550,40 +438,6 @@ class StreamingSpec extends SparkSpec {
     assert(ranked.take(2).toSet == Set("hot", "warm"), ranked.mkString(","))
   }
 
-  test("sessionize folds a cross-batch late event without dragging the session endpoint backward") {
-    import spark.implicits._
-    implicit val sq = spark.sqlContext
-    // the r13 review find: a late-but-in-watermark event used to
-    // ASSIGN last_ts backward, so a following in-gap event measured
-    // an inflated gap and wrongly split the session (and the emitted
-    // interval could invert). The fix tracks [min(first), max(last)].
-    val mem = MemoryStream[Event]
-    val q = EventStream.sessionize(mem.toDS(), gapMinutes = 30)
-      .writeStream.format("memory").queryName("sess_ooo")
-      .outputMode(OutputMode.Append()).start()
-    mem.addData(Event(1, ts("2024-01-01 10:00:00"), 7, "view", 1.0))
-    q.processAllAvailable()
-    // batch 2: a LATE event (9:55, inside the 10-min watermark) and a
-    // following event 28 min after the session's true endpoint —
-    // within the 30-min gap, so all three are ONE session
-    mem.addData(
-      Event(2, ts("2024-01-01 09:55:00"), 7, "view", 1.0),
-      Event(3, ts("2024-01-01 10:28:00"), 7, "view", 1.0))
-    q.processAllAvailable()
-    mem.addData(Event(-1, ts("2030-01-01 00:00:00"), -1, "sentinel", 0.0))
-    q.processAllAvailable()
-    mem.addData(Event(-2, ts("2030-01-01 00:01:00"), -1, "sentinel", 0.0))
-    q.processAllAvailable()
-    q.stop()
-    val sess = spark.table("sess_ooo").as[EventStream.Session]
-      .filter(_.user_id == 7).collect()
-    assert(sess.length == 1, s"late event split the session: ${sess.toSeq}")
-    assert(sess.head.n_events == 3 && sess.head.closed)
-    assert(sess.head.first_ts == ts("2024-01-01 09:55:00") &&
-      sess.head.last_ts == ts("2024-01-01 10:28:00"),
-      s"interval ${sess.head.first_ts}..${sess.head.last_ts}")
-  }
-
   test("null event-times and items are dropped, not query-fatal") {
     import spark.implicits._
     implicit val sq = spark.sqlContext
@@ -618,23 +472,6 @@ class StreamingSpec extends SparkSpec {
     assert(!out.exists(_._2 == "ghost") && !out.exists(_._2 == null))
     assert(!out.exists(t => t._2 == "old" && t._1 == 0L),
       "a pre-epoch row must never land in the epoch window")
-    // sessionize: a null-ts event among real ones is dropped silently
-    val mem2 = MemoryStream[Event]
-    val q2 = EventStream.sessionize(mem2.toDS(), gapMinutes = 30)
-      .writeStream.format("memory").queryName("sess_null")
-      .outputMode(OutputMode.Append()).start()
-    mem2.addData(
-      Event(1, ts("2024-01-01 10:00:00"), 9, "view", 1.0),
-      Event(2, null, 9, "view", 1.0))
-    q2.processAllAvailable()
-    mem2.addData(Event(-1, ts("2030-01-01 00:00:00"), -1, "sentinel", 0.0))
-    q2.processAllAvailable()
-    mem2.addData(Event(-2, ts("2030-01-01 00:01:00"), -1, "sentinel", 0.0))
-    q2.processAllAvailable()
-    q2.stop()
-    val s9 = spark.table("sess_null").as[EventStream.Session]
-      .filter(_.user_id == 9).collect()
-    assert(s9.length == 1 && s9.head.n_events == 1, s9.toSeq.toString)
   }
 
   test("stateful streams recover from a checkpoint: dedup state and drift windows survive a restart") {
