@@ -40,11 +40,20 @@ object ExportConfig {
       Option(root.get(field)).toSeq.flatMap(n =>
         n.fields().asScala.map(e => e.getKey -> e.getValue.asText()).toSeq)
     val window = Option(root.get("window"))
+    // Jackson's asInt() reads null, text and arrays as 0, a silent
+    // year-0 window; only a JSON integer is a month or a year
+    def windowInt(field: String): Option[Int] =
+      window.flatMap(w => Option(w.get(field))).map { n =>
+        if (!n.isIntegralNumber || !n.canConvertToInt)
+          throw new IllegalArgumentException(
+            s"config window field $field must be an integer (got $n)")
+        n.intValue()
+      }
     ExportConfig(
       queries = entries("queries"),
       constants = entries("constants"),
-      ethMonth = window.flatMap(w => Option(w.get("eth_month")).map(_.asInt())),
-      ethYear = window.flatMap(w => Option(w.get("eth_year")).map(_.asInt())),
+      ethMonth = windowInt("eth_month"),
+      ethYear = windowInt("eth_year"),
       db = entries("db_properties").toMap)
   }
 }

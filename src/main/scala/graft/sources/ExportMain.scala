@@ -149,9 +149,9 @@ object ExportMain {
       else {
         val firstNation = t.nation.orderBy("n_nationkey").limit(1)
           .join(t.region, col("n_regionkey") === col("r_regionkey"))
-          .select("r_name", "n_name").head()
-        val (regionName, facilityName) = (firstNation.getString(0), firstNation.getString(1))
-        val hmis = s"H${t.nation.orderBy("n_nationkey").limit(1).head().getInt(0)}23"
+          .select("n_nationkey", "r_name", "n_name").head()
+        val (regionName, facilityName) = (firstNation.getString(1), firstNation.getString(2))
+        val hmis = s"H${firstNation.getInt(0)}23"
         Seq("Region" -> regionName, "Woreda" -> s"${regionName}_W0",
           "Facility" -> facilityName, "HMISCode" -> hmis)
       }

@@ -6,10 +6,12 @@ import scala.jdk.CollectionConverters._
 import scala.io.Source
 
 import org.apache.spark.storage.StorageLevel
+import org.scalatest.concurrent.Eventually
+import org.scalatest.time.SpanSugar._
 
 import graft.sources.ExportJob
 
-class ExportJobSpec extends SparkSpec {
+class ExportJobSpec extends SparkSpec with Eventually {
 
   /** The reference digest: SHA-256 of a file, read back from disk. */
   private def sha256(p: java.nio.file.Path): String =
@@ -136,6 +138,53 @@ class ExportJobSpec extends SparkSpec {
       ExportJob.run(spark, Map("r" -> df), Nil, out, "t")
     }
     assertKept(".t_packaged.zip.tmp")
+  }
+
+  test("a report name or tag with a path separator is refused before any job runs") {
+    val out = Files.createTempDirectory("graft_export_names")
+    val df = spark.range(1, 5).toDF("id")
+    // the descriptions of this test's jobs (its job group) in start
+    // order; a marker job ends the record
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(e.properties).filter(_.getProperty("spark.jobGroup.id") == "export-names")
+          .foreach(p => jobs.add(String.valueOf(p.getProperty("spark.job.description"))))
+    }
+    sc.addSparkListener(listener)
+    sc.setJobGroup("export-names", "names marker")
+    try {
+      Seq(
+        (Map("r" -> df), "../x", "../x"),
+        (Map("r" -> df), "TestFac/H1_Tir_2016", "TestFac/H1_Tir_2016"),
+        (Map("../x" -> df), "t", "../x"),
+        (Map("ok" -> df, "a\\b" -> df), "t", "a\\b")).foreach { case (queries, tag, bad) =>
+          val e = intercept[IllegalArgumentException](ExportJob.run(spark, queries, Nil, out, tag))
+          assert(e.getMessage.contains(s"'$bad'"), e.getMessage)
+        }
+      sc.parallelize(Seq(1), 1).count()
+      eventually(timeout(30.seconds))(assert(jobs.contains("names marker")))
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+    assert(jobs.asScala.toSeq == Seq("names marker"), s"a job ran for a refused name: $jobs")
+    val left = Files.list(out).iterator().asScala.map(_.getFileName.toString).toSeq
+    assert(left.isEmpty, s"left in outDir: ${left.mkString(", ")}")
+  }
+
+  test("a window month or year that is not a JSON integer is refused, naming the field") {
+    Seq("eth_year" -> "null", "eth_year" -> "\"2O16\"", "eth_year" -> "2016.5",
+        "eth_year" -> "[]", "eth_month" -> "null", "eth_month" -> "5.0").foreach { case (field, v) =>
+      val other = if (field == "eth_year") "\"eth_month\":5" else "\"eth_year\":2016"
+      val json = s"""{"queries":{"A":"q_line_list"},"window":{$other,"$field":$v}}"""
+      val e = intercept[IllegalArgumentException](graft.sources.ExportConfig.parse(json))
+      assert(e.getMessage.contains(field), s"$json: ${e.getMessage}")
+    }
+    val ok = graft.sources.ExportConfig.parse(
+      """{"queries":{"A":"q_line_list"},"window":{"eth_month":5,"eth_year":2016}}""")
+    assert((ok.ethMonth, ok.ethYear) == (Some(5), Some(2016)))
   }
 
   test("a month sweep: each configured report follows the month or is declared window-free") {
@@ -340,9 +389,22 @@ class ExportJobSpec extends SparkSpec {
     val res = graft.sources.ExportMain.run(spark,
       Array(sf, Files.createTempDirectory("graft_asofnow").toString, cfgPath.toString))
     val month = graft.sources.ExportMain.Months(m - 1)
-    assert(res.packagePath.getFileName.toString.endsWith(s"_${month}_${y}_packaged.zip"),
+    // no constants configured: they come from the first nation by key
+    // and its region, and the tag from Facility and HMISCode
+    assert(res.packagePath.getFileName.toString == s"NATION0H023_${month}_${y}_packaged.zip",
       res.packagePath)
     assert(res.csvFiles == Seq(s"A_${res.innerZip.stripSuffix(".zip")}.csv"))
+    val zf = new ZipFile(res.packagePath.toFile)
+    val tmpInner = Files.createTempFile("inner", ".zip")
+    Files.copy(zf.getInputStream(zf.getEntry(res.innerZip)), tmpInner,
+      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+    val inner = new ZipFile(tmpInner.toFile)
+    val lines = try Source.fromInputStream(inner.getInputStream(inner.getEntry(res.csvFiles.head)))
+      .getLines().toSeq
+      finally { inner.close(); zf.close() }
+    assert(lines.head.split(",").takeRight(4).toSeq ==
+      Seq("Region", "Woreda", "Facility", "HMISCode"))
+    assert(lines.tail.nonEmpty && lines.tail.forall(_.endsWith("AFRICA,AFRICA_W0,NATION_0,H023")))
   }
 
   test("ExportMain refuses anything but <dataDir> <outDir> <config.json> with its usage line") {

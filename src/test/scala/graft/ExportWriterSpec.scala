@@ -1,5 +1,6 @@
 package graft
 
+import java.io.{BufferedInputStream, FileInputStream, OutputStream}
 import java.nio.file.{Files, Path}
 import java.util.concurrent.ConcurrentLinkedQueue
 import java.util.zip.ZipFile
@@ -17,19 +18,55 @@ import org.scalatest.time.SpanSugar._
 
 import graft.sources.ExportJob
 
-/** ExportJob writes its part files itself (Spark's CSV generator and
-  * options in one job over every report). These specs hold it to the
-  * bytes of Spark's own csv sink plus the driver merge, and pin the
-  * job shape: every report planned before the one write job starts.
+/** ExportJob renders each report's CSV itself (Spark's CSV generator
+  * and options, in one job over every report, each task returning its
+  * partition's bytes to the driver). These specs hold it to the bytes
+  * of Spark's own csv sink with its part files merged under one
+  * header, and pin the job shape: every report planned before the one
+  * write job starts.
   */
 class ExportWriterSpec extends SparkSpec with Eventually {
 
-  /** The reference: Spark's csv sink, then the same driver merge. */
+  /** The csv sink's part files in a write's output dir, in order. */
+  private def listParts(dir: Path): Seq[Path] = {
+    val s = Files.list(dir)
+    try s.iterator().asScala
+      .filter(_.getFileName.toString.startsWith("part-"))
+      .toSeq.sortBy(_.getFileName.toString)
+    finally s.close()
+  }
+
+  /** Concatenate the csv sink's part files into one CSV, keeping a
+    * single header row. Bytes are copied verbatim after the header line
+    * of each part (a line-based merge would normalize newlines inside
+    * quoted multiline fields).
+    */
+  private def mergeCsvParts(parts: Seq[Path], out: OutputStream): Unit = {
+    var first = true
+    parts.foreach { p =>
+      val in = new BufferedInputStream(new FileInputStream(p.toFile), 4 << 20)
+      try {
+        // scan past the header line (headers never contain newlines)
+        var b = in.read()
+        val header = new java.io.ByteArrayOutputStream()
+        while (b >= 0 && b != '\n') { header.write(b); b = in.read() }
+        if (first && (header.size() > 0 || b == '\n')) {
+          out.write(header.toByteArray); out.write('\n'); first = false
+        }
+        // raw byte copy of the remainder
+        val buf = new Array[Byte](1 << 16)
+        var n = in.read(buf)
+        while (n >= 0) { out.write(buf, 0, n); n = in.read(buf) }
+      } finally in.close()
+    }
+  }
+
+  /** The reference: Spark's csv sink, then the merge. */
   private def sparkCsv(df: DataFrame): Seq[Byte] = {
     val dir = Files.createTempDirectory("graft_ref_csv")
     df.write.mode("overwrite").option("header", "true").csv(dir.toString)
     val merged = new java.io.ByteArrayOutputStream()
-    ExportJob.mergeCsvParts(ExportJob.listParts(dir), merged)
+    mergeCsvParts(listParts(dir), merged)
     merged.toByteArray.toSeq
   }
 
@@ -70,6 +107,11 @@ class ExportWriterSpec extends SparkSpec with Eventually {
     // sorted over several partitions, one of them left empty
     assertParity(frame(schema, rows, 3).orderBy("id").repartition(5))
     assertParity(frame(schema, rows, 3).orderBy("id"))
+    // partition 0, the one with the header, finishes after every other,
+    // so its bytes reach the driver last
+    val slowFirst = spark.sparkContext.parallelize(rows, 4)
+      .mapPartitionsWithIndex { (i, it) => if (i == 0) Thread.sleep(1500); it }
+    assertParity(spark.createDataFrame(slowFirst, schema))
   }
 
   test("typed cells: date, UTC timestamp, decimal, double, boolean and long match Spark's csv sink") {
