@@ -244,8 +244,11 @@ object LineLists {
       val iv = ev.filter(col("event_type") === "signup")
         .select(col("event_id").as("iv_id"), col("ts").as("start_ts"),
           (col("ts") + expr("INTERVAL 30 MINUTES")).as("end_ts"))
+      // every interval is exactly 30 minutes long, so the width the
+      // median would pick is known: passing it spares the build an
+      // approx_percentile job (the exact re-filter keeps the rows)
       RangeJoin.pointInInterval(ev.select("event_id", "ts"), "ts",
-          iv, "start_ts", "end_ts") // width auto-derived from interval stats
+          iv, "start_ts", "end_ts", bucketSeconds = 30 * 60)
         .select("event_id", "iv_id")
         .orderBy("event_id", "iv_id")
     })

@@ -24,22 +24,24 @@ import org.apache.spark.sql.types.StructType
   *   3. one CSV per query,
   *   4. zip the CSVs, SHA-256 the zip, package zip+checksum.
   *
-  * Scale: the driver plans every report, one after another, up to its
-  * final stage; then ONE Spark job runs every report's final stage
-  * together, each task rendering its partition's CSV with Spark's own
-  * CSV generator and options (the bytes `df.write.csv` writes) and
-  * returning them as its result. The driver then writes the package in
-  * one streaming pass: each report's partitions, in partition order,
-  * go into its entry of the inner zip, which is itself written into
-  * the package's `<tag>.zip` entry and digested on the way, so no CSV,
-  * inner zip or checksum file touches the disk (`ZipOutputStream`
-  * switches to ZIP64 on its own past 4 GiB). Tasks open no file: only
-  * the driver writes under `outDir`. A package's CSV bytes are bounded
-  * by Spark's `spark.driver.maxResultSize` (1 GiB by default); a larger
-  * package fails the job before any file is written. The package
-  * appears under its final name only once it is complete; a failed run
-  * deletes its staged file and leaves an earlier package of the same
-  * tag in place.
+  * Scale: the driver plans the reports concurrently, up to their
+  * final stages, on a pool of min(#reports, cores) threads: every
+  * report's Catalyst phases first, then, once all of them have ended,
+  * every report's AQE stage jobs. Then ONE Spark job runs every
+  * report's final stage together, each task rendering its partition's
+  * CSV with Spark's own CSV generator and options (the bytes
+  * `df.write.csv` writes) and returning them as its result. The driver
+  * then writes the package in one streaming pass: each report's
+  * partitions, in partition order, go into its entry of the inner zip,
+  * which is itself written into the package's `<tag>.zip` entry and
+  * digested on the way, so no CSV, inner zip or checksum file touches
+  * the disk (`ZipOutputStream` switches to ZIP64 on its own past 4 GiB).
+  * Tasks open no file: only the driver writes under `outDir`. A
+  * package's CSV bytes are bounded by Spark's `spark.driver.maxResultSize`
+  * (1 GiB by default); a larger package fails the job before any file
+  * is written. The package appears under its final name only once it
+  * is complete; a failed run deletes its staged file and leaves an
+  * earlier package of the same tag in place.
   */
 object ExportJob {
 
@@ -114,30 +116,34 @@ object ExportJob {
   }
 
   /** Every report's CSV, as its partitions' bytes in partition order.
-    * The driver plans the reports one after another, in the given
-    * order: each report's Catalyst phases and AQE stage jobs
-    * (broadcasts, shuffle map stages) run on this thread, in their own
-    * SQL execution, and finish before the next report starts, so no
-    * planning ever runs while a job does. What is left of each report
-    * is its final stage; one job runs them all, so their tasks share
-    * the cores instead of queueing report by report.
+    * Every report's column types are checked first, so a rejected one
+    * fails the package before any job runs. Then the reports are
+    * planned concurrently (`GraftShim.planAll`), on a pool of
+    * min(#reports, cores) daemon `graft-export-plan-<n>` driver threads
+    * made for this call: first every report's Catalyst phases, then,
+    * once all of them have ended, every report's AQE stage jobs
+    * (broadcasts, shuffle map stages), each report in its own SQL
+    * execution. So no Catalyst phase ever runs while a job does, and
+    * the single-task stage jobs of different reports share the cores. What is left of each report is
+    * its final stage; one job runs them all, so their tasks share the
+    * cores instead of queueing report by report.
     */
   private def renderCsv(spark: SparkSession,
-      reports: Seq[DataFrame]): Seq[Seq[Array[Byte]]] = {
-    val sc = spark.sparkContext
-    val options = GraftShim.csvWriteOptions(spark)
-    val renderers = reports.map { df =>
-      val schema = df.schema
-      GraftShim.checkCsvWritable(schema)
-      val rows = GraftShim.plannedRows(df, PlanExecution)
-      // a frame with no partitions still gets its header-only CSV, as
-      // Spark's csv sink writes one for it
-      val parts = if (rows.getNumPartitions > 0) rows
-        else sc.parallelize(Seq.empty[InternalRow], 1)
-      parts.mapPartitionsWithIndex((i, it) => Iterator(renderPart(i, it, schema, options)))
-    }
-    if (renderers.isEmpty) Nil
+      reports: Seq[DataFrame]): Seq[Seq[Array[Byte]]] =
+    if (reports.isEmpty) Nil
     else {
+      val sc = spark.sparkContext
+      val options = GraftShim.csvWriteOptions(spark)
+      val schemas = reports.map(_.schema)
+      schemas.foreach(GraftShim.checkCsvWritable)
+      val planned = GraftShim.planAll(spark, reports, PlanExecution, "graft-export-plan")
+      val renderers = planned.zip(schemas).map { case (rows, schema) =>
+        // a frame with no partitions still gets its header-only CSV, as
+        // Spark's csv sink writes one for it
+        val parts = if (rows.getNumPartitions > 0) rows
+          else sc.parallelize(Seq.empty[InternalRow], 1)
+        parts.mapPartitionsWithIndex((i, it) => Iterator(renderPart(i, it, schema, options)))
+      }
       val prior = sc.getLocalProperty("spark.job.description")
       sc.setJobDescription(WriteJob)
       // one byte array per partition, in union order: report by
@@ -147,7 +153,6 @@ object ExportJob {
       val ends = renderers.scanLeft(0)(_ + _.getNumPartitions)
       ends.zip(ends.tail).map { case (from, until) => all.slice(from, until).toSeq }
     }
-  }
 
   /** One partition's share of a report's CSV, as Spark's
     * `CsvOutputWriter` writes it through `UnivocityGenerator`: every

@@ -42,16 +42,60 @@ object GraftShim {
   private def classic(spark: org.apache.spark.sql.SparkSession) =
     spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
 
-  /** The frame's result rows, planned on the calling thread: analysis,
-    * optimization, planning and AQE's broadcast and shuffle stage jobs
-    * all run here, inside one SQL execution named `name`, so its
-    * Catalyst phases and stage jobs stay visible to listeners. Only
-    * the final stage is left; whoever runs the returned RDD runs it.
+  /** Every frame's result rows, planned concurrently in two rounds
+    * with a barrier between them, on a pool of min(#frames,
+    * `defaultParallelism`) daemon threads named `<threadPrefix>-<n>`,
+    * made for this call and shut down before it returns or throws.
+    * Round 1 forces each frame's Catalyst phases (analysis,
+    * optimization, planning: its `executedPlan`), which run no job.
+    * Once every frame's have ended, round 2 runs each frame's AQE stage
+    * jobs (broadcasts, shuffle map stages) inside one SQL execution per
+    * frame, named `name`, so its phases and jobs stay visible to
+    * listeners. The barrier keeps every
+    * tracked phase clear of every stage job: a phase that overlapped a
+    * job would be counted twice by a trace that adds phases to jobs.
+    * Only each frame's final stage is left; whoever runs the returned
+    * RDDs runs it.
+    *
+    * Each task carries the caller's active session, local properties
+    * and artifact state (`SQLExecution.withThreadLocalCaptured`). Every
+    * task of a round is awaited before the next round starts and before
+    * this returns or throws, so no frame is still being planned when it
+    * does. A failure rethrows the first in frame order, the later ones
+    * attached as suppressed.
     */
-  def plannedRows(df: org.apache.spark.sql.Dataset[_],
-      name: String): org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow] = {
-    val qe = df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]].queryExecution
-    org.apache.spark.sql.execution.SQLExecution.withNewExecutionId(qe, Some(name))(qe.toRdd)
+  def planAll(spark: org.apache.spark.sql.SparkSession,
+      dfs: Seq[org.apache.spark.sql.Dataset[_]], name: String, threadPrefix: String)
+      : Seq[org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow]] = {
+    import org.apache.spark.sql.execution.{QueryExecution, SQLExecution}
+    val session = classic(spark)
+    val qes = dfs.map(_.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]].queryExecution)
+    val pool = org.apache.spark.util.ThreadUtils.newDaemonFixedThreadPool(
+      math.min(dfs.size, spark.sparkContext.defaultParallelism), threadPrefix)
+    def round[T](body: QueryExecution => T): Seq[T] = {
+      val futures = qes.map(qe => SQLExecution.withThreadLocalCaptured(session, pool)(body(qe)))
+      val results = futures.map { f =>
+        try Right(f.get()) catch {
+          case e: java.util.concurrent.ExecutionException => Left(e.getCause)
+          case e: Throwable => Left(e)
+        }
+      }
+      val failures = results.collect { case Left(e) => e }
+      failures.headOption.foreach { first =>
+        failures.tail.filter(_ ne first).foreach(first.addSuppressed)
+        throw first
+      }
+      results.collect { case Right(v) => v }
+    }
+    // every task has ended once a round returns or throws; the wait is
+    // for the idle threads to exit, so none outlives the call
+    try {
+      round(_.executedPlan)
+      round(qe => SQLExecution.withNewExecutionId(qe, Some(name))(qe.toRdd))
+    } finally {
+      pool.shutdown()
+      pool.awaitTermination(1, java.util.concurrent.TimeUnit.MINUTES)
+    }
   }
 
   /** The check Spark's csv sink makes before it writes a byte: every

@@ -111,6 +111,66 @@ class ExportJobSpec extends SparkSpec with Eventually {
     assert(left.isEmpty, s"partial package left in outDir: ${left.mkString(", ")}")
   }
 
+  test("a report failing in an AQE stage job while the reports plan concurrently fails the package cleanly") {
+    import org.apache.spark.sql.functions.{col, concat, lit, raise_error, when}
+    val sc = spark.sparkContext
+    // every report shuffles, so each has a shuffle map stage job that
+    // runs while the others plan; the bad report's fails there, before
+    // the write job
+    val good = spark.range(1, 41, 1, 4)
+      .select(col("id"), concat(lit("v"), col("id")).as("v")).repartition(3)
+    val bad = spark.range(1, 41, 1, 4).select(col("id"),
+      when(col("id") === 7, raise_error(lit("injected planning failure")))
+        .otherwise(concat(lit("v"), col("id"))).as("v")).repartition(3)
+    val reports = Map("a_good" -> good, "b_bad" -> bad, "c_good" -> good, "d_good" -> good)
+    // start and end of every job of this test's job group
+    val starts = new java.util.concurrent.ConcurrentLinkedQueue[(Int, String)]()
+    val ends = new java.util.concurrent.ConcurrentLinkedQueue[(Int, Long)]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(e.properties).filter(_.getProperty("spark.jobGroup.id") == "export-plan-fail")
+          .foreach(p => starts.add(e.jobId -> String.valueOf(p.getProperty("spark.job.description"))))
+      override def onJobEnd(e: org.apache.spark.scheduler.SparkListenerJobEnd): Unit =
+        ends.add(e.jobId -> e.time)
+    }
+    sc.addSparkListener(listener)
+    sc.setJobGroup("export-plan-fail", "plan-fail marker")
+    try (1 to 2).foreach { attempt =>
+      val out = Files.createTempDirectory("graft_export_plan_fail")
+      val e = intercept[Exception] {
+        ExportJob.run(spark, reports, Seq("Facility" -> "F1"), out, "planfail")
+      }
+      val thrownAt = System.currentTimeMillis()
+      val messages = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .map(_.getMessage).mkString(" | ")
+      assert(messages.contains("injected planning failure"), s"run $attempt: $messages")
+      val left = Files.list(out).iterator().asScala.map(_.getFileName.toString).toSeq
+      assert(left.isEmpty, s"run $attempt left in outDir: ${left.mkString(", ")}")
+      // no planning thread outlives the run
+      val planThreads = Thread.getAllStackTraces.keySet.asScala
+        .filter(t => t.isAlive && t.getName.startsWith("graft-export-plan-"))
+      assert(planThreads.isEmpty, s"run $attempt: ${planThreads.map(_.getName)}")
+      // every job the run started had ended when it threw; the status
+      // store learns of the ends through the listener bus
+      eventually(timeout(30.seconds)) {
+        val ended = ends.asScala.toMap
+        assert(starts.asScala.forall { case (job, _) => ended.contains(job) })
+        assert(sc.statusTracker.getActiveJobIds.isEmpty)
+      }
+      val ended = ends.asScala.toMap
+      starts.asScala.foreach { case (job, _) =>
+        assert(ended(job) <= thrownAt, s"run $attempt: job $job ended after the run threw")
+      }
+    }
+    finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+    val descriptions = starts.asScala.map(_._2).toSeq
+    assert(descriptions.nonEmpty && !descriptions.contains(ExportJob.WriteJob),
+      s"the failure must come from a stage job, not the write job: $descriptions")
+  }
+
   test("a failing re-export keeps the previous package byte for byte") {
     import org.apache.spark.sql.functions.{col, lit, raise_error, when}
     val out = Files.createTempDirectory("graft_export_rerun")

@@ -188,7 +188,10 @@ class ExportWriterSpec extends SparkSpec with Eventually {
     }
   }
 
-  /** Start and end times of the jobs that write CSV parts. */
+  /** Start and end times of the jobs that write CSV parts, of every
+    * other job (with its SQL execution id, if it has one) and of every
+    * SQL execution.
+    */
   private class WriteJobs extends SparkListener {
     val starts = new ConcurrentLinkedQueue[(Int, Long)]()
     val ends = new ConcurrentLinkedQueue[(Int, Long)]()
@@ -196,9 +199,13 @@ class ExportWriterSpec extends SparkSpec with Eventually {
     val otherEnds = new ConcurrentLinkedQueue[(Int, Long)]()
     val sqlStarts = new ConcurrentLinkedQueue[(Long, Long)]()
     val sqlEnds = new ConcurrentLinkedQueue[(Long, Long)]()
+    val executionOf = new ConcurrentLinkedQueue[(Int, Long)]()
     override def onJobStart(e: SparkListenerJobStart): Unit = {
-      val desc = Option(e.properties).map(_.getProperty("spark.job.description")).orNull
+      val props = Option(e.properties)
+      val desc = props.map(_.getProperty("spark.job.description")).orNull
       (if (desc == ExportJob.WriteJob) starts else others).add(e.jobId -> e.time)
+      props.flatMap(p => Option(p.getProperty("spark.sql.execution.id")))
+        .foreach(id => executionOf.add(e.jobId -> id.toLong))
     }
     override def onJobEnd(e: SparkListenerJobEnd): Unit =
       (if (starts.asScala.exists(_._1 == e.jobId)) ends else otherEnds).add(e.jobId -> e.time)
@@ -247,5 +254,59 @@ class ExportWriterSpec extends SparkSpec with Eventually {
     writes.others.asScala.foreach { case (id, t0) =>
       assert(otherEnd(id) <= start || t0 >= end, s"job $id overlaps the write job")
     }
+  }
+
+  test("a 12-report package plans its reports concurrently: every Catalyst phase, then every stage job") {
+    // the package's pin is live before the record starts, so the
+    // package's only SQL executions are its reports' planning
+    graft.sources.ExportMain.pinnedEvents(spark, sf)
+    val writes = new WriteJobs
+    val phaseEnds = new ConcurrentLinkedQueue[Long]() // last phase end of each report
+    val plans = new QueryExecutionListener {
+      private def seen(f: String, qe: QueryExecution): Unit =
+        if (f == ExportJob.PlanExecution)
+          phaseEnds.add(qe.tracker.phases.values.map(_.endTimeMs).max)
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = seen(f, qe)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = seen(f, qe)
+    }
+    val out: Path = Files.createTempDirectory("graft_concurrent_plan")
+    spark.sparkContext.addSparkListener(writes)
+    spark.listenerManager.register(plans)
+    try {
+      val res = graft.sources.ExportMain.run(spark,
+        Array(sf, out.toString, "config/export_config.json"))
+      assert(res.csvFiles.size == 12)
+      eventually(timeout(30.seconds)) {
+        assert(writes.ends.size == 1 && phaseEnds.size == 12)
+        assert(writes.sqlEnds.size == writes.sqlStarts.size)
+      }
+    } finally {
+      spark.listenerManager.unregister(plans)
+      spark.sparkContext.removeSparkListener(writes)
+    }
+    val writeStart = writes.starts.peek()._2
+    // the reports' planning: one SQL execution each, all before the write job
+    val sqlEnd = writes.sqlEnds.asScala.toMap
+    val planning = writes.sqlStarts.asScala.toSeq.collect {
+      case (id, t0) if t0 <= writeStart => (id, t0, sqlEnd(id))
+    }
+    // at least two reports' executions are open at the same time
+    val overlapping = for {
+      (a, a0, a1) <- planning; (b, b0, _) <- planning
+      if a != b && a0 <= b0 && b0 < a1
+    } yield (a, b)
+    assert(overlapping.nonEmpty, s"the reports were planned one at a time: $planning")
+    assert(planning.size == 12, s"${planning.size} SQL executions before the write job")
+    // every report's Catalyst phases end before any of their stage jobs
+    // starts, so no tracked phase overlaps a job
+    val planIds = planning.map(_._1).toSet
+    val executionOf = writes.executionOf.asScala.toMap
+    val stageJobStarts = writes.others.asScala.collect {
+      case (job, t0) if executionOf.get(job).exists(planIds) => t0
+    }
+    assert(stageJobStarts.nonEmpty, "the package ran no AQE stage job")
+    assert(phaseEnds.asScala.max <= stageJobStarts.min,
+      s"a Catalyst phase ended at ${phaseEnds.asScala.max}, after a stage job started at " +
+        s"${stageJobStarts.min}")
   }
 }

@@ -1,9 +1,15 @@
 package graft
 
+import java.util.concurrent.ConcurrentLinkedQueue
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
+import org.scalatest.concurrent.Eventually
+import org.scalatest.time.SpanSugar._
 import graft.operators.RangeJoin
 
-class RangeJoinSpec extends SparkSpec {
+class RangeJoinSpec extends SparkSpec with Eventually {
 
   test("bucketized range join equals naive range predicate join") {
     val ev = Tables(spark, sf).events
@@ -81,5 +87,40 @@ class RangeJoinSpec extends SparkSpec {
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(withKey.subsetOf(global))
     assert(withKey.size < global.size)
+  }
+
+  test("building q_range_join starts no job: its 30-minute width is passed, not derived") {
+    val sc = spark.sparkContext
+    // the descriptions of this test's jobs (its job group) in start
+    // order; a marker job ends the record
+    val jobs = new ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).filter(_.getProperty("spark.jobGroup.id") == "range-join-build")
+          .foreach(p => jobs.add(String.valueOf(p.getProperty("spark.job.description"))))
+    }
+    Tables(spark, sf).events // the parquet schema is read outside the record
+    sc.addSparkListener(listener)
+    sc.setJobGroup("range-join-build", "build marker")
+    val built = try {
+      val df = SparkEntry.queries("q_range_join")(spark, sf)
+      sc.parallelize(Seq(1), 1).count()
+      eventually(timeout(30.seconds))(assert(jobs.contains("build marker")))
+      df
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+    assert(jobs.asScala.toSeq == Seq("build marker"), s"building q_range_join ran jobs: $jobs")
+    // the same rows as the width derived from the intervals' median
+    val ev = Tables(spark, sf).events
+    val iv = ev.filter(col("event_type") === "signup")
+      .select(col("event_id").as("iv_id"), col("ts").as("start_ts"),
+        (col("ts") + expr("INTERVAL 30 MINUTES")).as("end_ts"))
+    assert(RangeJoin.autoBucketSeconds(iv, "start_ts", "end_ts") == 30 * 60)
+    val auto = RangeJoin.pointInInterval(ev.select("event_id", "ts"), "ts",
+        iv, "start_ts", "end_ts")
+      .select("event_id", "iv_id").orderBy("event_id", "iv_id")
+    assert(built.collect().toSeq == auto.collect().toSeq)
   }
 }
